@@ -105,6 +105,14 @@ object Cli {
     catch { case e: BadArgs => s"${e.getMessage}\n$usage" }
   }
 
+  /** One line per stage of a stored ingest record. */
+  private def stageLines(rec: Option[graft.core.IngestRecord]): Seq[String] =
+    rec.toSeq.flatMap(_.stages).map { s =>
+      val counters = s.counters.toSeq.sortBy(_._1).map { case (k, v) => s" $k=${v.toLong}" }.mkString
+      f"  ${s.stage}%-15s ${s.rows}%8d rows ${s.file_rows.length}%4d files " +
+        f"${s.wall_ms / 1e3}%7.2f s${if (s.resumed) " resumed" else ""}$counters"
+    }
+
   private def traceFormat(rest: Seq[String]): String = rest match {
     case Seq() => "text"
     case Seq("--format", f) if f == "text" || f == "fsl" => f
@@ -127,8 +135,9 @@ object Cli {
         val (total, nc) = (agg.getLong(0), agg.getLong(1))
         val secs = (System.nanoTime - t0) / 1e9
         val ratio = if (nc == 0) "n/a (empty corpus)" else f"${total.toDouble / nc}%.3f"
-        f"backup $runId: $n images ingested in $secs%.1f s; corpus $total images in " +
+        val summary = f"backup $runId: $n images ingested in $secs%.1f s; corpus $total images in " +
           s"$nc clusters (dedup ratio $ratio)"
+        (summary +: stageLines(inc.record(runId))).mkString("\n")
 
       case Seq("restore", storeDir, runId, outDir) =>
         val io = new TableIO(spark, storeDir)
@@ -171,15 +180,17 @@ object Cli {
           s"${r.reclaimedEdges} edges reclaimed, ${r.survivingImages} images survive"
 
       case Seq("stats", storeDir) =>
-        // destor -s reads the stat file; here: manifests + parquet
-        // footers only — NO Spark job touches data
-        val io = new TableIO(spark, storeDir)
-        val ids = io.batches(IncrementalDedup.SigStore)
+        // destor -s reads the stat file; here: manifests, parquet
+        // footers and the stored stage records only — NO Spark job
+        val inc = new IncrementalDedup(spark, storeDir, cfg)
+        val io = inc.io
+        val ids = inc.ingested
         val imgCounts = ids.map(id => id -> io.batchRowCount(IncrementalDedup.SigStore, id))
-        val per = imgCounts.map { case (id, n) =>
-          s"  $id: $n images, " +
+        val per = imgCounts.flatMap { case (id, n) =>
+          val line = s"  $id: $n images, " +
             s"${io.batchRowCount(IncrementalDedup.PostStore, id)} postings, " +
             s"${io.batchRowCount(IncrementalDedup.EdgeStore, id)} edges"
+          line +: stageLines(inc.record(id)).map("  " + _)
         }
         (s"store $storeDir: ${ids.length} batches, ${imgCounts.map(_._2).sum} images" +: per)
           .mkString("\n")
@@ -235,7 +246,8 @@ object Cli {
         val t0 = System.nanoTime
         val b = SweepOps.backupLog(spark, dataDir)
         val r = SweepOps.restoreLog(spark, dataDir)
-        val bLines = SweepOps.formatBackupLog(b)
+        val bRows = b.collect()
+        val bLines = SweepOps.formatRows(bRows)
         val rLines = SweepOps.formatRestoreLog(r)
         new java.io.File(outDir).mkdirs()
         def writeLog(name: String, header: String, lines: Seq[String]): Unit =
@@ -251,12 +263,13 @@ object Cli {
           "# job policy cache_size data_bytes containers_read speed_factor", rLines)
         val secs = (System.nanoTime - t0) / 1e9
         // throughput over the exact config's data volume (the measured
-        // 13th/5th field destor logs per job; here per sweep run)
-        val dataBytes = b.filter(col("config") === "exact")
-          .agg(sum("data_bytes")).head().getLong(0)
+        // 13th/5th field destor logs per job; here per sweep run), from
+        // the rows already collected — decimal MB
+        val dataBytes = bRows.filter(_.getAs[String]("config") == "exact")
+          .map(_.getAs[Long]("data_bytes")).sum
         f"sweep: ${SweepOps.defaultConfigs.length} configs, ${bLines.length} backup rows + " +
           f"${rLines.length} restore rows -> $outDir in $secs%.1f s " +
-          f"(${dataBytes * SweepOps.defaultConfigs.length / 1.048576e6 / secs}%.1f MB/s swept)"
+          f"(${dataBytes * SweepOps.defaultConfigs.length / 1e6 / secs}%.1f MB/s swept)"
 
       case Seq("trace", dataDir, outDir, rest @ _*) =>
         val fmt = traceFormat(rest)

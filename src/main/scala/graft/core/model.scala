@@ -90,18 +90,24 @@ final case class VerifiedPair(
   */
 final case class ClusterRow(image_id: String, cluster_id: String, representative: Boolean)
 
-/** Per-stage, per-partition lineage record (north_rule resumability —
-  * the analog of destor's recipe store, `src/recipe/recipestore.h:25-52`).
+/** Lineage + metrics of one stage of one ingest (north_rule
+  * resumability — the analog of destor's recipe store,
+  * `src/recipe/recipestore.h:25-52`, and jcr counters, `src/jcr.h:19-61`):
+  * rows written, per-file (= per-partition) row counts, wall time spent
+  * in this attempt, whether the stage was resumed from a checkpoint, and
+  * the stage's own counters.
   */
-final case class LineageRow(
+final case class StageRecord(
     stage: String,
-    partition_id: Int,
-    rows_out: Long,
+    resumed: Boolean,
+    rows: Long,
     wall_ms: Long,
-    run_id: String
+    file_rows: Seq[Long],
+    counters: Map[String, Double] = Map.empty
 )
 
-/** One metric observation (analog of destor's jcr counters,
-  * `src/jcr.h:19-61`, and `backup.log` rows, `src/do_backup.c:179-207`).
+/** The stored record of one committed ingest (destor's `backup.log`
+  * row analog, `src/do_backup.c:179-207`): its stage key and one
+  * [[StageRecord]] per stage, in execution order.
   */
-final case class MetricRow(stage: String, metric: String, value: Double, run_id: String)
+final case class IngestRecord(run_id: String, stage_key: String, stages: Seq[StageRecord])

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -279,8 +279,11 @@ object SweepOps {
   }
 
   /** Render the two log tables as destor-shaped text lines. */
-  def formatBackupLog(rows: DataFrame): Seq[String] =
-    rows.collect().map { r =>
+  def formatBackupLog(rows: DataFrame): Seq[String] = formatRows(rows.collect())
+
+  /** Log lines of already-collected rows (doubles at 6 decimals). */
+  def formatRows(rows: Array[Row]): Seq[String] =
+    rows.map { r =>
       (0 until r.length).map { i =>
         r.get(i) match {
           case d: Double => f"$d%.6f"

@@ -68,16 +68,6 @@ object DedupPipeline extends Serializable {
     if (cfg.signatureOnly) signaturesMetaOnly(images.toDF(), cfg)
     else signaturesFull(images, cfg)
 
-  /** DataFrame entry for signature computation: under cfg.signatureOnly
-    * the input only needs (image_id, caption, phash) — the checkpointed
-    * flow passes its (possibly bytes-free) published images table here. */
-  def signaturesFromDF(images: DataFrame, cfg: DedupConfig): Dataset[SignatureRow] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    if (cfg.signatureOnly) signaturesMetaOnly(images, cfg)
-    else signaturesFull(images.as[ImageRow], cfg)
-  }
-
   /** Signature-only simulation variant (destor's simulation levels,
     * src/destor.h:55-59: metadata-only runs that skip data movement):
     * computes every caption/phash-derived signature, selects ONLY the
@@ -731,15 +721,15 @@ object DedupPipeline extends Serializable {
       .as[ClusterRow]
   }
 
-  /** Whole pipeline in one call (no checkpointing — see StageRunner for
-    * the checkpointed/resumable form). Signatures are persisted: three
-    * consumers (bucket postings, both verify sides) would otherwise
-    * recompute the most expensive narrow stage; spill-safe via
-    * MEMORY_AND_DISK_SER. The result is eagerly materialized (small:
-    * one row per image, three narrow columns) so every intermediate
-    * cache can be dropped before returning — repeated invocations in
-    * one session leak nothing. */
-  def run(images: Dataset[ImageRow], cfg: DedupConfig): Dataset[ClusterRow] = {
+  /** Signatures → postings → lean candidates → verify, in memory: the
+    * verified pairs, the candidate-pair count (CC partitioner hint) and
+    * a cleanup to call once the pairs are materialized. Signatures are
+    * persisted: three consumers (bucket postings, both verify sides)
+    * would otherwise recompute the most expensive narrow stage;
+    * spill-safe via MEMORY_AND_DISK_SER. */
+  private[graft] def verifiedPairs(
+      images: Dataset[ImageRow],
+      cfg: DedupConfig): (Dataset[VerifiedPair], Long, () => Unit) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val sigs = signatures(images, cfg).persist(lvl)
     val bk = buckets(sigs, cfg)
@@ -757,9 +747,19 @@ object DedupPipeline extends Serializable {
     // history; har_rewrite.c loads the previous job's sparse list).
     val cand = candidates(bk, cfg)
     val (ver, cleanupMid, pairCount) = verifyWithCleanup(cand, sigs, images.toDF(), cfg)
+    (ver, pairCount, () => { sigs.unpersist(blocking = false); cleanupMid() })
+  }
+
+  /** Whole pipeline in one call, in memory. The stored, resumable form
+    * with per-stage records is IncrementalDedup.ingest: a one-shot
+    * checkpointed run is one ingest into an empty store. The result is
+    * eagerly materialized (small: one row per image, three narrow
+    * columns) so every intermediate cache can be dropped before
+    * returning — repeated invocations in one session leak nothing. */
+  def run(images: Dataset[ImageRow], cfg: DedupConfig): Dataset[ClusterRow] = {
+    val (ver, pairCount, cleanup) = verifiedPairs(images, cfg)
     val out = clusters(images.toDF(), ver, Some(pairCount)).localCheckpoint() // eager
-    sigs.unpersist(blocking = false)
-    cleanupMid()
+    cleanup()
     out
   }
 }

@@ -1,9 +1,12 @@
 package graft.pipeline
 
 import graft.core._
+import graft.signatures.Sig
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+import org.json4s.jackson.Serialization
 
 /** Incremental / cross-run ingest: dedup each NEW batch against the
   * persistent signature + posting index WITHOUT recomputing anything
@@ -13,8 +16,8 @@ import org.apache.spark.sql.functions._
   * :266-275, kv store append/caps src/index/kvstore_htable.c:158-207).
   *
   * Persistent stores under `workDir` (TableIO batch stores — every
-  * append is an atomic batch-dir commit, so a crashed ingest is simply
-  * retried and half-written batches are invisible):
+  * append is an atomic batch-dir commit, so half-written batches are
+  * invisible):
   *
   *   images_store    one batch-dir per ingest — the raw rows (container
   *                   store analog; `bytes` is only ever read back for
@@ -27,6 +30,24 @@ import org.apache.spark.sql.functions._
   *   clusters_current  latest full cluster assignment (overwritten per
   *                   ingest)
   *   har_hot_buckets  the previous ingest's hot-bucket list (HAR)
+  *
+  * Stages and resume (north_rule; destor's known weakness — a crash
+  * means a full rebuild, README.md:147-149 — is what per-stage commits
+  * fix). Each stage writes its output as a STAGED batch of its store
+  * (written, not yet listed in the store manifest) plus a marker
+  * holding the stage key = config hash + input fingerprint + committed
+  * batch list; downstream stages read the staged table back, so plans
+  * never grow beyond one stage:
+  *
+  *   signatures → sig_store        images → images_store
+  *   postings → postings_store     candidate_pairs → candidates_store
+  *   verified_pairs → edges_store  clusters → clusters_current
+  *
+  * The commit lists the staged batches, sig_store LAST (the commit
+  * marker). A crashed ingest retried under the same runId resumes every
+  * stage whose marker matches its key; a changed config, input or store
+  * recomputes. Each commit stores the batch's [[IngestRecord]] (per-stage
+  * rows, per-file rows, wall, counters) next to its signatures.
   *
   * Probe shape (scale analysis at 10^12 stored rows): the store side is
   * pruned FIRST by an equi-join on the new batch's distinct (band,
@@ -59,101 +80,116 @@ final class IncrementalDedup(
     * representative) across every ingested batch. */
   def clusters: DataFrame = io.read(ClustersTable)
 
+  /** The stored stage record of a committed batch (driver file read,
+    * no Spark job). */
+  def record(runId: String): Option[IngestRecord] =
+    io.batchMeta(SigStore, runId, RecordFile).map(Serialization.read[IngestRecord](_))
+
   /** Ingest one batch: probe it against the persistent index, verify,
     * merge clusters, append the batch to every store. Returns the new
     * `clusters_current` (read from its published table). Batch image
     * ids must be disjoint from previously ingested ids. */
   def ingest(batch: Dataset[ImageRow], runId: String): DataFrame = {
     import spark.implicits._
-    require(!ingested.contains(runId), s"batch $runId already ingested")
-    // crash-retry self-heal: SigStore is the COMMIT MARKER (appended
-    // last, and `ingested` is keyed on it), so ANY runId present in
-    // another store without a SigStore entry is debris from a crashed
-    // attempt — not just the runId being retried: a crashed ingest
-    // retried under a DIFFERENT runId would otherwise leave orphan
-    // postings/images/edges that every later probe joins against
-    // (clusters could then include images from a batch that was never
-    // committed). Drop the full uncommitted set so the stores are
-    // exactly the SigStore commit set before this ingest begins
-    // (destor equally replays an uncommitted jcr from scratch).
-    locally {
-      val committed = ingested.toSet
-      for (store <- Seq(EdgeStore, ImagesStore, PostStore);
-           r <- io.batches(store) if !committed.contains(r))
-        io.dropBatch(store, r)
+    val committed = ingested
+    require(!committed.contains(runId), s"batch $runId already ingested")
+    // crash-retry self-heal: SigStore is the COMMIT MARKER (listed
+    // last, and `ingested` is keyed on it), so ANY other runId with a
+    // batch dir but no SigStore entry is debris from a crashed attempt:
+    // a crashed ingest retried under a DIFFERENT runId would otherwise
+    // leave orphan postings/images/edges that every later probe joins
+    // against. Drop them all (destor equally replays an uncommitted jcr
+    // from scratch). THIS runId's staged batches are kept for resume;
+    // one a crashed commit already listed is dropped and recomputed, so
+    // no store lists an uncommitted batch.
+    for (store <- StageStores; r <- io.batchDirs(store)
+         if !committed.contains(r) && (r != runId || io.batches(store).contains(r)))
+      io.dropBatch(store, r)
+    val seq = committed.length
+
+    // a retry checks its staged stages against the input's fingerprint
+    // (one narrow id/caption/phash scan); a fresh ingest takes the
+    // fingerprint from the signature write's accumulators instead
+    val marks: Map[String, StageMark] = StageStores.flatMap(s =>
+      io.batchMeta(s, runId, MarkFile).map(s -> Serialization.read[StageMark](_))).toMap
+    var key: String =
+      if (marks.isEmpty && !io.publishedBy(ClustersTable).contains(runId)) null
+      else stageKey(cfg, inputFingerprint(batch), committed)
+    val records = scala.collection.mutable.ArrayBuffer.empty[StageRecord]
+
+    /** Run one stage into its staged batch of `store` — or resume it
+      * when its marker carries this ingest's key — and read it back. */
+    def stage(name: String, store: String)(run: => Staged): DataFrame = {
+      val t0 = System.nanoTime()
+      val resumed = marks.get(store).filter(_.key == key)
+      val counters = resumed.map(_.counters).getOrElse {
+        val s = run
+        io.stageBatch(s.df, store, runId)
+        val c = s.finish()
+        io.putBatchMeta(store, runId, MarkFile, Serialization.write(StageMark(key, c)))
+        c
+      }
+      val files = io.batchFileCounts(store, runId).map(_._2)
+      records += StageRecord(name, resumed.isDefined, files.sum,
+        (System.nanoTime() - t0) / 1000000, files, counters)
+      io.readBatch(store, runId)
     }
-    val seq = ingested.length
 
-    // 1. signatures + postings for the NEW batch only (narrow stages)
-    val newSigs = DedupPipeline.signatures(batch, cfg).persist(lvl)
-    val newPost = DedupPipeline.buckets(newSigs, cfg).persist(lvl)
+    // 1. signatures + postings for the NEW batch only (narrow stages).
+    //    The signature write also yields the input fingerprint and the
+    //    P9 degenerate-input counters (zero-chunk jcr analog) through
+    //    accumulators — no extra job.
+    val sigs = stage("signatures", SigStore) {
+      val sc = spark.sparkContext
+      val (fp, degenerate, blank) =
+        (sc.longAccumulator("fingerprint"), sc.longAccumulator("degenerate"), sc.longAccumulator("blank"))
+      Staged(countedSignatures(DedupPipeline.signatures(batch, cfg), fp, degenerate, blank).toDF(),
+        () => {
+          if (key == null) key = stageKey(cfg, fingerprint(fp.count, fp.sum), committed)
+          Map("degenerate_pixel_rows" -> degenerate.sum.toDouble,
+            "blank_caption_rows" -> blank.sum.toDouble)
+        })
+    }.as[SignatureRow]
+    // signature-only simulation (destor src/destor.h:55-59): only the
+    // metadata columns ever flow — the images side feeds verify's pixel
+    // join (skipped under the flag) and the CC vertex list (image_id
+    // only), so the narrow projection is complete. A simulation workDir
+    // and a full workDir must not mix (destor's simulated stores carry
+    // the same constraint): the ImagesStore batch schema differs.
+    val metaCols = Seq("image_id", "caption", "phash").map(col)
+    val images = stage("images", ImagesStore)(Staged(
+      if (cfg.signatureOnly) batch.toDF().select(metaCols: _*) else batch.toDF()))
+    val newPost = stage("postings", PostStore)(Staged(
+      DedupPipeline.buckets(sigs, cfg).toDF().withColumn("ingest_seq", lit(seq))))
+      .drop("ingest_seq").as[BucketRow]
 
-    // 2. within-batch candidates — skew-aware, inheriting the previous
-    //    ingest's hot-bucket list (HAR); materialized copy so the
-    //    publish at step 8 can't invalidate the plan
-    val inheritedHot =
-      if (io.exists(HarTable)) {
-        val hot = io.readMaterialized(HarTable)
-        if (hot.isEmpty) None else Some(hot)
-      } else None
-    val sk = DedupPipeline.candidatesSkewAware(newPost, cfg, inheritedHot)
+    // 2. candidate pairs: within-batch (skew-aware, inheriting the
+    //    previous ingest's hot-bucket list — HAR — as a driver-local
+    //    copy so republishing it can't invalidate the plan) plus the
+    //    cross-batch probe of the new postings against the stored index
+    val cand = stage("candidate_pairs", CandStore) {
+      val inheritedHot =
+        if (io.exists(HarTable)) Some(io.readMaterialized(HarTable)).filterNot(_.isEmpty)
+        else None
+      val sk = DedupPipeline.candidatesSkewAware(newPost, cfg, inheritedHot)
+      val (crossRaw, probeCleanup) = crossPairs(newPost)
+      // one cross-source pair dedup: srcmask = bit_or over within + cross
+      Staged(DedupPipeline.finishCandidates(
+          sk.pairs.select(col("id1"), col("id2"), col("srcmask").as("srcbit"))
+            .unionByName(crossRaw)),
+        () => {
+          // HAR handoff: this ingest's hot buckets for the next one
+          // (advisory routing, not correctness — published before the
+          // marker, so a resumed stage has already handed off)
+          io.publish(sk.hotBuckets, HarTable, cfg.configHash, runId)
+          sk.cleanup()
+          probeCleanup()
+          Map("cap_used" -> sk.capUsed.toDouble,
+            "har_inherited_buckets" -> inheritedHot.map(_.collect().length.toDouble).getOrElse(0.0))
+        })
+    }
 
-    // 3. cross-batch probe: new postings vs the stored index
-    val probeCleanup = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    val crossRaw: DataFrame =
-      if (io.hasBatches(PostStore)) {
-        val old = io.readBatches(PostStore)
-        val newKeys = newPost.select("band", "bucket").distinct()
-          .persist(lvl)
-        probeCleanup += (() => { newKeys.unpersist(blocking = false); () })
-        // F7 Bloom front-end (DDFS's in-memory filter that prunes index
-        // probes, reference src/utils/bloom_filter.c:98-127): a
-        // driver-built Bloom over the new batch's bucket keys drops
-        // ~all store rows whose bucket the batch never touches BEFORE
-        // the shuffle join. The store side is |store| rows, the batch
-        // side |batch| — without the bloom every stored posting pays
-        // the exchange; with it only (touched + fpp * rest) do. False
-        // positives are removed by the equi-join; no false negatives.
-        val nKeys = newKeys.count()
-        val bloom = newKeys.stat.bloomFilter(
-          xxhash64(col("band"), col("bucket")), math.max(nKeys, 1L), cfg.bloomFpp)
-        val bloomBc = spark.sparkContext.broadcast(bloom)
-        val mightContain = udf((k: Long) => bloomBc.value.mightContainLong(k))
-        // store-side prune: bloom first (narrow, pre-shuffle), then the
-        // exact equi-join on the batch's keys
-        val touched = old
-          .filter(mightContain(xxhash64(col("band"), col("bucket"))))
-          .join(newKeys, Seq("band", "bucket"))
-        val w = Window.partitionBy("band", "bucket")
-          .orderBy(col("ingest_seq").desc, col("nid").desc)
-        val capped = touched
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= cfg.indexValueLength)
-          .select(col("band"), col("bucket"),
-            col("nid").as("old_id"), col("payload").as("old_payload"))
-        val srcbitCol =
-          when(col("band") < DedupPipeline.BandPhash, DedupPipeline.SrcMinhash)
-            .when(col("band") < DedupPipeline.BandSubstr, DedupPipeline.SrcPhash)
-            .when(col("band") < DedupPipeline.BandExactSha, DedupPipeline.SrcSubstr)
-            .otherwise(DedupPipeline.SrcExact)
-        val hamOk = when(
-          col("band") >= DedupPipeline.BandPhash && col("band") < DedupPipeline.BandSubstr,
-          expr(s"bit_count(payload ^ old_payload) <= ${cfg.hammingMax}")).otherwise(lit(true))
-        newPost.toDF().join(capped, Seq("band", "bucket"))
-          .filter(col("nid") =!= col("old_id"))
-          .filter(hamOk)
-          .select(
-            least(col("nid"), col("old_id")).as("id1"),
-            greatest(col("nid"), col("old_id")).as("id2"),
-            srcbitCol.as("srcbit"))
-      } else spark.emptyDataset[(Long, Long, Int)].toDF("id1", "id2", "srcbit")
-
-    // one cross-source pair dedup: srcmask = bit_or over within + cross
-    val cand = DedupPipeline.finishCandidates(
-      sk.pairs.select(col("id1"), col("id2"), col("srcmask").as("srcbit"))
-        .unionByName(crossRaw))
-
-    // 4. verify — old sides resolved from the STORES (no recompute),
+    // 3. verify — old sides resolved from the STORES (no recompute),
     //    PRUNED to the candidate ids FIRST: verify's shuffle_hash joins
     //    exchange their full inputs, so feeding them the whole store
     //    would cost O(|store|) per ingest even though the probe side is
@@ -163,78 +199,105 @@ final class IncrementalDedup(
     //    both verify sides by O(|cand|); above the broadcast threshold
     //    (pathological candidate sets ~ corpus-sized) the shuffled
     //    semi-join is the correct plan and AQE handles it.
-    val allSigs =
-      if (io.hasBatches(SigStore))
-        newSigs.toDF().unionByName(io.readBatches(SigStore)).as[SignatureRow]
-      else newSigs
-    // signature-only simulation (destor src/destor.h:55-59): only the
-    // metadata columns ever flow — the images side feeds verify's pixel
-    // join (skipped under the flag) and the CC vertex list (image_id
-    // only), so the narrow projection is complete. A simulation workDir
-    // and a full workDir must not mix (destor's simulated stores carry
-    // the same constraint): the ImagesStore batch schema differs.
-    val metaCols = Seq("image_id", "caption", "phash").map(col)
-    val allImages: DataFrame =
-      if (cfg.signatureOnly) {
-        val nb = batch.toDF().select(metaCols: _*)
-        if (io.hasBatches(ImagesStore))
-          nb.unionByName(io.readBatches(ImagesStore).select(metaCols: _*))
-        else nb
-      } else {
-        if (io.hasBatches(ImagesStore))
-          batch.toDF().unionByName(io.readBatches(ImagesStore))
-        else batch.toDF()
-      }
-    val candM = cand.persist(lvl)
-    val candPairs = candM.count()
-    probeCleanup += (() => { candM.unpersist(blocking = false); () })
-    val (verSigs, verImages, cleanupPrune) =
-      IncrementalDedup.pruneToCandidates(candM, candPairs, allSigs, allImages)
-    probeCleanup += cleanupPrune
-    val (ver, cleanupMid, _) = DedupPipeline.verifyWithCleanup(candM, verSigs, verImages, cfg)
+    def withStore(staged: DataFrame, store: String): DataFrame =
+      if (io.hasBatches(store)) staged.unionByName(io.readBatches(store)) else staged
+    val allImages =
+      if (cfg.signatureOnly) withStore(images, ImagesStore).select(metaCols: _*)
+      else withStore(images, ImagesStore)
+    val newEdges = stage("verified_pairs", EdgeStore) {
+      val (verSigs, verImages, cleanupPrune) = pruneToCandidates(cand,
+        io.batchRowCount(CandStore, runId), withStore(sigs.toDF(), SigStore).as[SignatureRow],
+        allImages)
+      val (ver, cleanupMid, _) = DedupPipeline.verifyWithCleanup(cand, verSigs, verImages, cfg)
+      Staged(ver.toDF(), () => { cleanupMid(); cleanupPrune(); Map.empty })
+    }
 
-    // 5. commit this batch's verified edges, then read them BACK from
-    //    the store (single materialization; CC consumes the checkpoint)
-    io.appendBatch(ver.toDF(), EdgeStore, runId)
-    cleanupMid()
-    probeCleanup.foreach(_.apply())
-    val newEdges = io.readBatch(EdgeStore, runId)
+    // 4. cluster maintenance: previous assignments as star edges + this
+    //    batch's verified pairs. The published assignment is trusted
+    //    only if it was published as of the last committed batch; one
+    //    left by a crashed ingest is replaced by the committed edge
+    //    store, whose components ARE the committed assignment.
+    val t0 = System.nanoTime()
+    val clustersResumed = io.isPublished(ClustersTable, key)
+    if (!clustersResumed) {
+      val prevEdges =
+        if (committed.isEmpty) spark.emptyDataset[(String, String)].toDF("src", "dst")
+        else if (io.publishedBy(ClustersTable) == committed.lastOption)
+          io.read(ClustersTable)
+            .filter(col("image_id") =!= col("cluster_id"))
+            .select(col("image_id").as("src"), col("cluster_id").as("dst"))
+        else io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
+      val assign = graft.cluster.ConnectedComponents.run(spark,
+          allImages.select(col("image_id").as("id")),
+          newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges))
+        .select(col("id").as("image_id"), col("component").as("cluster_id"),
+          (col("id") === col("component")).as("representative"))
+      io.publish(assign, ClustersTable, key, runId)
+    }
+    val clusterFiles = io.fileCounts(ClustersTable).map(_._2)
+    records += StageRecord("clusters", clustersResumed, clusterFiles.sum,
+      (System.nanoTime() - t0) / 1000000, clusterFiles)
 
-    // 6. cluster maintenance: previous assignments as star edges +
-    //    this batch's verified pairs
-    val prevEdges =
-      if (io.exists(ClustersTable))
-        io.read(ClustersTable)
-          .filter(col("image_id") =!= col("cluster_id"))
-          .select(col("image_id").as("src"), col("cluster_id").as("dst"))
-      else spark.emptyDataset[(String, String)].toDF("src", "dst")
-    val vertices = allImages.select(col("image_id").as("id"))
-    val assign = graft.cluster.ConnectedComponents.run(spark, vertices,
-        newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges))
-      .select(col("id").as("image_id"), col("component").as("cluster_id"),
-        (col("id") === col("component")).as("representative"))
-
-    // 7. publish clusters + append batch to the index stores. The
-    //    SigStore append is LAST — it is the ingest's commit marker
-    //    (`ingested` reads SigStore), so a crash anywhere earlier
-    //    leaves the batch un-ingested and the entry self-heal above
-    //    clears the partial appends on retry; table publishes
-    //    (clusters, HAR) are replace-style and idempotent.
-    io.publish(assign, ClustersTable, cfg.configHash, runId)
-    io.appendBatch(
-      if (cfg.signatureOnly) batch.toDF().select(metaCols: _*) else batch.toDF(),
-      ImagesStore, runId)
-    io.appendBatch(newPost.toDF().withColumn("ingest_seq", lit(seq)), PostStore, runId)
-    io.appendBatch(newSigs.toDF(), SigStore, runId)
-
-    // 8. HAR handoff: this ingest's hot buckets for the next one (a
-    //    crash between 7 and here leaves the previous run's hot list
-    //    in place — HAR is an advisory routing hint, not correctness)
-    io.publish(sk.hotBuckets, HarTable, cfg.configHash, runId)
-    sk.cleanup()
-    newSigs.unpersist(blocking = false)
-    newPost.unpersist(blocking = false)
+    // 5. commit: list the staged batches, SigStore LAST — a crash
+    //    anywhere earlier leaves the batch un-ingested and resumable
+    for (store <- Seq(EdgeStore, ImagesStore, PostStore)) io.commitBatch(store, runId)
+    io.putBatchMeta(SigStore, runId, RecordFile,
+      Serialization.write(IngestRecord(runId, key, records.toSeq)))
+    io.commitBatch(SigStore, runId)
+    io.dropBatch(CandStore, runId)
     io.read(ClustersTable)
+  }
+
+  /** Cross-batch probe: new postings vs the stored index, as raw
+    * (id1, id2, srcbit) pairs, plus a cleanup for its cached key set. */
+  private def crossPairs(newPost: Dataset[BucketRow]): (DataFrame, () => Unit) = {
+    import spark.implicits._
+    if (!io.hasBatches(PostStore))
+      return (spark.emptyDataset[(Long, Long, Int)].toDF("id1", "id2", "srcbit"), () => ())
+    val old = io.readBatches(PostStore)
+    val newKeys = newPost.select("band", "bucket").distinct().persist(lvl)
+    // F7 Bloom front-end (DDFS's in-memory filter that prunes index
+    // probes, reference src/utils/bloom_filter.c:98-127): a driver-built
+    // Bloom over the new batch's bucket keys drops ~all store rows whose
+    // bucket the batch never touches BEFORE the shuffle join. The store
+    // side is |store| rows, the batch side |batch| — without the bloom
+    // every stored posting pays the exchange; with it only (touched +
+    // fpp * rest) do. False positives are removed by the equi-join; no
+    // false negatives.
+    val nKeys = newKeys.count()
+    val bloom = newKeys.stat.bloomFilter(
+      xxhash64(col("band"), col("bucket")), math.max(nKeys, 1L), cfg.bloomFpp)
+    val bloomBc = spark.sparkContext.broadcast(bloom)
+    val mightContain = udf((k: Long) => bloomBc.value.mightContainLong(k))
+    // store-side prune: bloom first (narrow, pre-shuffle), then the
+    // exact equi-join on the batch's keys; fan-in per bucket FIFO-capped
+    // at the newest cfg.indexValueLength entries
+    val touched = old
+      .filter(mightContain(xxhash64(col("band"), col("bucket"))))
+      .join(newKeys, Seq("band", "bucket"))
+    val w = Window.partitionBy("band", "bucket")
+      .orderBy(col("ingest_seq").desc, col("nid").desc)
+    val capped = touched
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= cfg.indexValueLength)
+      .select(col("band"), col("bucket"),
+        col("nid").as("old_id"), col("payload").as("old_payload"))
+    val srcbitCol =
+      when(col("band") < DedupPipeline.BandPhash, DedupPipeline.SrcMinhash)
+        .when(col("band") < DedupPipeline.BandSubstr, DedupPipeline.SrcPhash)
+        .when(col("band") < DedupPipeline.BandExactSha, DedupPipeline.SrcSubstr)
+        .otherwise(DedupPipeline.SrcExact)
+    val hamOk = when(
+      col("band") >= DedupPipeline.BandPhash && col("band") < DedupPipeline.BandSubstr,
+      expr(s"bit_count(payload ^ old_payload) <= ${cfg.hammingMax}")).otherwise(lit(true))
+    val pairs = newPost.toDF().join(capped, Seq("band", "bucket"))
+      .filter(col("nid") =!= col("old_id"))
+      .filter(hamOk)
+      .select(
+        least(col("nid"), col("old_id")).as("id1"),
+        greatest(col("nid"), col("old_id")).as("id2"),
+        srcbitCol.as("srcbit"))
+    (pairs, () => { newKeys.unpersist(blocking = false); () })
   }
 }
 
@@ -245,6 +308,58 @@ object IncrementalDedup {
   val EdgeStore = "edges_store"
   val ClustersTable = "clusters_current"
   val HarTable = "har_hot_buckets"
+  /** Staged candidate pairs of the ingest in flight (never committed;
+    * dropped once the ingest commits). */
+  val CandStore = "candidates_store"
+  /** Every store an ingest stages a batch into, in stage order. */
+  val StageStores = Seq(SigStore, ImagesStore, PostStore, CandStore, EdgeStore)
+  private val MarkFile = "STAGE.json"
+  private val RecordFile = "RECORD.json"
+
+  private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+
+  /** A staged stage's marker: the key it was computed under and the
+    * counters it produced. */
+  private final case class StageMark(key: String, counters: Map[String, Double])
+
+  /** A stage's output plus what runs after it is written: cleanup, and
+    * the counters to record. */
+  private final case class Staged(df: DataFrame,
+      finish: () => Map[String, Double] = () => Map.empty)
+
+  /** Stage key: config hash + input fingerprint + committed batch list. */
+  private def stageKey(cfg: DedupConfig, fp: String, committed: Seq[String]): String =
+    s"${cfg.configHash}-$fp-${java.lang.Long.toHexString(Sig.hash64(committed.mkString("\u0000")))}"
+
+  private def rowHash(id: String, caption: String, phash: Long): Long =
+    Sig.mix64(Sig.hash64(id) ^ Sig.mix64(Sig.hash64(caption) ^ phash))
+
+  private def fingerprint(n: Long, sum: Long): String =
+    s"$n.${java.lang.Long.toHexString(sum)}"
+
+  /** Order-independent input fingerprint (row count + wrapping sum of
+    * per-row id/caption/phash hashes); `bytes` stays pruned out. */
+  private def inputFingerprint(batch: Dataset[ImageRow]): String = {
+    import batch.sparkSession.implicits._
+    val (n, sum) = batch.select("image_id", "caption", "phash").as[(String, String, Long)]
+      .rdd.map(r => rowHash(r._1, r._2, r._3))
+      .aggregate((0L, 0L))((a, h) => (a._1 + 1, a._2 + h), (a, b) => (a._1 + b._1, a._2 + b._2))
+    fingerprint(n, sum)
+  }
+
+  /** Signatures that feed the fingerprint and the degenerate/blank
+    * counters as they are written (Spark's `trim` blank rule). */
+  private def countedSignatures(sigs: Dataset[SignatureRow],
+      fp: LongAccumulator, degenerate: LongAccumulator,
+      blank: LongAccumulator): Dataset[SignatureRow] = {
+    import sigs.sparkSession.implicits._
+    sigs.map { s =>
+      fp.add(rowHash(s.image_id, s.caption, s.phash))
+      if (s.degenerate) degenerate.add(1L)
+      if (s.caption.forall(_ == ' ')) blank.add(1L)
+      s
+    }
+  }
 
   /** Ids (pairs * 2, or touched rows) at or below which the candidate
     * id list broadcasts — the same order as verify's pixel needIds

@@ -247,9 +247,7 @@ object RestoreOps {
     require(!cfg.signatureOnly,
       "restore/round-trip requires pixel data; signatureOnly simulation skips it")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val sigs = DedupPipeline.signatures(images, cfg).persist(lvl)
-    val cand = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg)
-    val (ver, cleanupMid, pairCount) = DedupPipeline.verifyWithCleanup(cand, sigs, images.toDF(), cfg)
+    val (ver, pairCount, cleanupVerify) = DedupPipeline.verifiedPairs(images, cfg)
     // the edge set is consumed by BOTH the clustering and the repair's
     // skip anti-join: persist it so the verify stage's pair-decode map
     // executes exactly once (it is narrow — two id columns)
@@ -257,10 +255,8 @@ object RestoreOps {
     val cc0 = contentClustersFromEdges(images, edges, Some(pairCount))
     val cc = fidelityRepair(images, cc0, cfg, Some(edges)).persist(lvl)
     cc.count()
-    cleanupMid()
+    cleanupVerify()
     edges.unpersist(blocking = false)
-    sigs.unpersist(blocking = false)
-    cand.unpersist(blocking = false)
     val restored = restore(recipes(images, cc), contentStore(images, cc))
     val report = roundtripReport(images, restored, cfg).localCheckpoint()
     cc.unpersist(blocking = false)

@@ -92,7 +92,10 @@ final class Retention(
           spark, surviving.select(col("image_id").as("id")), edges)
         .select(col("id").as("image_id"), col("component").as("cluster_id"),
           (col("id") === col("component")).as("representative"))
-      io.publish(assign, ClustersTable, cfg.configHash, gcRunId)
+      // published as of the newest surviving batch: ingest trusts an
+      // assignment only when it names the last committed batch
+      io.publish(assign, ClustersTable, cfg.configHash,
+        io.batches(SigStore).lastOption.getOrElse(gcRunId))
     } else if (io.exists(ClustersTable)) {
       io.drop(ClustersTable)
     }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The table-layer contract every pipeline component is written
   * against (their `io` fields are typed as this trait, so swapping the
@@ -17,6 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - isPublished/exists/tables → catalog lookup + snapshot property
   *  - appendBatch               → an append commit (one snapshot),
   *                                runId as a snapshot/partition tag
+  *  - stageBatch/commitBatch    → write-audit-publish: a staged
+  *                                snapshot (wap.id = runId), made
+  *                                current later by cherry-pick
+  *  - batchDirs                 → committed + staged snapshot ids
+  *  - putBatchMeta/batchMeta/
+  *    publishedBy               → snapshot summary properties
   *  - rewriteBatch              → REPLACE of that partition (overwrite
   *                                commit filtered to the batch id)
   *  - dropBatch                 → DELETE WHERE batch = id + snapshot
@@ -24,7 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                exactly Iceberg's: metadata commit
   *                                precedes file reclaim)
   *  - readBatches/Tagged        → plain scans (batch id a column)
-  *  - batchRowCount/fileCounts  → manifest/metadata tables, no job
+  *  - batchRowCount/fileCounts/
+  *    batchFileCounts           → manifest/metadata tables, no job
   *  - gcOrphans                 → remove_orphan_files
   *  - drop                      → DROP TABLE PURGE
   */
@@ -34,14 +42,27 @@ trait TableBackend {
   def publishWithFiles(df: DataFrame, table: String, configHash: String,
       runId: String): (Long, Seq[(String, Long)])
   def isPublished(table: String, configHash: String): Boolean
+  def publishedBy(table: String): Option[String]
   def read(table: String): DataFrame
   def readMaterialized(table: String): DataFrame
   def batches(table: String): Seq[String]
-  def appendBatch(df: DataFrame, table: String, runId: String): Long
+  def batchDirs(table: String): Seq[String]
+  def stageBatch(df: DataFrame, table: String, runId: String): Long
+  def commitBatch(table: String, runId: String): Unit
+  def appendBatch(df: DataFrame, table: String, runId: String): Long = {
+    require(!batches(table).contains(runId), s"batch $runId already in $table")
+    val rows = stageBatch(df, table, runId)
+    commitBatch(table, runId)
+    rows
+  }
   def rewriteBatch(df: DataFrame, table: String, runId: String): Unit
   def dropBatch(table: String, runId: String): Unit
+  def putBatchMeta(table: String, runId: String, name: String, text: String): Unit
+  def batchMeta(table: String, runId: String, name: String): Option[String]
   def readBatch(table: String, runId: String): DataFrame
-  def batchRowCount(table: String, runId: String): Long
+  def batchFileCounts(table: String, runId: String): Seq[(String, Long)]
+  def batchRowCount(table: String, runId: String): Long =
+    batchFileCounts(table, runId).map(_._2).sum
   def readBatches(table: String): DataFrame
   def readBatchesTagged(table: String, tagCol: String): DataFrame
   def hasBatches(table: String): Boolean = batches(table).nonEmpty
@@ -76,21 +97,53 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   private def tablePath(t: String) = new Path(baseDir, t)
   private def manifestPath(t: String) = new Path(tablePath(t), "_MANIFEST.json")
 
+  private def parquetFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+
+  private def footer[T](s: org.apache.hadoop.fs.FileStatus)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+        s, spark.sparkContext.hadoopConfiguration))
+    try f(reader) finally reader.close()
+  }
+
   /** Per-data-file row counts under one directory, from parquet footer
     * metadata only (driver-side, no Spark job, no data pages read) —
     * the single implementation behind every footer-based count here. */
-  private def footerCounts(dir: Path): Seq[(String, Long)] = {
+  private def footerCounts(dir: Path): Seq[(String, Long)] =
+    parquetFiles(dir).map(s => s.getPath.getName -> footer(s)(_.getRecordCount))
+
+  /** The Spark schema a directory was written with, from the first
+    * parquet footer's row metadata (driver-side). Reading with it skips
+    * the schema-inference job a bare `spark.read.parquet` launches. */
+  private def footerSchema(dir: Path): Option[StructType] =
+    parquetFiles(dir).headOption.flatMap(footer(_)(r =>
+      Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])))
+
+  /** Scan parquet dirs with the schema of the first one's footer. */
+  private def scan(dirs: Seq[Path]): DataFrame =
+    footerSchema(dirs.head) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
+      case None => spark.read.parquet(dirs.map(_.toString): _*)
+    }
+
+  private def readText(p: Path): Option[String] = {
     val f = fs
-    val conf = spark.sparkContext.hadoopConfiguration
-    f.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map { s =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try s.getPath.getName -> reader.getRecordCount
-        finally reader.close()
-      }
+    if (!f.exists(p)) return None
+    val in = f.open(p)
+    try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+    finally in.close()
+  }
+
+  private def writeText(p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8"))
+    finally out.close()
   }
 
   /** Per-data-file row counts of a published table, from parquet footer
@@ -115,11 +168,8 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
       throw new java.io.IOException(s"atomic publish failed: $tmp -> $dest")
     val files = fileCounts(table)
     val rows = files.map(_._2).sum
-    val manifest =
-      s"""{"table":"$table","rows":$rows,"config_hash":"$configHash","run_id":"$runId","ts":${System.currentTimeMillis()}}"""
-    val out = f.create(manifestPath(table), true)
-    out.write(manifest.getBytes("UTF-8"))
-    out.close()
+    writeText(manifestPath(table),
+      s"""{"table":"$table","rows":$rows,"config_hash":"$configHash","run_id":"$runId","ts":${System.currentTimeMillis()}}""")
     (rows, files)
   }
 
@@ -128,16 +178,15 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     * in DedupConfig; callers fold an input-identity fingerprint into
     * the hash so a different corpus in the same workDir never silently
     * reuses stale stages). */
-  def isPublished(table: String, configHash: String): Boolean = {
-    val f = fs
-    if (!f.exists(manifestPath(table))) return false
-    val in = f.open(manifestPath(table))
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    txt.contains(s""""config_hash":"$configHash"""")
-  }
+  def isPublished(table: String, configHash: String): Boolean =
+    readText(manifestPath(table)).exists(_.contains(s""""config_hash":"$configHash""""))
 
-  def read(table: String): DataFrame = spark.read.parquet(tablePath(table).toString)
+  /** Run id recorded by the table's last publish (None if unpublished). */
+  def publishedBy(table: String): Option[String] =
+    readText(manifestPath(table)).flatMap(
+      "\"run_id\":\"([^\"]*)\"".r.findFirstMatchIn(_).map(_.group(1)))
+
+  def read(table: String): DataFrame = scan(Seq(tablePath(table)))
 
   /** Read a SMALL table fully materialized to the driver and re-created
     * as a local DataFrame — for control tables (e.g. the HAR hot-bucket
@@ -145,8 +194,9 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     * a plan over the materialized copy can never observe the overwrite. */
   def readMaterialized(table: String): DataFrame = {
     val df = read(table)
-    val rows = df.collect()
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), df.schema)
+    // a local relation: emptiness checks and collects on it run on the
+    // driver without a Spark job
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
   // ------------------------------------------------------------------
@@ -155,7 +205,9 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   // Each batch is its own subdirectory `<table>/batch-<runId>`,
   // committed by the same tmp→rename protocol; `_STORE.json` lists the
   // committed batch ids IN INGEST ORDER. A batch directory not listed
-  // in the manifest is invisible (a crash mid-append is simply retried).
+  // in the manifest is invisible (a crash mid-append is simply retried):
+  // stageBatch writes one, commitBatch lists it, so a staged batch is a
+  // durable checkpoint nobody reads until its writer commits it.
   // This is the destor container-store append discipline
   // (src/storage/containerstore.c:131-216: containers are append-only,
   // the manifest/recordset tells which are live) — and what an Iceberg
@@ -165,29 +217,30 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   private def batchPath(t: String, runId: String) = new Path(tablePath(t), s"batch-$runId")
 
   /** Committed batch run-ids of a store, in ingest order. */
-  def batches(table: String): Seq[String] = {
+  def batches(table: String): Seq[String] =
+    readText(storeManifestPath(table)).toSeq.flatMap { txt =>
+      "\"([^\"]+)\"".r.findAllMatchIn(
+        txt.substring(txt.indexOf('['), txt.indexOf(']') + 1)).map(_.group(1))
+    }
+
+  private def writeStoreManifest(table: String, ids: Seq[String]): Unit =
+    writeText(storeManifestPath(table),
+      s"""{"table":"$table","batches":[${ids.map("\"" + _ + "\"").mkString(",")}]}""")
+
+  /** Ids of every batch directory in a store, committed or staged. */
+  def batchDirs(table: String): Seq[String] = {
     val f = fs
-    if (!f.exists(storeManifestPath(table))) return Seq.empty
-    val in = f.open(storeManifestPath(table))
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    "\"([^\"]+)\"".r.findAllMatchIn(
-      txt.substring(txt.indexOf('['), txt.indexOf(']') + 1)).map(_.group(1)).toSeq
+    if (!f.exists(tablePath(table))) return Seq.empty
+    f.listStatus(tablePath(table)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
+      .map(_.getPath.getName.stripPrefix("batch-"))
   }
 
-  private def writeStoreManifest(table: String, ids: Seq[String]): Unit = {
-    val out = fs.create(storeManifestPath(table), true)
-    out.write(s"""{"table":"$table","batches":[${ids.map("\"" + _ + "\"").mkString(",")}]}"""
-      .getBytes("UTF-8"))
-    out.close()
-  }
-
-  /** Append one batch to a store: tmp-write, rename into place, then
-    * commit by rewriting the store manifest. Returns rows appended
-    * (parquet footers — no re-scan). */
-  def appendBatch(df: DataFrame, table: String, runId: String): Long = {
+  /** Write one batch into place WITHOUT listing it in the store
+    * manifest (tmp-write, then rename over any earlier staged copy).
+    * Returns rows written (parquet footers — no re-scan). */
+  def stageBatch(df: DataFrame, table: String, runId: String): Long = {
     val f = fs
-    require(!batches(table).contains(runId), s"batch $runId already in $table")
     val tmp = new Path(baseDir, s"$table.tmp-$runId")
     f.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
@@ -195,9 +248,15 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     f.delete(dest, true)
     f.mkdirs(tablePath(table))
     if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"batch append failed: $tmp -> $dest")
-    writeStoreManifest(table, batches(table) :+ runId)
-    footerCounts(dest).map(_._2).sum
+      throw new java.io.IOException(s"batch stage failed: $tmp -> $dest")
+    batchRowCount(table, runId)
+  }
+
+  /** Make a staged batch visible by listing it in the store manifest
+    * (idempotent: a listed batch stays where it is). */
+  def commitBatch(table: String, runId: String): Unit = {
+    val ids = batches(table)
+    if (!ids.contains(runId)) writeStoreManifest(table, ids :+ runId)
   }
 
   /** Replace one committed batch's data in place (index-entry reclaim:
@@ -218,36 +277,46 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     * invisible), then delete the directory (trunc_manifest discipline,
     * reference src/cma.c:83-139: manifest update precedes reclaim). */
   def dropBatch(table: String, runId: String): Unit = {
-    writeStoreManifest(table, batches(table).filterNot(_ == runId))
+    val ids = batches(table)
+    if (ids.contains(runId)) writeStoreManifest(table, ids.filterNot(_ == runId))
     fs.delete(batchPath(table, runId), true)
   }
 
-  /** Read one committed batch. */
-  def readBatch(table: String, runId: String): DataFrame =
-    spark.read.parquet(batchPath(table, runId).toString)
+  /** A small driver-written file kept inside a batch directory (the
+    * leading `_` hides it from parquet scans); it goes when the batch
+    * is dropped. */
+  def putBatchMeta(table: String, runId: String, name: String, text: String): Unit =
+    writeText(new Path(batchPath(table, runId), s"_$name"), text)
 
-  /** Row count of one committed batch from parquet FOOTERS only —
+  def batchMeta(table: String, runId: String, name: String): Option[String] =
+    readText(new Path(batchPath(table, runId), s"_$name"))
+
+  /** Read one batch (committed or staged) with the schema it was
+    * written with. */
+  def readBatch(table: String, runId: String): DataFrame = scan(Seq(batchPath(table, runId)))
+
+  /** Per-file row counts of one batch from parquet FOOTERS only —
     * driver-side metadata reads, no Spark job. */
-  def batchRowCount(table: String, runId: String): Long =
-    footerCounts(batchPath(table, runId)).map(_._2).sum
+  def batchFileCounts(table: String, runId: String): Seq[(String, Long)] =
+    footerCounts(batchPath(table, runId))
 
   /** Read the whole store (union of committed batches). */
   def readBatches(table: String): DataFrame = {
     val ids = batches(table)
     require(ids.nonEmpty, s"store $table has no batches")
-    spark.read.parquet(ids.map(r => batchPath(table, r).toString): _*)
+    scan(ids.map(batchPath(table, _)))
   }
 
   /** Read the whole store with the owning batch id attached as column
-    * `tagCol`. The schema is inferred ONCE and pinned for every other
-    * batch dir — a naive per-dir `spark.read.parquet` launches one
-    * schema-inference job per batch, which turns any whole-store pass
-    * into O(batches) Spark jobs. */
+    * `tagCol`. One footer schema is pinned for every batch dir — a
+    * naive per-dir `spark.read.parquet` launches one schema-inference
+    * job per batch, which turns any whole-store pass into O(batches)
+    * Spark jobs. */
   def readBatchesTagged(table: String, tagCol: String): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val ids = batches(table)
     require(ids.nonEmpty, s"store $table has no batches")
-    val schema = spark.read.parquet(batchPath(table, ids.head).toString).schema
+    val schema = scan(Seq(batchPath(table, ids.head))).schema
     ids.map { r =>
       spark.read.schema(schema).parquet(batchPath(table, r).toString)
         .withColumn(tagCol, lit(r))

@@ -176,7 +176,7 @@ object FslSource {
           val raw = new Array[Byte](pathLen); b.get(raw)
           path = new String(raw, "UTF-8")
         case v =>
-          need((if (v >= 5) 96 else 88) + 8, s"v$v file header (file $fileSeq)")
+          need(if (v >= 5) 96 else 88, s"v$v file header (file $fileSeq)")
           fileSize = b.getLong()
           if (v >= 5) b.getLong() // blocks
           b.getInt(); b.getInt()  // uid, gid

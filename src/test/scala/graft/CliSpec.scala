@@ -26,10 +26,36 @@ class CliSpec extends AnyFunSuite {
     val s2 = Cli.run(Seq("backup", store, s"$data/b2.parquet", "--id", "b2"), spark)
     assert(s2.startsWith(s"backup b2: $n2 images"), s2)
     assert(s2.contains(s"corpus ${n1 + n2} images"), s2)
+    // one line per ingest stage after the summary
+    val stages = Seq("signatures", "images", "postings", "candidate_pairs", "verified_pairs", "clusters")
+    assert(s2.linesIterator.drop(1).map(_.trim.takeWhile(_ != ' ')).toSeq == stages, s2)
 
-    val st = Cli.run(Seq("stats", store), spark)
+    // stats prints every batch's stored stage record without a Spark job
+    val sc = spark.sparkContext
+    val statsJobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("cli-stats") => statsJobs.incrementAndGet(); ()
+          case Some("cli-stats-flush") => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("cli-stats", "stats")
+    val st = try Cli.run(Seq("stats", store), spark) finally {
+      // a job after stats drains the listener bus up to it
+      sc.setJobGroup("cli-stats-flush", "flush")
+      spark.range(1).count()
+      sc.clearJobGroup()
+    }
+    assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    sc.removeSparkListener(listener)
+    assert(statsJobs.get == 0, s"stats started ${statsJobs.get} Spark jobs")
     assert(st.contains(s"2 batches, ${n1 + n2} images"), st)
     assert(st.contains("b1:") && st.contains("b2:"), st)
+    assert(st.linesIterator.count(_.trim.startsWith("verified_pairs")) == 2, st)
 
     // restore one batch: exact row coverage + clean fidelity report
     val out1 = Files.createTempDirectory("graft-cli-out1").toString

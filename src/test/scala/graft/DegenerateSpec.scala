@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{DedupConfig, ImageRow}
-import graft.pipeline.{CheckpointedPipeline, DedupPipeline}
+import graft.pipeline.{DedupPipeline, IncrementalDedup}
 import graft.signatures.Codec
 import graft.synth.{CorpusGen, Oracle}
 import org.apache.spark.sql.SparkSession
@@ -40,14 +40,14 @@ class DegenerateSpec extends AnyFunSuite {
     val corpus = spark.createDataset(rows)
 
     val dir = Files.createTempDirectory("graft-degen").toString
-    val (clustersDf, runner) = CheckpointedPipeline.run(corpus, cfg, dir, "d1")
-    val got = clustersDf.collect()
+    val inc = new IncrementalDedup(spark, dir, cfg)
+    val got = inc.ingest(corpus, "d1").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
-    // metric counters (jcr zero-chunk analog)
-    val m = runner.metrics.map(x => (x.stage, x.metric) -> x.value).toMap
-    assert(m(("signatures", "degenerate_pixel_rows")) == 8.0)
-    assert(m(("signatures", "blank_caption_rows")) == 8.0)
+    // metric counters (jcr zero-chunk analog) in the ingest's record
+    val m = inc.record("d1").get.stages.find(_.stage == "signatures").get.counters
+    assert(m("degenerate_pixel_rows") == 8.0)
+    assert(m("blank_caption_rows") == 8.0)
 
     // exact oracle equality on the full corpus (recall AND precision)
     val want = Oracle.clusters(rows.map(_.image_id),

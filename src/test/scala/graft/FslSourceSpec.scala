@@ -97,6 +97,30 @@ class FslSourceSpec extends AnyFunSuite {
     assert(rows.map(r => (r.file_path, r.file_seq)) === List(("full", 1L)))
   }
 
+  test("v4+ headers need exactly the bytes they read: zero-chunk last file, one 6-byte record") {
+    // the v4+ file header is 88 (v4) / 96 (v5+) bytes; a trace whose
+    // last file ends right after it (zero chunks), or after one 48-bit
+    // fixed-chunking record, is valid and must round-trip
+    val cases = Seq(
+      ("zero-last", 5, FslSource.Variable, 0L, 128,
+        Seq(WFile("full", 9L, Seq(WChunk(fp(4), 9L, 0))), WFile("e", 0L, Nil))),
+      ("one-48bit", 5, FslSource.Fixed, 4096L, 48,
+        Seq(WFile("x", 100L, Seq(WChunk(fp(5, 6)))))),
+      ("v4-zero-last", 4, FslSource.Variable, 0L, 128, Seq(WFile("e", 0L, Nil))))
+    for ((name, v, method, cs, bits, files) <- cases) {
+      val f = tmpFile(s"$name.hf")
+      FslSource.writeHashfile(f, v, method, cs, 1, bits, files.iterator)
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      val rows = FslSource.parse(name, bytes).toList
+      assert(rows.map(r => (r.file_path, r.fp)) ===
+        files.flatMap(w => w.chunks.map(c => (w.path, hexOf(c.fp)))).toList, name)
+      // one byte short still fails with the named extent check
+      val ex = intercept[IllegalArgumentException](
+        FslSource.parse(name, bytes.dropRight(1)).toList)
+      assert(ex.getMessage.contains("truncated/corrupt record"), ex.getMessage)
+    }
+  }
+
   test("corrupt magic and unsupported version fail loudly") {
     val f = tmpFile("bad.hf")
     FslSource.writeHashfile(f, 7, FslSource.Variable, 0, 1, 128,

@@ -1,75 +1,135 @@
 package graft
 
-import graft.core.DedupConfig
-import graft.pipeline.{CheckpointedPipeline, TableIO}
+import graft.core.{DedupConfig, ImageRow}
+import graft.pipeline.{DedupPipeline, IncrementalDedup, TableIO}
 import graft.synth.CorpusGen
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-/** Checkpoint/resume semantics (north_rule): per-stage atomic publish,
-  * resume skips completed stages, config change invalidates, lineage +
-  * metrics tables are written. */
+/** Checkpoint/resume semantics of the stored flow (north_rule): each
+  * ingest stage is a staged batch keyed on config + input + committed
+  * store, a retried ingest resumes the stages it finished, a changed
+  * config or input recomputes, and every commit stores its per-stage
+  * lineage + metrics record.
+  *
+  * A crash just before the commit is made by turning edges_store's
+  * manifest (the commit's first write) into a directory: the ingest
+  * fails after every stage is staged and before any batch is listed. */
 class ResumeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.Sessions.local(4, 8, "resume-spec")
   val cfg = DedupConfig.default
+  val Stages = Seq("signatures", "images", "postings", "candidate_pairs", "verified_pairs", "clusters")
+
+  import spark.implicits._
+
+  /** Two batches split within dup groups, so B probes A's stored index. */
+  private def batches(groups: Int): (Dataset[ImageRow], Dataset[ImageRow]) = {
+    val corpus = CorpusGen.generate(spark, groups)
+    val idNum = substring(col("image_id"), 4, 10).cast("long")
+    (corpus.filter(idNum % 2 === 0), corpus.filter(idNum % 2 === 1))
+  }
+
+  /** Ingest `b` as run "b" with the commit failing. */
+  private def crashBeforeCommit(inc: IncrementalDedup, dir: String, b: Dataset[ImageRow]): Unit = {
+    val manifest = Paths.get(dir, IncrementalDedup.EdgeStore, "_STORE.json")
+    val saved = manifest.resolveSibling("saved.json")
+    Files.move(manifest, saved)
+    Files.createDirectory(manifest)
+    try assertThrows[java.io.IOException](inc.ingest(b, "b"))
+    finally { Files.delete(manifest); Files.move(saved, manifest) }
+    assert(inc.ingested == Seq("a"), "a crashed ingest must not commit")
+  }
+
+  private def assignment(inc: IncrementalDedup): Seq[(String, String)] =
+    inc.clusters.select("image_id", "cluster_id").as[(String, String)].collect().sorted.toSeq
+
+  /** Rows of every committed batch of every store, plus the clusters. */
+  private def storeRows(dir: String): Map[String, Seq[String]] = {
+    val io = new TableIO(spark, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => java.util.Arrays.toString(b)
+      case v => String.valueOf(v)
+    }.mkString(",")).sorted.toSeq
+    (for (store <- IncrementalDedup.StageStores; r <- io.batches(store))
+      yield s"$store/$r" -> rows(io.readBatch(store, r))).toMap +
+      ("clusters" -> rows(io.read(IncrementalDedup.ClustersTable)))
+  }
+
+  private def resumedStages(inc: IncrementalDedup, run: String): Set[String] =
+    inc.record(run).get.stages.filter(_.resumed).map(_.stage).toSet
 
   test("checkpointed run == direct run; resume skips all stages; config change recomputes") {
-    val dir = Files.createTempDirectory("graft-ckpt").toString
-    val corpus = CorpusGen.generate(spark, 10)
-    val (clusters1, r1) = CheckpointedPipeline.run(corpus, cfg, dir, "run1")
-    val a = clusters1.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(r1.stagesResumed.isEmpty)
-    assert(a.nonEmpty)
+    val (a, b) = batches(10)
+    val cleanDir = Files.createTempDirectory("graft-resume-clean").toString
+    val clean = new IncrementalDedup(spark, cleanDir, cfg)
+    clean.ingest(a, "a")
+    clean.ingest(b, "b")
+    assert(resumedStages(clean, "b").isEmpty)
+    assert(assignment(clean) == DedupPipeline.run(a.union(b), cfg)
+      .collect().map(r => (r.image_id, r.cluster_id)).sorted.toSeq)
 
-    // resume: everything published -> all six stages skipped, same result
-    val (clusters2, r2) = CheckpointedPipeline.run(corpus, cfg, dir, "run2")
-    val b = clusters2.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(b == a)
-    assert(r2.stagesResumed.toSet ==
-      Set("images", "signatures", "lsh_buckets", "candidate_pairs", "verified_pairs", "clusters"))
+    // full resume: every stage was staged, so the retry recomputes none
+    val fullDir = Files.createTempDirectory("graft-resume-full").toString
+    val full = new IncrementalDedup(spark, fullDir, cfg)
+    full.ingest(a, "a")
+    crashBeforeCommit(full, fullDir, b)
+    full.ingest(b, "b")
+    assert(resumedStages(full, "b") == Stages.toSet)
+    assert(storeRows(fullDir) == storeRows(cleanDir))
 
-    // partial resume: drop the last two stages -> only they recompute
-    val io = new TableIO(spark, dir)
-    io.drop("clusters")
-    io.drop("verified_pairs")
-    val (clusters3, r3) = CheckpointedPipeline.run(corpus, cfg, dir, "run3")
-    val c = clusters3.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(c == a)
-    assert(r3.stagesResumed.toSet ==
-      Set("images", "signatures", "lsh_buckets", "candidate_pairs"))
+    // partial resume: drop the last two stages' outputs -> only they recompute
+    val partDir = Files.createTempDirectory("graft-resume-part").toString
+    val part = new IncrementalDedup(spark, partDir, cfg)
+    part.ingest(a, "a")
+    crashBeforeCommit(part, partDir, b)
+    part.io.dropBatch(IncrementalDedup.EdgeStore, "b")
+    part.io.drop(IncrementalDedup.ClustersTable) // cluster maintenance replays the edge store
+    part.ingest(b, "b")
+    assert(resumedStages(part, "b") == Set("signatures", "images", "postings", "candidate_pairs"))
+    assert(storeRows(partDir) == storeRows(cleanDir))
 
-    // config change invalidates every checkpoint
-    val cfg2 = cfg.copy(jaccardMin = 0.85)
-    val (_, r4) = CheckpointedPipeline.run(corpus, cfg2, dir, "run4")
-    assert(r4.stagesResumed.isEmpty)
+    // config change: the staged stages were keyed on the old config
+    val cfgDir = Files.createTempDirectory("graft-resume-cfg").toString
+    new IncrementalDedup(spark, cfgDir, cfg).ingest(a, "a")
+    crashBeforeCommit(new IncrementalDedup(spark, cfgDir, cfg), cfgDir, b)
+    val cfg2 = new IncrementalDedup(spark, cfgDir, cfg.copy(jaccardMin = 0.85))
+    cfg2.ingest(b, "b")
+    assert(resumedStages(cfg2, "b").isEmpty)
 
-    // lineage + metrics published
-    val lineage = io.read("lineage_run1").collect()
-    assert(lineage.nonEmpty)
-    val stages = lineage.map(_.getString(0)).toSet
-    assert(stages.contains("signatures") && stages.contains("clusters"))
-    val metrics = io.read("metrics_run1").collect()
-    assert(metrics.exists(m => m.getString(0) == "clusters" && m.getString(1) == "rows"))
+    // lineage + metrics record: every stage in order, per-file rows
+    // summing to its rows, and the stage counters
+    val rec = clean.record("b").get
+    assert(rec.run_id == "b" && rec.stages.map(_.stage) == Stages)
+    assert(rec.stages.forall(s => s.file_rows.nonEmpty && s.file_rows.sum == s.rows))
+    val byStage = rec.stages.map(s => s.stage -> s).toMap
+    assert(byStage("signatures").rows == b.count())
+    assert(byStage("clusters").rows == a.count() + b.count())
+    assert(Seq("degenerate_pixel_rows", "blank_caption_rows")
+      .forall(byStage("signatures").counters.contains))
+    assert(byStage("candidate_pairs").counters("cap_used") >= cfg.bucketCap)
+    assert(byStage("candidate_pairs").counters.contains("har_inherited_buckets"))
+    // the commit leaves no staged scratch behind
+    assert(clean.io.batchDirs(IncrementalDedup.CandStore).isEmpty)
   }
 
   test("same config, different corpus => full recompute (input fingerprint)") {
+    val (a, b) = batches(10)
     val dir = Files.createTempDirectory("graft-inputfp").toString
-    val (cl1, r1) = CheckpointedPipeline.run(CorpusGen.generate(spark, 10), cfg, dir, "runA")
-    assert(cl1.count() == 80 && r1.stagesResumed.isEmpty)
-    // same config, same workDir, DIFFERENT corpus: nothing may be reused
-    val (cl2, r2) = CheckpointedPipeline.run(CorpusGen.generate(spark, 12), cfg, dir, "runB")
-    assert(r2.stagesResumed.isEmpty, "stale checkpoints reused for a different input")
-    assert(cl2.count() == 96)
-    // and re-running the second corpus resumes everything
-    val (_, r3) = CheckpointedPipeline.run(CorpusGen.generate(spark, 12), cfg, dir, "runC")
-    assert(r3.stagesResumed.nonEmpty)
+    val inc = new IncrementalDedup(spark, dir, cfg)
+    inc.ingest(a, "a")
+    crashBeforeCommit(inc, dir, b)
+    // same config, same runId, DIFFERENT input: nothing may be reused
+    val (_, otherB) = batches(12) // the odd ids of 12 groups: not b, still disjoint from a
+    inc.ingest(otherB, "b")
+    assert(resumedStages(inc, "b").isEmpty, "stale checkpoints reused for a different input")
+    assert(inc.clusters.count() == a.count() + otherB.count())
   }
 
   test("interrupted publish leaves no half-visible table") {
     val dir = Files.createTempDirectory("graft-atomic").toString
     val io = new TableIO(spark, dir)
-    import spark.implicits._
     io.publish(Seq(1, 2, 3).toDF("x"), "t", "h1", "r1")
     assert(io.isPublished("t", "h1"))
     assert(!io.isPublished("t", "OTHER")) // config mismatch = absent

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{DedupConfig, ImageRow}
-import graft.pipeline.{CheckpointedPipeline, DedupPipeline, IncrementalDedup}
+import graft.pipeline.{DedupPipeline, IncrementalDedup}
 import graft.synth.CorpusGen
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -58,7 +58,9 @@ class SimulationSpec extends AnyFunSuite {
   test("checkpointed flow under the flag publishes a bytes-free images checkpoint") {
     val dir = java.nio.file.Files.createTempDirectory("sim-ckpt").toString
     val corpus = CorpusGen.generate(spark, 10).cache()
-    val (clusters, runner) = CheckpointedPipeline.run(poisoned(corpus), simCfg, dir, "sim1")
+    // the checkpointed flow: one ingest into an empty store
+    val inc = new IncrementalDedup(spark, dir, simCfg)
+    val clusters = inc.ingest(poisoned(corpus), "sim1")
     val full = DedupPipeline.run(corpus, cfg)
       .collect().map(r => (r.image_id, r.cluster_id)).sorted.toSeq
     val sim = clusters.as[graft.core.ClusterRow]
@@ -66,7 +68,8 @@ class SimulationSpec extends AnyFunSuite {
     assert(sim == full)
     // the published images stage carries only metadata columns — the
     // simulation skips data movement, not just data compute
-    val imagesSchema = runner.io.read("images").schema.fieldNames.toSet
+    val imagesSchema = inc.io.readBatch(IncrementalDedup.ImagesStore, "sim1")
+      .schema.fieldNames.toSet
     assert(imagesSchema == Set("image_id", "caption", "phash"))
     corpus.unpersist()
   }

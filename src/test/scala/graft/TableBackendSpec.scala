@@ -22,10 +22,12 @@ class TableBackendSpec extends AnyFunSuite {
   final class InMemoryBackend(spark: SparkSession) extends TableBackend {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType
-    private case class Tbl(schema: StructType, rows: Seq[Row], configHash: String)
+    private case class Tbl(schema: StructType, rows: Seq[Row], configHash: String,
+        runId: String = "")
     private val tbl = scala.collection.mutable.LinkedHashMap.empty[String, Tbl]
     private val batch = scala.collection.mutable.LinkedHashMap.empty[(String, String), Tbl]
     private val order = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+    private val meta = scala.collection.mutable.Map.empty[(String, String, String), String]
     private def df(t: Tbl): DataFrame =
       spark.createDataFrame(spark.sparkContext.parallelize(t.rows, 1), t.schema)
 
@@ -36,32 +38,40 @@ class TableBackendSpec extends AnyFunSuite {
     def publishWithFiles(d: DataFrame, table: String, configHash: String,
         runId: String): (Long, Seq[(String, Long)]) = {
       val rows = d.collect().toSeq
-      tbl(table) = Tbl(d.schema, rows, configHash)
+      tbl(table) = Tbl(d.schema, rows, configHash, runId)
       (rows.size.toLong, Seq("mem-0" -> rows.size.toLong))
     }
     def isPublished(table: String, configHash: String): Boolean =
       tbl.get(table).exists(_.configHash == configHash)
+    def publishedBy(table: String): Option[String] = tbl.get(table).map(_.runId)
     def read(table: String): DataFrame = df(tbl(table))
     def readMaterialized(table: String): DataFrame = read(table)
     def batches(table: String): Seq[String] = order.getOrElse(table, Vector.empty)
-    def appendBatch(d: DataFrame, table: String, runId: String): Long = {
-      require(!batches(table).contains(runId), s"batch $runId already in $table")
+    def batchDirs(table: String): Seq[String] =
+      batch.keys.filter(_._1 == table).map(_._2).toSeq
+    def stageBatch(d: DataFrame, table: String, runId: String): Long = {
       val rows = d.collect().toSeq
       batch((table, runId)) = Tbl(d.schema, rows, "")
-      order(table) = order.getOrElse(table, Vector.empty) :+ runId
       rows.size.toLong
     }
+    def commitBatch(table: String, runId: String): Unit =
+      if (!batches(table).contains(runId)) order(table) = batches(table).toVector :+ runId
     def rewriteBatch(d: DataFrame, table: String, runId: String): Unit = {
       require(batches(table).contains(runId), s"batch $runId not in $table")
       batch((table, runId)) = Tbl(d.schema, d.collect().toSeq, "")
     }
     def dropBatch(table: String, runId: String): Unit = {
       order(table) = order.getOrElse(table, Vector.empty).filterNot(_ == runId)
-      batch.remove((table, runId)); ()
+      batch.remove((table, runId))
+      meta.filterInPlace { case ((t, r, _), _) => t != table || r != runId }; ()
     }
+    def putBatchMeta(table: String, runId: String, name: String, text: String): Unit =
+      meta((table, runId, name)) = text
+    def batchMeta(table: String, runId: String, name: String): Option[String] =
+      meta.get((table, runId, name))
     def readBatch(table: String, runId: String): DataFrame = df(batch((table, runId)))
-    def batchRowCount(table: String, runId: String): Long =
-      batch((table, runId)).rows.size.toLong
+    def batchFileCounts(table: String, runId: String): Seq[(String, Long)] =
+      Seq("mem-0" -> batch((table, runId)).rows.size.toLong)
     def readBatches(table: String): DataFrame = {
       val ids = batches(table)
       require(ids.nonEmpty, s"store $table has no batches")
@@ -97,8 +107,9 @@ class TableBackendSpec extends AnyFunSuite {
     io.publish(b, "t1", "cfgB", "run2") // replace
     assert(io.isPublished("t1", "cfgB") && !io.isPublished("t1", "cfgA"))
     assert(io.read("t1").collect().map(_.getLong(0)).toSeq == Seq(4L))
+    assert(io.publishedBy("t1") == Some("run2"))
     io.drop("t1")
-    assert(!io.exists("t1") && !io.tables().contains("t1"))
+    assert(!io.exists("t1") && !io.tables().contains("t1") && io.publishedBy("t1").isEmpty)
 
     // batch store: append order, counts, tagged union, rewrite, drop
     assert(!io.hasBatches("s"))
@@ -119,6 +130,23 @@ class TableBackendSpec extends AnyFunSuite {
     io.dropBatch("s", "b1")
     assert(io.batches("s") == Seq("b2"), "manifest-first drop: batch invisible")
     assert(io.readBatches("s").count() == 1)
+
+    // staging: a staged batch is readable by id, invisible to the store
+    // until committed; commit is idempotent; meta goes with the batch
+    assert(io.stageBatch(a, "s", "b3") == 3)
+    assert(io.batches("s") == Seq("b2") && io.batchDirs("s").toSet == Set("b2", "b3"))
+    assert(io.readBatch("s", "b3").count() == 3 && io.readBatches("s").count() == 1)
+    assert(io.batchFileCounts("s", "b3").map(_._2).sum == 3)
+    io.putBatchMeta("s", "b3", "note", "hello")
+    assert(io.batchMeta("s", "b3", "note") == Some("hello") && io.batchMeta("s", "b2", "note").isEmpty)
+    io.commitBatch("s", "b3")
+    io.commitBatch("s", "b3")
+    assert(io.batches("s") == Seq("b2", "b3") && io.readBatches("s").count() == 4)
+    io.dropBatch("s", "b3")
+    assert(io.batchDirs("s") == Seq("b2") && io.batchMeta("s", "b3", "note").isEmpty)
+    io.stageBatch(b, "s", "b4")
+    io.dropBatch("s", "b4") // an unlisted batch drops without touching the list
+    assert(io.batches("s") == Seq("b2") && io.batchDirs("s") == Seq("b2"))
     assertThrows[IllegalArgumentException] {
       io.dropBatch("s", "b2")
       io.readBatches("s") // empty store must refuse, not scan nothing
