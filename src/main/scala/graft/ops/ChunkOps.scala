@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.signatures.Chunker
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dataset-side surface of the CDC chunker family (P2–P6): a narrow
@@ -65,13 +64,12 @@ object ChunkOps {
     * the same two destor pays (index probe + container write); the
     * stats are map-side partial aggregations over each.
     */
-  /** J1 first-occurrence flag over a chunk stream — the dedup decision
-    * every backup-shaped consumer (chunkBackup, the restore-sim
-    * recipes) must share verbatim. */
-  private[graft] def flagFirst(chunks: DataFrame): DataFrame = {
-    val ord = Window.partitionBy("fp").orderBy(col("doc_id"), col("chunk_idx"))
-    chunks.withColumn("is_first", row_number().over(ord) === 1)
-  }
+  /** J1 first-occurrence flag over a chunk stream in (doc, chunk)
+    * order — the dedup decision every backup-shaped consumer
+    * (chunkBackup, chunkRestore, ChunkIngest, the restore-sim recipes)
+    * must share verbatim; the window is the trace jobs' one. */
+  private[graft] def flagFirst(chunks: DataFrame): DataFrame =
+    graft.sources.TraceJobs.flagFirst(chunks, col("doc_id"), col("chunk_idx"))
 
   /** W3 container assignment with the ONE pack parameterization the
     * backup job defines (32 fp-hash shards, stream order, conditional
@@ -121,9 +119,7 @@ object ChunkOps {
     val bytesDf = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"))
     val chunks = chunkDocs(spark, dir, algo, p)
-    val ord = Window.partitionBy("fp").orderBy(col("doc_id"), col("chunk_idx"))
-    val store = chunks
-      .withColumn("rn", row_number().over(ord)).filter(col("rn") === 1)
+    val store = flagFirst(chunks).filter(col("is_first"))
       .select(col("fp"), col("doc_id").as("src_doc"),
         col("off").as("src_off"), col("len").as("src_len"))
     chunks

@@ -1,32 +1,200 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.signatures.Sig
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Streamed run-length candidate-pair expansion from LSH bucket
   * postings — the ONE shape every dedup family (image minhash/phash/
   * winnowing, doc minhash/simhash/ngram/substring) uses for pair
-  * generation.
+  * generation, and the one home of its three pieces: the run-length
+  * loop over key-sorted postings ([[RunLengths]]), the CAP pair
+  * expander built on it ([[expand]]), and the signature-class rule
+  * (class → source bit, hamming gate).
   *
   * Why this shape: a `groupBy(band,bucket).agg(collect_list(id))`
   * formulation materializes each bucket's full member list in a single
   * aggregation buffer — object-aggregation fallback, unbounded per-key
   * memory, and measured ~170 s at 100k rows in round 1. Here the
-  * postings take ONE Tungsten sort shuffle (repartition on (band,bucket)
-  * + sortWithinPartitions) and pairs stream out of a linear scan over
-  * the sorted runs; the only buffer is the current bucket's member
-  * array, and hot buckets emit only star pairs (destor's CAP capping,
-  * reference: src/cap_rewrite.c:44-107 — bounded fan-in, connectivity
-  * preserved for connected-components clustering).
+  * postings take ONE Tungsten sort shuffle on a packed 64-bit key
+  * (repartition + sortWithinPartitions: a pure radix sort) and pairs
+  * stream out of a linear scan over the sorted runs; the only buffer is
+  * the current bucket's member array, and hot buckets emit only star
+  * pairs (destor's CAP capping, reference: src/cap_rewrite.c:44-107 —
+  * bounded fan-in, connectivity preserved for connected-components
+  * clustering).
+  *
+  * Posting rows are (key, id, payload) longs. The key's low two bits
+  * hold the signature CLASS; a key collision between two buckets of one
+  * class merely merges them — candidates only gain members and every
+  * caller verifies pairs exactly, so recall and correctness are
+  * unaffected.
   */
 object PairGen {
+
+  // source bit flags — a pair's srcmask is the bit-OR across every
+  // band it was seen in (a pair can be a candidate from several
+  // signature families; verify routes on the full set)
+  val SrcExact = 1
+  val SrcMinhash = 2
+  val SrcPhash = 4
+  val SrcSubstr = 8
+
+  /** Signature class (a packed key's low two bits) → source bit. */
+  private val ClassSrcbit = Array(SrcMinhash, SrcPhash, SrcSubstr, SrcExact)
+  /** The class whose buckets are hamming-LSH: members pair only when
+    * their payloads (phashes) are within hammingMax bits. */
+  private val HammingClass = 1
+
+  /** The class rule as columns, for the join-shaped pair paths (HAR
+    * star pairs, the cross-batch probe): the class's source bit, and
+    * the hamming gate between two payloads. */
+  def srcbitCol(cls: Column): Column =
+    ClassSrcbit.indices.tail.foldLeft(when(cls === 0, ClassSrcbit(0)))(
+      (c, i) => c.when(cls === i, ClassSrcbit(i)))
+
+  def hammingOk(cls: Column, a: Column, b: Column, hamMax: Int): Column =
+    cls =!= HammingClass || bit_count(a.bitwiseXOR(b)) <= hamMax
+
+  /** Repartition + sort a (key, ...) posting table on its key: the one
+    * posting shuffle. */
+  def sortByKey(postings: DataFrame): DataFrame =
+    postings.repartition(col("key")).sortWithinPartitions("key")
+
+  /** The one run-length loop over InternalRows sorted by the long key
+    * in field 0 (raw `queryExecution.toRdd` rows: zero allocation per
+    * posting). `member(row, i)` sees the i-th row of the current run as
+    * it streams by; `run(key, n)` is called once the run ends, and its
+    * output is drained before the next run's first `member` call, so a
+    * subclass may reuse its run buffers. Both are methods, not
+    * functions, so the primitive arguments are never boxed. */
+  private abstract class RunLengths[T](rows: Iterator[InternalRow]) extends Iterator[T] {
+    protected def member(row: InternalRow, i: Int): Unit = ()
+    protected def run(key: Long, n: Int): Iterator[T]
+
+    private var row: InternalRow = if (rows.hasNext) rows.next() else null
+    private var out: Iterator[T] = Iterator.empty
+
+    def hasNext: Boolean = {
+      while (!out.hasNext && row != null) {
+        val key = row.getLong(0)
+        var n = 0
+        while (row != null && row.getLong(0) == key) {
+          member(row, n)
+          n += 1
+          row = if (rows.hasNext) rows.next() else null
+        }
+        out = run(key, n)
+      }
+      out.hasNext
+    }
+
+    def next(): T =
+      if (hasNext) out.next() else throw new NoSuchElementException("end of runs")
+  }
+
+  /** Run-size histogram of one sorted partition: (size, runs). The
+    * obvious `groupBy(key).count` built a ~20M-entry BytesToBytesMap
+    * per task whose page allocations serialized every worker on the
+    * HeapMemoryAllocator pool lock at 32 threads (task-time sum 9 s →
+    * 374 s from 8 to 32 cores); this emits ~hundreds of rows per
+    * partition. */
+  def runHistogram(rows: Iterator[InternalRow]): Iterator[(Long, Long)] = {
+    val h = scala.collection.mutable.LongMap.empty[Long]
+    new RunLengths[Nothing](rows) {
+      protected def run(key: Long, n: Int): Iterator[Nothing] = {
+        h(n) = h.getOrElse(n, 0L) + 1L
+        Iterator.empty
+      }
+    }.foreach(_ => ())
+    h.iterator
+  }
+
+  /** Runs longer than `cap` as (key, n) — the HAR hot list, keyed on
+    * the same packed key the postings are partitioned on. */
+  def hotRuns(rows: Iterator[InternalRow], cap: Int): Iterator[(Long, Long)] =
+    new RunLengths[(Long, Long)](rows) {
+      protected def run(key: Long, n: Int): Iterator[(Long, Long)] =
+        if (n > cap) Iterator.single((key, n.toLong)) else Iterator.empty
+    }
+
+  /** CAP-capped pair expansion over one partition of (key, id, payload)
+    * rows sorted by key: all pairs (id1 < id2) for runs ≤ cap, star
+    * pairs to the min member above it (linear fan-in for hot buckets;
+    * the star keeps the bucket one connected component, which is all
+    * clustering needs). Hamming-class runs reject far pairs AT
+    * EMISSION, before they hit the pair-dedup shuffle (bucket key
+    * saturation makes random collisions ~n^2/keyspace at scale).
+    *
+    * Primitive long buffers: a `Dataset[(Long,Long,Long)]` form
+    * allocated a Tuple3 + three boxed Longs PER POSTING — ~10^8
+    * short-lived objects per scan at 400k images, and the resulting GC
+    * pauses stall all workers at once (measured 105-156 GC-seconds per
+    * scan stage at 32 threads). The only per-pair allocation left is
+    * the bounded output tuple. Over-cap (star) runs use a single min
+    * scan instead of a full sort — a hot bucket's member order is
+    * irrelevant when only (min → other) pairs are emitted. */
+  def expand(rows: Iterator[InternalRow], cap: Int, hamMax: Int): Iterator[(Long, Long, Int)] =
+    new Expander(rows, cap, hamMax)
+
+  private final class Expander(rows: Iterator[InternalRow], cap: Int, hamMax: Int)
+      extends RunLengths[(Long, Long, Int)](rows) {
+    private var m = new Array[Long](64)
+    private var p = new Array[Long](64)
+
+    override protected def member(row: InternalRow, i: Int): Unit = {
+      if (i == m.length) {
+        m = java.util.Arrays.copyOf(m, m.length * 2)
+        p = java.util.Arrays.copyOf(p, p.length * 2)
+      }
+      m(i) = row.getLong(1); p(i) = row.getLong(2)
+    }
+
+    protected def run(key: Long, len: Int): Iterator[(Long, Long, Int)] = {
+      if (len < 2) return Iterator.empty
+      val cls = (key & 3L).toInt
+      val sb = ClassSrcbit(cls)
+      val ham = cls == HammingClass
+      if (len <= cap) {
+        // primitive dual-array insertion sort (len is cap-bounded);
+        // canonical id1 < id2 within the bucket
+        var i = 1
+        while (i < len) {
+          val k = m(i); val pl = p(i); var j = i - 1
+          while (j >= 0 && m(j) > k) { m(j + 1) = m(j); p(j + 1) = p(j); j -= 1 }
+          m(j + 1) = k; p(j + 1) = pl; i += 1
+        }
+        for (i <- (0 until len).iterator; j <- (i + 1) until len
+             if !ham || Sig.hamming(p(i), p(j)) <= hamMax)
+          yield (m(i), m(j), sb)
+      } else {
+        var minI = 0; var i = 1
+        while (i < len) { if (m(i) < m(minI)) minI = i; i += 1 }
+        val mi = minI
+        (0 until len).iterator
+          .filter(j => j != mi && (!ham || Sig.hamming(p(mi), p(j)) <= hamMax))
+          .map(j => (m(mi), m(j), sb))
+      }
+    }
+  }
+
+  /** Raw candidate pairs (id1, id2, srcbit) of a key-sorted (key, id,
+    * payload) table (see [[sortByKey]]). */
+  def expandPairs(sorted: DataFrame, cap: Int, hamMax: Int): DataFrame = {
+    val spark = sorted.sparkSession
+    import spark.implicits._
+    spark.createDataFrame(sorted.queryExecution.toRdd.mapPartitions(expand(_, cap, hamMax)))
+      .toDF("id1", "id2", "srcbit")
+  }
 
   /** Generic run-length grouping over a partition iterator whose rows
     * arrive sorted by (band, bucket): for each maximal run of equal
     * keys, `emit(band, bucket, ids, payloads)` is invoked once with the
     * members in arrival (= sorted-id) order. The arrays passed to
     * `emit` are fresh copies, so `emit` may return a lazy iterator.
-    * Buffer is bounded by the largest single bucket.
+    * Buffer is bounded by the largest single bucket. (Not a pair
+    * expansion: EmbedOps.rerankTopK groups neighbor lists with it.)
     */
   def groupRuns[I, T](
       it: Iterator[(Int, Long, I, Long)],
@@ -64,43 +232,21 @@ object PairGen {
     }
   }
 
-  /** CAP-capped pair emission from one bucket's sorted member array:
-    * all pairs for buckets <= cap, star pairs to the min member above
-    * it (linear fan-in for hot buckets; the star keeps the bucket one
-    * connected component, which is all clustering needs).
-    */
-  def capPairs[I](members: Array[I], cap: Int): Iterator[(I, I)] =
-    if (members.length <= cap)
-      for (i <- members.indices.iterator; j <- (i + 1) until members.length)
-        yield (members(i), members(j))
-    else
-      (1 until members.length).iterator.map(j => (members(0), members(j)))
-
   /** Candidate pairs from a Long-id posting table with columns
-    * (band, bucket, doc_id) — the doc/embedding-side entry point.
-    * One sort shuffle + streamed expansion + cross-band pair dedup.
-    * `cap` = all-pairs threshold (CAP star-pairing above); pass
-    * Int.MaxValue for exact all-pairs semantics (oracled queries).
+    * (band, bucket, doc_id) — the doc/embedding-side entry point: the
+    * shared expander over `xxhash64(band, bucket)` (class bits cleared:
+    * one class, no hamming gate), then cross-band pair dedup. `cap` =
+    * all-pairs threshold (CAP star-pairing above); pass Int.MaxValue
+    * for exact all-pairs semantics (oracled queries).
     */
-  def bucketPairsLong(postings: DataFrame, cap: Int): DataFrame = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    // ONE packed 64-bit shuffle/sort key instead of (band,bucket,id):
-    // the Tungsten sort becomes a pure radix sort; member ids are
-    // sorted locally per run. A key collision between two (band,bucket)
-    // buckets merely merges them — candidates only gain members and
-    // every caller verifies pairs exactly, so recall and correctness
-    // are unaffected.
-    postings
-      .select(xxhash64(col("band"), col("bucket")).as("key"), col("doc_id").cast("long"))
-      .repartition(col("key"))
-      .sortWithinPartitions("key")
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        groupRuns[Long, (Long, Long)](it.map(r => (0, r._1, r._2, 0L)),
-          (_, _, ids, _) => { java.util.Arrays.sort(ids); capPairs(ids, cap) })
-      }
-      .toDF("id1", "id2")
+  def bucketPairsLong(postings: DataFrame, cap: Int): DataFrame =
+    expandPairs(
+      sortByKey(postings.select(
+        xxhash64(col("band"), col("bucket")).bitwiseAND(lit(-4L)).as("key"),
+        col("doc_id").cast("long")))
+        // payload added after the sort: it never rides the shuffle
+        .withColumn("payload", lit(0L)),
+      cap, 0)
+      .select("id1", "id2")
       .distinct()
-  }
 }

@@ -19,18 +19,22 @@ import org.apache.spark.sql.functions._
   *
   *  - HAR cross-run hot-bucket feedback (reference: src/har_rewrite.c:
   *    17-57 init_har reads the PREVIOUS backup's sparse-container list;
-  *    :173-219 rewrites their chunks immediately, without waiting for
-  *    this run's monitor): a run publishes its hot-bucket list; the next
-  *    run routes postings of inherited hot buckets through a broadcast
-  *    min-join star-pairing path that never enters the big posting sort
-  *    — the known-skewed keys are split out BEFORE the shuffle instead
-  *    of being discovered inside it.
+  *    :96-101 writes this backup's; :173-219 rewrites their chunks
+  *    immediately, without waiting for this run's monitor): a run
+  *    publishes its over-cap runs as (key, n) on the packed posting key
+  *    (PairGen.hotRuns); the next run routes postings of inherited keys
+  *    through a broadcast min-join star-pairing path that never enters
+  *    the big posting sort — the known-skewed keys are split out BEFORE
+  *    the shuffle instead of being discovered inside it
+  *    (DedupPipeline.candidatesSkewAware).
   *
-  * Cost model: `bucketSizes` is one map-side-combined aggregation over
-  * the posting table whose result has one row per DISTINCT bucket —
-  * at 10^12 rows its output is ~b·n/avg_bucket rows of 3 small columns,
-  * and it shares the scan with nothing else (runs before the pair
-  * shuffle). The quantile is a driver-side scalar over that aggregate.
+  * Cost model: the pipeline takes bucket sizes as the run lengths of
+  * its one posting sort (PairGen.runHistogram) and walks their
+  * histogram with `histogramQuantile`. `bucketSizes`/`adaptiveCap` are
+  * the same quantile from a plain map-side-combined aggregation over
+  * the posting table (one row per DISTINCT bucket — at 10^12 rows
+  * ~b·n/avg_bucket rows of 3 small columns): the reference SkewSpec
+  * checks the pipeline's cap against.
   */
 object SkewControl {
 
@@ -68,10 +72,4 @@ object SkewControl {
     }
     math.min(sorted.last._1, Int.MaxValue.toLong).toInt
   }
-
-  /** HAR hot list: buckets whose size exceeds the (adaptive) cap —
-    * published per run, inherited by the next (har_rewrite.c:96-101
-    * writes `bv<id>.sparse`; init_har reads `bv<id-1>.sparse`). */
-  def hotBuckets(sizes: DataFrame, cap: Int): DataFrame =
-    sizes.filter(col("n") > cap)
 }

@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.ops.ChunkOps
 import graft.signatures.Chunker
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** destor's consecutive-backup loop at chunk granularity — the
@@ -40,9 +39,7 @@ final class ChunkIngest(spark: SparkSession, workDir: String,
     * n_new/new_bytes actually stored, and dedup_ratio vs the store. */
   def ingest(docs: DataFrame, runId: String): DataFrame = {
     require(!ingested.contains(runId), s"batch $runId already ingested")
-    val ord = Window.partitionBy("fp").orderBy(col("doc_id"), col("chunk_idx"))
-    val chunks = ChunkOps.chunkDf(docs, algo, p)
-      .withColumn("is_first", row_number().over(ord) === 1)
+    val chunks = ChunkOps.flagFirst(ChunkOps.chunkDf(docs, algo, p))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val firsts = chunks.filter(col("is_first")).select("fp", "len")
     val novel =

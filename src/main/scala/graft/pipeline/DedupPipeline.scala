@@ -3,7 +3,9 @@ package graft.pipeline
 import graft.core._
 import graft.signatures.{Codec, Sig}
 import graft.cluster.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.ops.PairGen
+import graft.ops.PairGen.{SrcExact, SrcMinhash, SrcSubstr}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The near-duplicate detection + clustering pipeline — destor's backup
@@ -183,24 +185,27 @@ object DedupPipeline extends Serializable {
   }
 
   /** Stage 3 — candidate pair generation with explicit skew handling.
-    * ONE shuffle groups postings per (band,bucket); pairs are expanded
-    * locally from the member list — all-pairs for buckets <= bucketCap,
-    * star pairing to the min image_id above it (destor's CAP capping,
-    * src/cap_rewrite.c:44-107: bounded fan-in per bucket, connectivity
-    * preserved for clustering). Pair dedup across bands is the second
-    * shuffle. (The earlier sizes-join + self-join formulation computed
-    * the posting subtree twice and shuffled each pair row three times.)
+    * ONE shuffle groups postings per packed (band,bucket) key; pairs are
+    * expanded locally by PairGen's run-length expander — all-pairs for
+    * buckets <= bucketCap, star pairing to the min image_id above it
+    * (destor's CAP capping, src/cap_rewrite.c:44-107: bounded fan-in per
+    * bucket, connectivity preserved for clustering). Pair dedup across
+    * bands is the second shuffle. (The earlier sizes-join + self-join
+    * formulation computed the posting subtree twice and shuffled each
+    * pair row three times.)
     */
-  // source bit flags — srcmask is a bit-OR across all bands a pair was
-  // seen in (a pair can be a candidate from several signature families;
-  // verify routes on the full set, not a single label)
-  val SrcExact = 1
-  val SrcMinhash = 2
-  val SrcPhash = 4
-  val SrcSubstr = 8
-
   def candidates(bk: Dataset[BucketRow], cfg: DedupConfig): DataFrame =
-    finishCandidates(pairStream(bk, cfg, cfg.bucketCap))
+    finishCandidates(PairGen.expandPairs(
+      PairGen.sortByKey(keyed(bk.toDF())), cfg.bucketCap, cfg.hammingMax))
+
+  /** Signature class of a band: 0 minhash, 1 phash (hamming LSH),
+    * 2 substring, 3 exact — PairGen's class rule maps it to a source bit
+    * and the hamming gate. */
+  private[pipeline] def classCol(band: Column): Column =
+    when(band < BandPhash, 0L)
+      .when(band < BandSubstr, 1L)
+      .when(band < BandExactSha, 2L)
+      .otherwise(3L)
 
   // --- packed posting shuffle key: xxhash64(band,bucket) with the
   //     2-bit signature-CLASS index in the low bits. The hot-path
@@ -212,119 +217,14 @@ object DedupPipeline extends Serializable {
   //     gain members and verify is exact, so recall/correctness are
   //     unaffected (cross-class merges are impossible — the class bits
   //     differ). The Tungsten sort on the single long key is a pure
-  //     radix sort (zero comparator calls).
-  private val ClassSrcbit = Array(SrcMinhash, SrcPhash, SrcSubstr, SrcExact)
+  //     radix sort (zero comparator calls). The HAR hot list is keyed
+  //     on it too.
+  private[graft] def packedKeyCol: Column =
+    xxhash64(col("band"), col("bucket")).bitwiseAND(lit(-4L)).bitwiseOR(classCol(col("band")))
 
-  private def packedKeyCol: org.apache.spark.sql.Column = {
-    val cls =
-      when(col("band") < BandPhash, 0L)
-        .when(col("band") < BandSubstr, 1L)
-        .when(col("band") < BandExactSha, 2L)
-        .otherwise(3L)
-    xxhash64(col("band"), col("bucket")).bitwiseAND(lit(-4L)).bitwiseOR(cls)
-  }
-
-  /** Raw candidate pair stream (id1, id2, srcbit) from postings, with
-    * all-pairs ≤ `cap` / star-pairing above it. */
-  private[pipeline] def pairStream(bk: Dataset[BucketRow], cfg: DedupConfig, cap: Int): DataFrame = {
-    // Pair expansion WITHOUT building per-bucket lists: repartition on
-    // the packed key, sort within partitions, stream over runs of
-    // equal keys emitting pairs directly. A collect_list-based
-    // formulation spent ~170s at 100k rows just materializing 10M
-    // grouped lists (object-aggregation fallback); this is one Tungsten
-    // sort shuffle + a linear scan. Buffer is bounded by the largest
-    // bucket (hot buckets emit only star pairs, so the buffer is
-    // read-only after the cap).
-    val spark = bk.sparkSession
-    import spark.implicits._
-    spark.createDataFrame(
-      bk.select(packedKeyCol.as("key"), col("nid"), col("payload"))
-        .repartition(col("key"))
-        .sortWithinPartitions("key")
-        .queryExecution.toRdd
-        .mapPartitions(it => expandRows(it, cap, cfg.hammingMax)))
-      .toDF("id1", "id2", "srcbit")
-  }
-
-  /** CAP-capped pair expansion over one partition of (key, nid,
-    * payload) InternalRows sorted by key (class index in the key's low
-    * bits): all-pairs ≤ cap, star above. Hamming-LSH buckets reject far
-    * pairs AT EMISSION, before they hit the pair-dedup shuffle (bucket
-    * key saturation makes random collisions ~n^2/keyspace at scale).
-    *
-    * Iterates raw InternalRows (queryExecution.toRdd) with primitive
-    * long buffers: the previous `Dataset[(Long,Long,Long)]` form
-    * allocated a Tuple3 + three boxed Longs PER POSTING — ~10^8
-    * short-lived objects per scan at 400k images, and the resulting GC
-    * pauses stall all workers at once (measured 105-156 GC-seconds per
-    * scan stage at 32 threads). The only per-pair allocation left is
-    * the bounded output tuple. Over-cap (star) buckets use a single
-    * min scan instead of a full sort — a hot bucket's member order is
-    * irrelevant when only (min → other) pairs are emitted. */
-  private def expandRows(
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      cap: Int, hamMax: Int): Iterator[(Long, Long, Int)] = {
-    var idsA = new Array[Long](64)
-    var plsA = new Array[Long](64)
-    var n = 0
-    var cur = 0L
-    var open = false
-    def grow(): Unit = {
-      idsA = java.util.Arrays.copyOf(idsA, idsA.length * 2)
-      plsA = java.util.Arrays.copyOf(plsA, plsA.length * 2)
-    }
-    def flush(): Iterator[(Long, Long, Int)] = {
-      if (!open || n < 2) return Iterator.empty
-      val cls = (cur & 3L).toInt
-      val sb = ClassSrcbit(cls)
-      val ham = cls == 1
-      val len = n
-      val m = java.util.Arrays.copyOf(idsA, len)
-      val p = java.util.Arrays.copyOf(plsA, len)
-      if (len <= cap) {
-        // primitive dual-array insertion sort (len is cap-bounded);
-        // canonical id1 < id2 within the bucket
-        var i = 1
-        while (i < len) {
-          val k = m(i); val pl = p(i); var j = i - 1
-          while (j >= 0 && m(j) > k) { m(j + 1) = m(j); p(j + 1) = p(j); j -= 1 }
-          m(j + 1) = k; p(j + 1) = pl; i += 1
-        }
-        for (i <- (0 until len).iterator; j <- (i + 1) until len
-             if !ham || Sig.hamming(p(i), p(j)) <= hamMax)
-          yield (m(i), m(j), sb)
-      } else {
-        var minI = 0; var i = 1
-        while (i < len) { if (m(i) < m(minI)) minI = i; i += 1 }
-        val mi = minI
-        (0 until len).iterator
-          .filter(j => j != mi && (!ham || Sig.hamming(p(mi), p(j)) <= hamMax))
-          .map(j => (m(mi), m(j), sb))
-      }
-    }
-    val body = rows.flatMap { r =>
-      val k = r.getLong(0)
-      if (!open || k != cur) {
-        val out = flush()
-        open = true; cur = k; n = 0
-        idsA(0) = r.getLong(1); plsA(0) = r.getLong(2); n = 1
-        out
-      } else {
-        if (n == idsA.length) grow()
-        idsA(n) = r.getLong(1); plsA(n) = r.getLong(2); n += 1
-        Iterator.empty
-      }
-    }
-    body ++ new Iterator[(Long, Long, Int)] {
-      private var tail: Iterator[(Long, Long, Int)] = null
-      private def t: Iterator[(Long, Long, Int)] = {
-        if (tail == null) tail = flush()
-        tail
-      }
-      def hasNext: Boolean = t.hasNext
-      def next(): (Long, Long, Int) = t.next()
-    }
-  }
+  /** Postings as PairGen's (key, nid, payload) rows. */
+  private def keyed(bk: DataFrame): DataFrame =
+    bk.select(packedKeyCol.as("key"), col("nid"), col("payload"))
 
   /** Cross-band pair dedup + provenance: bit-OR the source bits of every
     * band a pair was seen in, label with the strongest evidence class. */
@@ -343,10 +243,10 @@ object DedupPipeline extends Serializable {
           .otherwise("phash"))
 
   /** Skew-aware candidate generation result: the candidate pairs, this
-    * run's hot-bucket list (HAR state for the NEXT run), the CBR-derived
-    * effective cap, and a cleanup thunk that drops the internal
-    * bucket-size cache — call AFTER pairs and hotBuckets have been
-    * materialized. */
+    * run's hot list as (key, n) on the packed posting key (HAR state for
+    * the NEXT run), the CBR-derived effective cap, and a cleanup thunk
+    * that drops the internal posting caches — call AFTER pairs and
+    * hotBuckets have been materialized. */
   final case class SkewAwareCandidates(
       pairs: DataFrame, hotBuckets: DataFrame, capUsed: Int, cleanup: () => Unit)
 
@@ -355,33 +255,36 @@ object DedupPipeline extends Serializable {
     *    sizes, floored at cfg.bucketCap — a shifted bucket-size
     *    distribution re-derives the cap instead of star-pairing the
     *    bulk of the corpus;
-    *  - HAR: postings of `inheritedHot` buckets (the previous run's
-    *    published hot list) bypass the big posting sort entirely — star
-    *    pairs come from a broadcast min-per-bucket join, so known-skewed
-    *    keys never land on one sort partition.
-    * The pair SET is identical to the non-HAR path for the same cap
-    * (star pairs to the same per-bucket min member); only the physical
-    * plan for hot keys changes.
+    *  - HAR: postings of `inheritedHot` keys (the previous run's
+    *    published (key, n) list) bypass the big posting sort entirely —
+    *    star pairs come from a broadcast min-per-key join, so known-
+    *    skewed keys never land on one sort partition.
+    * Inherited keys' sizes count in the CBR histogram and runs are
+    * keyed on the packed key on every path, so the cap and the pair SET
+    * are the non-HAR path's (star pairs to the same per-key min member),
+    * colliding keys included; only the physical plan for hot keys
+    * changes.
     */
   def candidatesSkewAware(
       bk: Dataset[BucketRow],
       cfg: DedupConfig,
       inheritedHot: Option[DataFrame] = None): SkewAwareCandidates = {
-    import graft.ops.SkewControl
     val spark = bk.sparkSession
     import spark.implicits._
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val posts = keyed(bk.toDF())
 
     // HAR: split the inherited keys out BEFORE the posting shuffle — the
     // whole point is that known-skewed keys never land on one sort
     // partition (destor equally acts on the inherited sparse list
-    // up-front, har_rewrite.c:186-201)
-    val (coldRaw, hotRaw) = inheritedHot match {
+    // up-front, har_rewrite.c:186-201). One broadcast semi/anti-join on
+    // the packed key.
+    val (cold, hotPosts) = inheritedHot match {
       case Some(hot) if !hot.isEmpty =>
-        val hotKeys = hot.select("band", "bucket").distinct()
-        (bk.toDF().join(broadcast(hotKeys), Seq("band", "bucket"), "left_anti"),
-          Some(bk.toDF().join(broadcast(hotKeys), Seq("band", "bucket"))))
-      case _ => (bk.toDF(), None)
+        val hotKeys = broadcast(hot.select("key").distinct())
+        (posts.join(hotKeys, Seq("key"), "left_anti"),
+          Some(posts.join(hotKeys, Seq("key"), "left_semi")))
+      case _ => (posts, None)
     }
 
     // THE posting shuffle — one repartition+radix-sort, PERSISTED so the
@@ -389,127 +292,63 @@ object DedupPipeline extends Serializable {
     // exchange instead of shuffling the postings twice (round-2 interim
     // version paid a second full groupBy shuffle + a percentile sketch
     // for the cap; both replaced by a local run-length scan + an exact
-    // histogram quantile). The row is the packed 32-byte (key, nid,
-    // payload) — band/bucket for the (tiny) hot list are recovered by a
-    // broadcast join-back below instead of riding the big shuffle.
-    val sorted = coldRaw
-      .select(packedKeyCol.as("key"), col("nid"), col("payload"))
-      .repartition(col("key"))
-      .sortWithinPartitions("key")
-      .persist(lvl)
+    // histogram quantile).
+    val sorted = PairGen.sortByKey(cold).persist(lvl)
+    def scanKeys(f: Iterator[org.apache.spark.sql.catalyst.InternalRow] => Iterator[(Long, Long)]) =
+      spark.createDataFrame(sorted.select(col("key")).queryExecution.toRdd.mapPartitions(f))
 
-    // bucket-size HISTOGRAM via a run-length scan of the cached sort
-    // (materializes the cache): the cache is partitioned AND sorted by
-    // `key`, so bucket sizes are run lengths — no per-key state needed.
-    // The obvious `groupBy(key).count` formulation built a ~20M-entry
-    // BytesToBytesMap per task whose page allocations serialized every
-    // worker on the HeapMemoryAllocator pool lock at 32 threads
-    // (jstack: all executor threads RUNNABLE in allocate(); the stage's
-    // task-time sum inflated 9 s → 374 s from 8 to 32 cores). The scan
-    // iterates raw InternalRows (zero per-posting allocation — see
-    // expandRows for why that matters at 32 threads) and emits
-    // ~hundreds of (size, count) rows per partition — the driver
-    // quantile walk is unchanged.
-    val histRows = spark.createDataFrame(
-      sorted.select(col("key")).queryExecution.toRdd
-        .mapPartitions { it =>
-          val h = scala.collection.mutable.LongMap.empty[Long]
-          var cur = 0L; var n = 0L; var open = false
-          while (it.hasNext) {
-            val k = it.next().getLong(0)
-            if (open && k == cur) n += 1
-            else {
-              if (open) h(n) = h.getOrElse(n, 0L) + 1L
-              cur = k; n = 1L; open = true
-            }
-          }
-          if (open) h(n) = h.getOrElse(n, 0L) + 1L
-          h.iterator
-        })
-      .toDF("n", "cnt")
-    val hist = histRows.groupBy("n").agg(sum("cnt").as("count")).collect()
+    // per-inherited-key (min member, size) from a partial aggregation —
+    // tiny (one row per inherited key), persisted for its four consumers
+    // (cap, star join, shrink re-route, hot list)
+    val minPer = hotPosts.map(_.groupBy("key")
+      .agg(min(struct(col("nid"), col("payload"))).as("m"), count(lit(1)).as("n"))
+      .persist(lvl))
+
+    // bucket-size HISTOGRAM from the run lengths of the cached sort
+    // (materializes the cache): sizes are run lengths — no per-key state.
+    // Inherited keys' sizes count too, so the cap (and the pair set) is
+    // the non-HAR path's.
+    val hist = scanKeys(PairGen.runHistogram).toDF("n", "cnt")
+      .groupBy("n").agg(sum("cnt").as("count")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
+    val hotHist = minPer.fold(Array.empty[(Long, Long)])(_.groupBy("n").count().as[(Long, Long)].collect())
     val cap = math.max(cfg.bucketCap,
-      SkewControl.histogramQuantile(hist, cfg.skewQuantile))
-    val anyColdHot = hist.exists { case (n, _) => n > cap }
+      graft.ops.SkewControl.histogramQuantile(hist ++ hotHist, cfg.skewQuantile))
 
     // pair expansion: second LOCAL scan of the same cache
-    val coldPairs = spark.createDataFrame(
-      sorted.queryExecution.toRdd
-        .mapPartitions(it => expandRows(it, cap, cfg.hammingMax)))
-      .toDF("id1", "id2", "srcbit")
+    val coldPairs = PairGen.expandPairs(sorted, cap, cfg.hammingMax)
 
-    // hot-list recovery: the packed key is one-way, so real (band,
-    // bucket) for this run's hot buckets (HAR publish) come from a
-    // broadcast semi-join of the hot keys (a second run-length scan,
-    // emitting only over-cap runs — tiny) against a narrow re-scan of
-    // the posting source; runs only when the histogram saw any over-cap
-    // bucket (rare by construction: cap is the skewQuantile tail).
+    // this run's over-cap keys ARE the list to publish: a third local
+    // scan, emitting only over-cap runs (tiny), and only when the
+    // histogram saw one (rare by construction: cap is the skewQuantile
+    // tail)
     val coldHot =
-      if (anyColdHot) {
-        val hotKeys = spark.createDataFrame(
-          sorted.select(col("key")).queryExecution.toRdd
-            .mapPartitions { it =>
-              val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-              var cur = 0L; var n = 0L; var open = false
-              while (it.hasNext) {
-                val k = it.next().getLong(0)
-                if (open && k == cur) n += 1
-                else {
-                  if (open && n > cap) out += ((cur, n))
-                  cur = k; n = 1L; open = true
-                }
-              }
-              if (open && n > cap) out += ((cur, n))
-              out.iterator
-            })
-          .toDF("key", "n")
-        coldRaw
-          .select(col("band"), col("bucket"), packedKeyCol.as("key"))
-          .join(broadcast(hotKeys), "key")
-          .groupBy("band", "bucket").agg(max("n").as("n"))
-      } else coldRaw.select(col("band"), col("bucket"), lit(0L).as("n")).limit(0)
+      if (hist.exists { case (n, _) => n > cap })
+        scanKeys(PairGen.hotRuns(_, cap)).toDF("key", "n")
+      else spark.emptyDataset[(Long, Long)].toDF("key", "n")
 
-    val (raw, hotSizes, cleanupHot) = hotRaw match {
-      case Some(hp) =>
-        // per-bucket (min member, size) from a partial aggregation —
-        // tiny (one row per inherited bucket), persisted for its three
-        // consumers (star join, shrink re-route, hot list)
-        val minPer = hp.groupBy("band", "bucket")
-          .agg(min(struct(col("nid"), col("payload"))).as("m"),
-            count(lit(1)).as("n"))
-          .persist(lvl)
-        val srcbitCol =
-          when(col("band") < BandPhash, SrcMinhash)
-            .when(col("band") < BandSubstr, SrcPhash)
-            .when(col("band") < BandExactSha, SrcSubstr)
-            .otherwise(SrcExact)
-        val hamOk = when(
-          col("band") >= BandPhash && col("band") < BandSubstr,
-          expr(s"bit_count(payload ^ m.payload) <= ${cfg.hammingMax}")).otherwise(lit(true))
+    hotPosts.zip(minPer) match {
+      case Some((hp, minPer)) =>
+        val cls = col("key").bitwiseAND(3L)
         // still-hot inherited keys: star pairs via broadcast min-join
         val starred = hp
-          .join(broadcast(minPer.filter(col("n") > cap)), Seq("band", "bucket"))
+          .join(broadcast(minPer.filter(col("n") > cap)), "key")
           .filter(col("nid") =!= col("m.nid"))
-          .filter(hamOk)
-          .select(col("m.nid").as("id1"), col("nid").as("id2"),
-            srcbitCol.as("srcbit"))
+          .filter(PairGen.hammingOk(cls, col("payload"), col("m.payload"), cfg.hammingMax))
+          .select(col("m.nid").as("id1"), col("nid").as("id2"), PairGen.srcbitCol(cls).as("srcbit"))
         // inherited keys that SHRANK below the cap must be all-paired —
         // re-routed through a (tiny) expander pass so the pair set stays
         // exactly the non-HAR path's
-        val backKeys = minPer.filter(col("n") <= cap).select("band", "bucket")
-        val backPairs = pairStream(
-          hp.join(broadcast(backKeys), Seq("band", "bucket")).as[BucketRow], cfg, cap)
-        (coldPairs.union(starred).union(backPairs),
-          minPer.select(col("band"), col("bucket"), col("n")),
-          () => { minPer.unpersist(blocking = false); () })
+        val backPairs = PairGen.expandPairs(PairGen.sortByKey(
+          hp.join(broadcast(minPer.filter(col("n") <= cap).select("key")), Seq("key"), "left_semi")),
+          cap, cfg.hammingMax)
+        SkewAwareCandidates(finishCandidates(coldPairs.union(starred).union(backPairs)),
+          coldHot.union(minPer.filter(col("n") > cap).select("key", "n")), cap,
+          () => { sorted.unpersist(blocking = false); minPer.unpersist(blocking = false); () })
       case None =>
-        (coldPairs, coldHot.limit(0), () => ())
+        SkewAwareCandidates(finishCandidates(coldPairs), coldHot, cap,
+          () => { sorted.unpersist(blocking = false); () })
     }
-
-    val hotNow = coldHot.unionByName(SkewControl.hotBuckets(hotSizes, cap))
-    SkewAwareCandidates(finishCandidates(raw), hotNow, cap,
-      () => { sorted.unpersist(blocking = false); cleanupHot(); () })
   }
 
   /** Stage 4 — verification with the EXACT oracle predicates (same
@@ -711,15 +550,21 @@ object DedupPipeline extends Serializable {
       images: DataFrame,
       verified: Dataset[VerifiedPair],
       edgeCountHint: Option[Long] = None): Dataset[ClusterRow] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    val vertices = images.select(col("image_id").as("id"))
-    val edges = verified.select(col("id1").as("src"), col("id2").as("dst"))
-    ConnectedComponents.run(spark, vertices, edges, edgeCountHint = edgeCountHint)
-      .select(col("id").as("image_id"), col("component").as("cluster_id"),
-        (col("id") === col("component")).as("representative"))
+    import images.sparkSession.implicits._
+    assign(images, verified.select(col("id1").as("src"), col("id2").as("dst")), edgeCountHint)
       .as[ClusterRow]
   }
+
+  /** Cluster assignment (image_id, cluster_id, representative) of the
+    * `image_id` vertices under (src, dst) edges — the one projection of
+    * connected components that every clustering caller (one-shot,
+    * ingest, retention) publishes. */
+  private[pipeline] def assign(vertices: DataFrame, edges: DataFrame,
+      edgeCountHint: Option[Long] = None): DataFrame =
+    ConnectedComponents.run(vertices.sparkSession, vertices.select(col("image_id").as("id")),
+        edges, edgeCountHint = edgeCountHint)
+      .select(col("id").as("image_id"), col("component").as("cluster_id"),
+        (col("id") === col("component")).as("representative"))
 
   /** Signatures → postings → lean candidates → verify, in memory: the
     * verified pairs, the candidate-pair count (CC partitioner hint) and

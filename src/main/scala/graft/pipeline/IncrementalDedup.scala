@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core._
+import graft.ops.PairGen
 import graft.signatures.Sig
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -29,7 +30,8 @@ import org.json4s.jackson.Serialization
   *                   retention-time cluster recompute)
   *   clusters_current  latest full cluster assignment (overwritten per
   *                   ingest)
-  *   har_hot_buckets  the previous ingest's hot-bucket list (HAR)
+  *   har_hot_buckets  the previous ingest's hot-bucket list (HAR): (key,
+  *                   n) on the packed posting key
   *
   * Stages and resume (north_rule; destor's known weakness — a crash
   * means a full rebuild, README.md:147-149 — is what per-stage commits
@@ -168,11 +170,9 @@ final class IncrementalDedup(
     //    copy so republishing it can't invalidate the plan) plus the
     //    cross-batch probe of the new postings against the stored index
     val cand = stage("candidate_pairs", CandStore) {
-      val inheritedHot =
-        if (io.exists(HarTable)) Some(io.readMaterialized(HarTable)).filterNot(_.isEmpty)
-        else None
+      val inheritedHot = inheritedHotList()
       val sk = DedupPipeline.candidatesSkewAware(newPost, cfg, inheritedHot)
-      val (crossRaw, probeCleanup) = crossPairs(newPost)
+      val (crossRaw, probeCleanup) = crossPairs(newPost, io.batchRowCount(PostStore, runId))
       // one cross-source pair dedup: srcmask = bit_or over within + cross
       Staged(DedupPipeline.finishCandidates(
           sk.pairs.select(col("id1"), col("id2"), col("srcmask").as("srcbit"))
@@ -185,7 +185,7 @@ final class IncrementalDedup(
           sk.cleanup()
           probeCleanup()
           Map("cap_used" -> sk.capUsed.toDouble,
-            "har_inherited_buckets" -> inheritedHot.map(_.collect().length.toDouble).getOrElse(0.0))
+            "har_inherited_buckets" -> inheritedHot.fold(0.0)(_.collect().length.toDouble))
         })
     }
 
@@ -227,12 +227,9 @@ final class IncrementalDedup(
             .filter(col("image_id") =!= col("cluster_id"))
             .select(col("image_id").as("src"), col("cluster_id").as("dst"))
         else io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
-      val assign = graft.cluster.ConnectedComponents.run(spark,
-          allImages.select(col("image_id").as("id")),
-          newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges))
-        .select(col("id").as("image_id"), col("component").as("cluster_id"),
-          (col("id") === col("component")).as("representative"))
-      io.publish(assign, ClustersTable, key, runId)
+      io.publish(DedupPipeline.assign(allImages,
+          newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges)),
+        ClustersTable, key, runId)
     }
     val clusterFiles = io.fileCounts(ClustersTable).map(_._2)
     records += StageRecord("clusters", clustersResumed, clusterFiles.sum,
@@ -248,9 +245,22 @@ final class IncrementalDedup(
     io.read(ClustersTable)
   }
 
+  /** The previous ingest's HAR hot list as a driver-local copy (so
+    * republishing it can't invalidate a plan over it), or None when it
+    * is absent or empty — checked from its footers, so an empty list
+    * costs no job — or a pre-(key, n) list of an older store (HAR only
+    * routes work, so ignoring it never changes the pair set). */
+  private def inheritedHotList(): Option[DataFrame] =
+    Some(HarTable)
+      .filter(t => io.exists(t) && io.fileCounts(t).exists(_._2 > 0) &&
+        io.read(t).columns.contains("key"))
+      .map(io.readMaterialized)
+
   /** Cross-batch probe: new postings vs the stored index, as raw
-    * (id1, id2, srcbit) pairs, plus a cleanup for its cached key set. */
-  private def crossPairs(newPost: Dataset[BucketRow]): (DataFrame, () => Unit) = {
+    * (id1, id2, srcbit) pairs, plus a cleanup for its cached key set.
+    * `nPostings` (the staged batch's footer row count) bounds the number
+    * of distinct new keys and sizes the Bloom filter without a job. */
+  private def crossPairs(newPost: Dataset[BucketRow], nPostings: Long): (DataFrame, () => Unit) = {
     import spark.implicits._
     if (!io.hasBatches(PostStore))
       return (spark.emptyDataset[(Long, Long, Int)].toDF("id1", "id2", "srcbit"), () => ())
@@ -264,9 +274,8 @@ final class IncrementalDedup(
     // every stored posting pays the exchange; with it only (touched +
     // fpp * rest) do. False positives are removed by the equi-join; no
     // false negatives.
-    val nKeys = newKeys.count()
     val bloom = newKeys.stat.bloomFilter(
-      xxhash64(col("band"), col("bucket")), math.max(nKeys, 1L), cfg.bloomFpp)
+      xxhash64(col("band"), col("bucket")), math.max(nPostings, 1L), cfg.bloomFpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((k: Long) => bloomBc.value.mightContainLong(k))
     // store-side prune: bloom first (narrow, pre-shuffle), then the
@@ -282,21 +291,14 @@ final class IncrementalDedup(
       .filter(col("rk") <= cfg.indexValueLength)
       .select(col("band"), col("bucket"),
         col("nid").as("old_id"), col("payload").as("old_payload"))
-    val srcbitCol =
-      when(col("band") < DedupPipeline.BandPhash, DedupPipeline.SrcMinhash)
-        .when(col("band") < DedupPipeline.BandSubstr, DedupPipeline.SrcPhash)
-        .when(col("band") < DedupPipeline.BandExactSha, DedupPipeline.SrcSubstr)
-        .otherwise(DedupPipeline.SrcExact)
-    val hamOk = when(
-      col("band") >= DedupPipeline.BandPhash && col("band") < DedupPipeline.BandSubstr,
-      expr(s"bit_count(payload ^ old_payload) <= ${cfg.hammingMax}")).otherwise(lit(true))
+    val cls = DedupPipeline.classCol(col("band"))
     val pairs = newPost.toDF().join(capped, Seq("band", "bucket"))
       .filter(col("nid") =!= col("old_id"))
-      .filter(hamOk)
+      .filter(PairGen.hammingOk(cls, col("payload"), col("old_payload"), cfg.hammingMax))
       .select(
         least(col("nid"), col("old_id")).as("id1"),
         greatest(col("nid"), col("old_id")).as("id2"),
-        srcbitCol.as("srcbit"))
+        PairGen.srcbitCol(cls).as("srcbit"))
     (pairs, () => { newKeys.unpersist(blocking = false); () })
   }
 }

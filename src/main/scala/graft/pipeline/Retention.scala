@@ -88,13 +88,9 @@ final class Retention(
         if (io.hasBatches(EdgeStore))
           io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
         else surviving.limit(0).select(col("image_id").as("src"), col("image_id").as("dst"))
-      val assign = graft.cluster.ConnectedComponents.run(
-          spark, surviving.select(col("image_id").as("id")), edges)
-        .select(col("id").as("image_id"), col("component").as("cluster_id"),
-          (col("id") === col("component")).as("representative"))
       // published as of the newest surviving batch: ingest trusts an
       // assignment only when it names the last committed batch
-      io.publish(assign, ClustersTable, cfg.configHash,
+      io.publish(DedupPipeline.assign(surviving, edges), ClustersTable, cfg.configHash,
         io.batches(SigStore).lastOption.getOrElse(gcRunId))
     } else if (io.exists(ClustersTable)) {
       io.drop(ClustersTable)

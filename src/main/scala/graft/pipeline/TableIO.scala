@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Iceberg DDL when those jars are available (none ship in this
   * sandbox — SURVEY.md §7.1):
   *
-  *  - publish/publishWithFiles  → CREATE OR REPLACE TABLE ... AS
+  *  - publish                   → CREATE OR REPLACE TABLE ... AS
   *                                (atomic snapshot swap); the config
   *                                hash rides a snapshot property
-  *  - isPublished/exists/tables → catalog lookup + snapshot property
+  *  - isPublished/exists        → catalog lookup + snapshot property
   *  - appendBatch               → an append commit (one snapshot),
   *                                runId as a snapshot/partition tag
   *  - stageBatch/commitBatch    → write-audit-publish: a staged
@@ -39,8 +39,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
 trait TableBackend {
   def fileCounts(table: String): Seq[(String, Long)]
   def publish(df: DataFrame, table: String, configHash: String, runId: String): Long
-  def publishWithFiles(df: DataFrame, table: String, configHash: String,
-      runId: String): (Long, Seq[(String, Long)])
   def isPublished(table: String, configHash: String): Boolean
   def publishedBy(table: String): Option[String]
   def read(table: String): DataFrame
@@ -69,7 +67,6 @@ trait TableBackend {
   def gcOrphans(): Seq[String]
   def exists(table: String): Boolean
   def drop(table: String): Unit
-  def tables(): Seq[String]
 }
 
 /** Atomic table publish on any Hadoop FileSystem — the parquet+manifest
@@ -151,13 +148,9 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   def fileCounts(table: String): Seq[(String, Long)] =
     footerCounts(tablePath(table))
 
-  def publish(df: DataFrame, table: String, configHash: String, runId: String): Long =
-    publishWithFiles(df, table, configHash, runId)._1
-
-  /** Publish and return (total rows, per-file row counts) — the
-    * per-file counts feed the lineage table without re-scanning. */
-  def publishWithFiles(df: DataFrame, table: String, configHash: String,
-      runId: String): (Long, Seq[(String, Long)]) = {
+  /** Publish and return the rows written (parquet footers — no
+    * re-scan). */
+  def publish(df: DataFrame, table: String, configHash: String, runId: String): Long = {
     val f = fs
     val tmp = new Path(baseDir, s"$table.tmp-$runId")
     f.delete(tmp, true)
@@ -166,11 +159,10 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     f.delete(dest, true)
     if (!f.rename(tmp, dest))
       throw new java.io.IOException(s"atomic publish failed: $tmp -> $dest")
-    val files = fileCounts(table)
-    val rows = files.map(_._2).sum
+    val rows = fileCounts(table).map(_._2).sum
     writeText(manifestPath(table),
       s"""{"table":"$table","rows":$rows,"config_hash":"$configHash","run_id":"$runId","ts":${System.currentTimeMillis()}}""")
-    (rows, files)
+    rows
   }
 
   /** True iff the table was fully published under the SAME config —
@@ -337,15 +329,4 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   def exists(table: String): Boolean = fs.exists(manifestPath(table))
 
   def drop(table: String): Unit = fs.delete(tablePath(table), true)
-
-  /** List published tables under the base dir (those with a manifest). */
-  def tables(): Seq[String] = {
-    val f = fs
-    val base = new Path(baseDir)
-    if (!f.exists(base)) return Seq.empty
-    f.listStatus(base).toSeq
-      .filter(s => s.isDirectory && f.exists(new Path(s.getPath, "_MANIFEST.json")))
-      .map(_.getPath.getName)
-      .sorted
-  }
 }

@@ -151,6 +151,50 @@ class IncrementalSpec extends AnyFunSuite {
     corpus.unpersist(); sigs.unpersist()
   }
 
+  test("HAR through ingest: batch 2 inherits batch 1's hot keys and clusters as without the list") {
+    // cap = max(2, median bucket size) = 2: batch A's dup-group and
+    // boilerplate buckets are over the cap, so A publishes a hot list
+    val cfgHot = cfg.copy(bucketCap = 2, skewQuantile = 0.5)
+    val corpus = CorpusGen.generate(spark, 16).cache()
+    val idNum = substring(col("image_id"), 4, 10).cast("long")
+    val batchA = corpus.filter(idNum % 2 === 0).cache()
+    val batchB = corpus.filter(idNum % 2 === 1).cache()
+    def clustersOf(inc: IncrementalDedup) = inc.clusters.select("image_id", "cluster_id", "representative")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).sorted.toSeq
+    def candStage(inc: IncrementalDedup) = inc.record("r2").get.stages.find(_.stage == "candidate_pairs").get
+    def inherited(inc: IncrementalDedup) = candStage(inc).counters("har_inherited_buckets")
+    // batch 2's pair set (candidate count, cap) and verified edges
+    def pairsOf(inc: IncrementalDedup) = (candStage(inc).rows, candStage(inc).counters("cap_used"),
+      inc.io.readBatch(IncrementalDedup.EdgeStore, "r2").collect().map(_.mkString("|")).sorted.toSeq)
+
+    /** Ingest A, then `between` the two ingests, then B. */
+    def twoIngests(between: IncrementalDedup => Unit): IncrementalDedup = {
+      val inc = new IncrementalDedup(spark, Files.createTempDirectory("graft-incr-har").toString, cfgHot)
+      inc.ingest(batchA, "r1")
+      between(inc)
+      inc.ingest(batchB, "r2")
+      inc
+    }
+
+    val har = twoIngests { inc =>
+      val hot = inc.io.read(IncrementalDedup.HarTable)
+      assert(hot.columns.toSeq == Seq("key", "n"))
+      assert(hot.count() > 0, "batch A published no hot key")
+    }
+    assert(inherited(har) > 0)
+    val plain = twoIngests(_.io.drop(IncrementalDedup.HarTable))
+    assert(inherited(plain) == 0)
+    assert(pairsOf(har) == pairsOf(plain))
+    assert(clustersOf(har) == clustersOf(plain))
+    // a (band, bucket, n) list left by an older store counts as no list
+    val old = twoIngests(_.io.publish(Seq((0, 7L, 9L)).toDF("band", "bucket", "n"),
+      IncrementalDedup.HarTable, cfgHot.configHash, "r1"))
+    assert(inherited(old) == 0)
+    assert(pairsOf(old) == pairsOf(plain) && clustersOf(old) == clustersOf(plain))
+
+    corpus.unpersist(); batchA.unpersist(); batchB.unpersist()
+  }
+
   test("re-ingesting a committed batch id is rejected") {
     val dir = Files.createTempDirectory("graft-incr-dup").toString
     val inc = new IncrementalDedup(spark, dir, cfg)

@@ -22,6 +22,11 @@ class SkewSpec extends AnyFunSuite {
       (0 until n).map(i => BucketRow(0, b.toLong * 1000003L, b.toLong * 100000 + i))
     }
 
+  /** A hand-built HAR hot list: (band, bucket, n) → (key, n) on the
+    * packed posting key, the published list's schema. */
+  private def hotList(buckets: Seq[(Int, Long, Long)]) =
+    buckets.toDF("band", "bucket", "n").select(DedupPipeline.packedKeyCol.as("key"), $"n")
+
   test("CBR: shifted bucket-size distribution re-derives the cap (knob not dead)") {
     // a corpus whose TYPICAL bucket has 100 members — above the static
     // floor of 64 — plus one mega-bucket outlier
@@ -68,6 +73,22 @@ class SkewSpec extends AnyFunSuite {
     base.cleanup(); har.cleanup()
   }
 
+  test("HAR: inherited keys still count in the CBR cap (pair set and cap unchanged)") {
+    // 2 of 102 buckets hold 5 members: the 0.99-quantile cap over ALL
+    // sizes is 5, so they are all-paired; a cap taken over the cold
+    // sizes alone (singletons) would fall to the floor and star them
+    val bk = spark.createDataset(postings(Seq.fill(100)(1) ++ Seq(5, 5)))
+    val cfgLow = cfg.copy(bucketCap = 2)
+    val base = DedupPipeline.candidatesSkewAware(bk, cfgLow, None)
+    val har = DedupPipeline.candidatesSkewAware(bk, cfgLow,
+      Some(hotList(Seq((0, 100L * 1000003L, 9L), (0, 101L * 1000003L, 9L)))))
+    def pairs(sk: DedupPipeline.SkewAwareCandidates) =
+      sk.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)].collect().toSet
+    assert(base.capUsed == 5 && har.capUsed == 5)
+    assert(pairs(har) == pairs(base) && pairs(base).size == 20)
+    base.cleanup(); har.cleanup()
+  }
+
   test("HAR: hamming-LSH hot bucket still rejects far members at emission") {
     // phash band id => hamming semantics; payloads: 3 near the min, 2 far.
     // 200 singleton buckets keep the adaptive cap at the static floor
@@ -80,7 +101,7 @@ class SkewSpec extends AnyFunSuite {
     val filler = (0 until 200).map(i => BucketRow(0, 500L + i, 900000L + i))
     val bk = spark.createDataset(
       members.map { case (id, p) => BucketRow(band, 7L, id, p) } ++ filler)
-    val hot = Seq((band, 7L, 5L)).toDF("band", "bucket", "n")
+    val hot = hotList(Seq((band, 7L, 5L)))
     val har = DedupPipeline.candidatesSkewAware(bk, cfgSmall, Some(hot))
     assert(har.capUsed == 4)
     val pairs = har.pairs.select("id1", "id2").as[(Long, Long)].collect().toSet
@@ -96,7 +117,7 @@ class SkewSpec extends AnyFunSuite {
     val filler = (0 until 200).map(i => BucketRow(0, 500L + i, 900000L + i))
     val bk = spark.createDataset(
       Seq(1L, 2L, 3L).map(id => BucketRow(0, 7L, id)) ++ filler)
-    val hot = Seq((0, 7L, 999L)).toDF("band", "bucket", "n")
+    val hot = hotList(Seq((0, 7L, 999L)))
     val har = DedupPipeline.candidatesSkewAware(bk, cfg, Some(hot))
     val pairs = har.pairs.select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)))
@@ -113,7 +134,7 @@ class SkewSpec extends AnyFunSuite {
     val bk = DedupPipeline.buckets(sigs, cfg)
     // inherit a FABRICATED hot list naming real buckets: result must
     // not change (only the physical path for those keys does)
-    val someBuckets = bk.toDF().groupBy("band", "bucket")
+    val someBuckets = bk.toDF().groupBy(DedupPipeline.packedKeyCol.as("key"))
       .count().withColumnRenamed("count", "n").limit(20)
     val sk = DedupPipeline.candidatesSkewAware(bk, cfg,
       Some(someBuckets.cache()))

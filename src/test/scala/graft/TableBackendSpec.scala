@@ -33,13 +33,10 @@ class TableBackendSpec extends AnyFunSuite {
 
     def fileCounts(table: String): Seq[(String, Long)] =
       Seq("mem-0" -> tbl(table).rows.size.toLong)
-    def publish(d: DataFrame, table: String, configHash: String, runId: String): Long =
-      publishWithFiles(d, table, configHash, runId)._1
-    def publishWithFiles(d: DataFrame, table: String, configHash: String,
-        runId: String): (Long, Seq[(String, Long)]) = {
+    def publish(d: DataFrame, table: String, configHash: String, runId: String): Long = {
       val rows = d.collect().toSeq
       tbl(table) = Tbl(d.schema, rows, configHash, runId)
-      (rows.size.toLong, Seq("mem-0" -> rows.size.toLong))
+      rows.size.toLong
     }
     def isPublished(table: String, configHash: String): Boolean =
       tbl.get(table).exists(_.configHash == configHash)
@@ -86,7 +83,6 @@ class TableBackendSpec extends AnyFunSuite {
     def gcOrphans(): Seq[String] = Seq.empty
     def exists(table: String): Boolean = tbl.contains(table)
     def drop(table: String): Unit = { tbl.remove(table); () }
-    def tables(): Seq[String] = tbl.keys.toSeq.sorted
   }
 
   /** The contract suite, backend-generic: every behavior the pipeline
@@ -97,9 +93,8 @@ class TableBackendSpec extends AnyFunSuite {
     val b = Seq((4L, "w")).toDF("id", "v")
 
     // whole-table publish: rows, config-hash guard, read-back, drop
-    val (rows, files) = io.publishWithFiles(a, "t1", "cfgA", "run1")
-    assert(rows == 3 && files.map(_._2).sum == 3)
-    assert(io.exists("t1") && io.tables().contains("t1"))
+    assert(io.publish(a, "t1", "cfgA", "run1") == 3)
+    assert(io.exists("t1"))
     assert(io.isPublished("t1", "cfgA") && !io.isPublished("t1", "cfgB"))
     assert(io.read("t1").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
     assert(io.readMaterialized("t1").collect().length == 3)
@@ -109,7 +104,7 @@ class TableBackendSpec extends AnyFunSuite {
     assert(io.read("t1").collect().map(_.getLong(0)).toSeq == Seq(4L))
     assert(io.publishedBy("t1") == Some("run2"))
     io.drop("t1")
-    assert(!io.exists("t1") && !io.tables().contains("t1") && io.publishedBy("t1").isEmpty)
+    assert(!io.exists("t1") && io.publishedBy("t1").isEmpty)
 
     // batch store: append order, counts, tagged union, rewrite, drop
     assert(!io.hasBatches("s"))
