@@ -106,8 +106,16 @@ final case class StageRecord(
     counters: Map[String, Double] = Map.empty
 )
 
+/** One entry of the HAR hot list: a packed posting key whose bucket ran
+  * over the cap, and its size. */
+final case class HotKey(key: Long, n: Long)
+
 /** The stored record of one committed ingest (destor's `backup.log`
-  * row analog, `src/do_backup.c:179-207`): its stage key and one
-  * [[StageRecord]] per stage, in execution order.
+  * row analog, `src/do_backup.c:179-207`): its stage key, one
+  * [[StageRecord]] per stage, in execution order, and the ingest's HAR
+  * hot list, which the next ingest inherits (destor's per-backup
+  * `bvN.sparse`, `src/har_rewrite.c:28-54`). A record without the list
+  * counts as an empty one.
   */
-final case class IngestRecord(run_id: String, stage_key: String, stages: Seq[StageRecord])
+final case class IngestRecord(run_id: String, stage_key: String, stages: Seq[StageRecord],
+    har_hot: Seq[HotKey] = Seq.empty)

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.signatures.Sig
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
@@ -181,12 +182,13 @@ object PairGen {
 
   /** Raw candidate pairs (id1, id2, srcbit) of a key-sorted (key, id,
     * payload) table (see [[sortByKey]]). */
-  def expandPairs(sorted: DataFrame, cap: Int, hamMax: Int): DataFrame = {
-    val spark = sorted.sparkSession
-    import spark.implicits._
-    spark.createDataFrame(sorted.queryExecution.toRdd.mapPartitions(expand(_, cap, hamMax)))
-      .toDF("id1", "id2", "srcbit")
-  }
+  def expandPairs(sorted: DataFrame, cap: Int, hamMax: Int): DataFrame =
+    expandPairs(sorted.sparkSession, sorted.queryExecution.toRdd, cap, hamMax)
+
+  /** The same over a sorted table's raw rows, so that several scans can
+    * read the output of one posting shuffle. */
+  def expandPairs(spark: SparkSession, rows: RDD[InternalRow], cap: Int, hamMax: Int): DataFrame =
+    spark.createDataFrame(rows.mapPartitions(expand(_, cap, hamMax))).toDF("id1", "id2", "srcbit")
 
   /** Generic run-length grouping over a partition iterator whose rows
     * arrive sorted by (band, bucket): for each maximal run of equal

@@ -21,16 +21,17 @@ import org.apache.spark.sql.functions._
   *    17-57 init_har reads the PREVIOUS backup's sparse-container list;
   *    :96-101 writes this backup's; :173-219 rewrites their chunks
   *    immediately, without waiting for this run's monitor): a run
-  *    publishes its over-cap runs as (key, n) on the packed posting key
-  *    (PairGen.hotRuns); the next run routes postings of inherited keys
+  *    records its over-cap runs as (key, n) on the packed posting key
+  *    (PairGen.hotRuns) in its IngestRecord — the `bvN.sparse` analog,
+  *    har_rewrite.c:28-54; the next run routes postings of inherited keys
   *    through a broadcast min-join star-pairing path that never enters
   *    the big posting sort — the known-skewed keys are split out BEFORE
   *    the shuffle instead of being discovered inside it
   *    (DedupPipeline.candidatesSkewAware).
   *
   * Cost model: the pipeline takes bucket sizes as the run lengths of
-  * its one posting sort (PairGen.runHistogram) and walks their
-  * histogram with `histogramQuantile`. `bucketSizes`/`adaptiveCap` are
+  * its one posting sort (PairGen.runHistogram, per partition, merged on
+  * the driver) and walks their histogram with `histogramQuantile`. `bucketSizes`/`adaptiveCap` are
   * the same quantile from a plain map-side-combined aggregation over
   * the posting table (one row per DISTINCT bucket — at 10^12 rows
   * ~b·n/avg_bucket rows of 3 small columns): the reference SkewSpec

@@ -242,36 +242,35 @@ object DedupPipeline extends Serializable {
           .when(col("srcmask").bitwiseAND(SrcSubstr) =!= 0, "substr")
           .otherwise("phash"))
 
-  /** Skew-aware candidate generation result: the candidate pairs, this
-    * run's hot list as (key, n) on the packed posting key (HAR state for
-    * the NEXT run), the CBR-derived effective cap, and a cleanup thunk
-    * that drops the internal posting caches — call AFTER pairs and
-    * hotBuckets have been materialized. */
-  final case class SkewAwareCandidates(
-      pairs: DataFrame, hotBuckets: DataFrame, capUsed: Int, cleanup: () => Unit)
+  /** Skew-aware candidate generation result: the candidate pairs (a
+    * plain lazy query — nothing is cached), this run's HAR hot list as a
+    * driver-side (key, n) list on the packed posting key (the NEXT run's
+    * inherited list), and the CBR-derived effective cap. */
+  final case class SkewAwareCandidates(pairs: DataFrame, hotList: Seq[HotKey], capUsed: Int)
 
   /** Stage 3 with BOTH adaptive skew controllers live (see SkewControl):
     *  - CBR: effective cap = skewQuantile-quantile of this run's bucket
     *    sizes, floored at cfg.bucketCap — a shifted bucket-size
     *    distribution re-derives the cap instead of star-pairing the
     *    bulk of the corpus;
-    *  - HAR: postings of `inheritedHot` keys (the previous run's
-    *    published (key, n) list) bypass the big posting sort entirely —
-    *    star pairs come from a broadcast min-per-key join, so known-
-    *    skewed keys never land on one sort partition.
+    *  - HAR: postings of `inheritedHot` keys (the previous run's list)
+    *    bypass the big posting sort entirely — star pairs come from a
+    *    broadcast min-per-key join, so known-skewed keys never land on
+    *    one sort partition.
     * Inherited keys' sizes count in the CBR histogram and runs are
     * keyed on the packed key on every path, so the cap and the pair SET
     * are the non-HAR path's (star pairs to the same per-key min member),
     * colliding keys included; only the physical plan for hot keys
-    * changes.
+    * changes. Driver actions: the size histogram, the inherited keys'
+    * (min, size) rows, and an over-cap scan only when the histogram
+    * shows an over-cap run.
     */
   def candidatesSkewAware(
       bk: Dataset[BucketRow],
       cfg: DedupConfig,
-      inheritedHot: Option[DataFrame] = None): SkewAwareCandidates = {
+      inheritedHot: Seq[HotKey] = Seq.empty): SkewAwareCandidates = {
     val spark = bk.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val posts = keyed(bk.toDF())
 
     // HAR: split the inherited keys out BEFORE the posting shuffle — the
@@ -279,76 +278,63 @@ object DedupPipeline extends Serializable {
     // partition (destor equally acts on the inherited sparse list
     // up-front, har_rewrite.c:186-201). One broadcast semi/anti-join on
     // the packed key.
-    val (cold, hotPosts) = inheritedHot match {
-      case Some(hot) if !hot.isEmpty =>
-        val hotKeys = broadcast(hot.select("key").distinct())
-        (posts.join(hotKeys, Seq("key"), "left_anti"),
-          Some(posts.join(hotKeys, Seq("key"), "left_semi")))
-      case _ => (posts, None)
-    }
+    val (cold, hotPosts) =
+      if (inheritedHot.isEmpty) (posts, None)
+      else {
+        val hotKeys = broadcast(inheritedHot.map(_.key).distinct.toDF("key"))
+        (posts.join(hotKeys, Seq("key"), "left_anti"), Some(posts.join(hotKeys, Seq("key"), "left_semi")))
+      }
 
-    // THE posting shuffle — one repartition+radix-sort, PERSISTED so the
-    // bucket-size scan (CBR) and the pair expansion read the same
-    // exchange instead of shuffling the postings twice (round-2 interim
-    // version paid a second full groupBy shuffle + a percentile sketch
-    // for the cap; both replaced by a local run-length scan + an exact
-    // histogram quantile).
-    val sorted = PairGen.sortByKey(cold).persist(lvl)
-    def scanKeys(f: Iterator[org.apache.spark.sql.catalyst.InternalRow] => Iterator[(Long, Long)]) =
-      spark.createDataFrame(sorted.select(col("key")).queryExecution.toRdd.mapPartitions(f))
+    // THE posting shuffle, its raw rows taken ONCE: the bucket-size scan
+    // (CBR), the pair expansion and the over-cap scan (HAR) all read the
+    // output of this one shuffle — each re-sorts its partitions locally
+    // (a radix sort on one long), none shuffles again and nothing is
+    // cached.
+    val sorted = PairGen.sortByKey(cold).queryExecution.toRdd
 
-    // per-inherited-key (min member, size) from a partial aggregation —
-    // tiny (one row per inherited key), persisted for its four consumers
-    // (cap, star join, shrink re-route, hot list)
-    val minPer = hotPosts.map(_.groupBy("key")
+    // per-inherited-key (key, min nid, its payload, size) from a partial
+    // aggregation, collected: one row per inherited key, broadcast below
+    // anyway
+    val minPer = hotPosts.fold(Array.empty[(Long, Long, Long, Long)])(_.groupBy("key")
       .agg(min(struct(col("nid"), col("payload"))).as("m"), count(lit(1)).as("n"))
-      .persist(lvl))
+      .select("key", "m.nid", "m.payload", "n").as[(Long, Long, Long, Long)].collect())
 
-    // bucket-size HISTOGRAM from the run lengths of the cached sort
-    // (materializes the cache): sizes are run lengths — no per-key state.
+    // bucket-size HISTOGRAM from the run lengths of the sort, merged on
+    // the driver (~hundreds of (size, runs) rows per partition).
     // Inherited keys' sizes count too, so the cap (and the pair set) is
     // the non-HAR path's.
-    val hist = scanKeys(PairGen.runHistogram).toDF("n", "cnt")
-      .groupBy("n").agg(sum("cnt").as("count")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val hotHist = minPer.fold(Array.empty[(Long, Long)])(_.groupBy("n").count().as[(Long, Long)].collect())
-    val cap = math.max(cfg.bucketCap,
-      graft.ops.SkewControl.histogramQuantile(hist ++ hotHist, cfg.skewQuantile))
+    def merged(h: Seq[(Long, Long)]) = h.groupMapReduce(_._1)(_._2)(_ + _).toArray
+    val coldHist = merged(sorted.mapPartitions(PairGen.runHistogram).collect().toSeq)
+    val cap = math.max(cfg.bucketCap, graft.ops.SkewControl.histogramQuantile(
+      merged(coldHist.toSeq ++ minPer.map(m => (m._4, 1L))), cfg.skewQuantile))
 
-    // pair expansion: second LOCAL scan of the same cache
-    val coldPairs = PairGen.expandPairs(sorted, cap, cfg.hammingMax)
-
-    // this run's over-cap keys ARE the list to publish: a third local
-    // scan, emitting only over-cap runs (tiny), and only when the
-    // histogram saw one (rare by construction: cap is the skewQuantile
-    // tail)
+    val coldPairs = PairGen.expandPairs(spark, sorted, cap, cfg.hammingMax)
+    val (stillHot, shrunk) = minPer.partition(_._4 > cap)
+    // this run's over-cap keys ARE the next run's list: over-cap runs
+    // of the sort (scanned only when the histogram saw one — rare by
+    // construction: cap is the skewQuantile tail) plus the still-hot
+    // inherited keys
     val coldHot =
-      if (hist.exists { case (n, _) => n > cap })
-        scanKeys(PairGen.hotRuns(_, cap)).toDF("key", "n")
-      else spark.emptyDataset[(Long, Long)].toDF("key", "n")
+      if (coldHist.exists(_._1 > cap)) sorted.mapPartitions(PairGen.hotRuns(_, cap)).collect()
+      else Array.empty[(Long, Long)]
+    val hotList = (coldHot ++ stillHot.map(m => (m._1, m._4))).map { case (k, n) => HotKey(k, n) }
 
-    hotPosts.zip(minPer) match {
-      case Some((hp, minPer)) =>
-        val cls = col("key").bitwiseAND(3L)
-        // still-hot inherited keys: star pairs via broadcast min-join
-        val starred = hp
-          .join(broadcast(minPer.filter(col("n") > cap)), "key")
-          .filter(col("nid") =!= col("m.nid"))
-          .filter(PairGen.hammingOk(cls, col("payload"), col("m.payload"), cfg.hammingMax))
-          .select(col("m.nid").as("id1"), col("nid").as("id2"), PairGen.srcbitCol(cls).as("srcbit"))
-        // inherited keys that SHRANK below the cap must be all-paired —
-        // re-routed through a (tiny) expander pass so the pair set stays
-        // exactly the non-HAR path's
-        val backPairs = PairGen.expandPairs(PairGen.sortByKey(
-          hp.join(broadcast(minPer.filter(col("n") <= cap).select("key")), Seq("key"), "left_semi")),
-          cap, cfg.hammingMax)
-        SkewAwareCandidates(finishCandidates(coldPairs.union(starred).union(backPairs)),
-          coldHot.union(minPer.filter(col("n") > cap).select("key", "n")), cap,
-          () => { sorted.unpersist(blocking = false); minPer.unpersist(blocking = false); () })
-      case None =>
-        SkewAwareCandidates(finishCandidates(coldPairs), coldHot, cap,
-          () => { sorted.unpersist(blocking = false); () })
-    }
+    val cls = col("key").bitwiseAND(3L)
+    // still-hot inherited keys: star pairs via broadcast min-join
+    val starred = for (hp <- hotPosts if stillHot.nonEmpty) yield hp
+      .join(broadcast(stillHot.toSeq.toDF("key", "m_nid", "m_payload", "n")), "key")
+      .filter(col("nid") =!= col("m_nid"))
+      .filter(PairGen.hammingOk(cls, col("payload"), col("m_payload"), cfg.hammingMax))
+      .select(col("m_nid").as("id1"), col("nid").as("id2"), PairGen.srcbitCol(cls).as("srcbit"))
+    // inherited keys that SHRANK below the cap must be all-paired —
+    // re-routed through a (tiny) expander pass so the pair set stays
+    // exactly the non-HAR path's
+    val backPairs = for (hp <- hotPosts if shrunk.nonEmpty) yield PairGen.expandPairs(
+      PairGen.sortByKey(hp.join(broadcast(shrunk.map(_._1).toSeq.toDF("key")), Seq("key"), "left_semi")),
+      cap, cfg.hammingMax)
+    SkewAwareCandidates(
+      finishCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _)),
+      hotList.toSeq, cap)
   }
 
   /** Stage 4 — verification with the EXACT oracle predicates (same

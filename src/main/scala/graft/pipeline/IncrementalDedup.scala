@@ -24,14 +24,12 @@ import org.json4s.jackson.Serialization
   *                   store analog; `bytes` is only ever read back for
   *                   pixel-verify side-joins, column-pruned otherwise)
   *   sig_store       per-image signature bundles (recipe/feature analog)
-  *   postings_store  (band, bucket, image_id, payload, ingest_seq) —
+  *   postings_store  (band, bucket, nid, payload, ingest_seq) —
   *                   THE probe index (kv store analog)
   *   edges_store     verified dup pairs per batch (provenance for
   *                   retention-time cluster recompute)
   *   clusters_current  latest full cluster assignment (overwritten per
   *                   ingest)
-  *   har_hot_buckets  the previous ingest's hot-bucket list (HAR): (key,
-  *                   n) on the packed posting key
   *
   * Stages and resume (north_rule; destor's known weakness — a crash
   * means a full rebuild, README.md:147-149 — is what per-stage commits
@@ -49,7 +47,8 @@ import org.json4s.jackson.Serialization
   * marker). A crashed ingest retried under the same runId resumes every
   * stage whose marker matches its key; a changed config, input or store
   * recomputes. Each commit stores the batch's [[IngestRecord]] (per-stage
-  * rows, per-file rows, wall, counters) next to its signatures.
+  * rows, per-file rows, wall, counters, and the HAR hot list the next
+  * ingest inherits) next to its signatures.
   *
   * Probe shape (scale analysis at 10^12 stored rows): the store side is
   * pruned FIRST by an equi-join on the new batch's distinct (band,
@@ -72,8 +71,6 @@ final class IncrementalDedup(
   import IncrementalDedup._
 
   val io: TableBackend = new TableIO(spark, workDir)
-
-  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Batches ingested so far (ids in ingest order). */
   def ingested: Seq[String] = io.batches(SigStore)
@@ -118,22 +115,26 @@ final class IncrementalDedup(
       if (marks.isEmpty && !io.publishedBy(ClustersTable).contains(runId)) null
       else stageKey(cfg, inputFingerprint(batch), committed)
     val records = scala.collection.mutable.ArrayBuffer.empty[StageRecord]
+    // this ingest's HAR hot list (set by the candidate stage's marker)
+    var hot = Seq.empty[HotKey]
 
     /** Run one stage into its staged batch of `store` — or resume it
       * when its marker carries this ingest's key — and read it back. */
     def stage(name: String, store: String)(run: => Staged): DataFrame = {
       val t0 = System.nanoTime()
       val resumed = marks.get(store).filter(_.key == key)
-      val counters = resumed.map(_.counters).getOrElse {
+      val mark = resumed.getOrElse {
         val s = run
         io.stageBatch(s.df, store, runId)
-        val c = s.finish()
-        io.putBatchMeta(store, runId, MarkFile, Serialization.write(StageMark(key, c)))
-        c
+        val c = s.finish() // may set `key` (the signature stage)
+        val m = StageMark(key, c, s.hot)
+        io.putBatchMeta(store, runId, MarkFile, Serialization.write(m))
+        m
       }
+      if (mark.hot.nonEmpty) hot = mark.hot
       val files = io.batchFileCounts(store, runId).map(_._2)
       records += StageRecord(name, resumed.isDefined, files.sum,
-        (System.nanoTime() - t0) / 1000000, files, counters)
+        (System.nanoTime() - t0) / 1000000, files, mark.counters)
       io.readBatch(store, runId)
     }
 
@@ -165,28 +166,21 @@ final class IncrementalDedup(
       DedupPipeline.buckets(sigs, cfg).toDF().withColumn("ingest_seq", lit(seq))))
       .drop("ingest_seq").as[BucketRow]
 
-    // 2. candidate pairs: within-batch (skew-aware, inheriting the
-    //    previous ingest's hot-bucket list — HAR — as a driver-local
-    //    copy so republishing it can't invalidate the plan) plus the
-    //    cross-batch probe of the new postings against the stored index
+    // 2. candidate pairs: within-batch (skew-aware, inheriting the HAR
+    //    hot list from the last committed batch's record) plus the
+    //    cross-batch probe of the new postings against the stored index.
+    //    This ingest's list rides the stage marker, so a resumed stage
+    //    hands off the same list.
     val cand = stage("candidate_pairs", CandStore) {
-      val inheritedHot = inheritedHotList()
+      val inheritedHot = committed.lastOption.flatMap(record).fold(Seq.empty[HotKey])(_.har_hot)
       val sk = DedupPipeline.candidatesSkewAware(newPost, cfg, inheritedHot)
-      val (crossRaw, probeCleanup) = crossPairs(newPost, io.batchRowCount(PostStore, runId))
       // one cross-source pair dedup: srcmask = bit_or over within + cross
       Staged(DedupPipeline.finishCandidates(
           sk.pairs.select(col("id1"), col("id2"), col("srcmask").as("srcbit"))
-            .unionByName(crossRaw)),
-        () => {
-          // HAR handoff: this ingest's hot buckets for the next one
-          // (advisory routing, not correctness — published before the
-          // marker, so a resumed stage has already handed off)
-          io.publish(sk.hotBuckets, HarTable, cfg.configHash, runId)
-          sk.cleanup()
-          probeCleanup()
-          Map("cap_used" -> sk.capUsed.toDouble,
-            "har_inherited_buckets" -> inheritedHot.fold(0.0)(_.collect().length.toDouble))
-        })
+            .unionByName(crossPairs(newPost, io.batchRowCount(PostStore, runId)))),
+        () => Map("cap_used" -> sk.capUsed.toDouble,
+          "har_inherited_buckets" -> inheritedHot.length.toDouble),
+        sk.hotList)
     }
 
     // 3. verify — old sides resolved from the STORES (no recompute),
@@ -239,33 +233,21 @@ final class IncrementalDedup(
     //    anywhere earlier leaves the batch un-ingested and resumable
     for (store <- Seq(EdgeStore, ImagesStore, PostStore)) io.commitBatch(store, runId)
     io.putBatchMeta(SigStore, runId, RecordFile,
-      Serialization.write(IngestRecord(runId, key, records.toSeq)))
+      Serialization.write(IngestRecord(runId, key, records.toSeq, hot)))
     io.commitBatch(SigStore, runId)
     io.dropBatch(CandStore, runId)
     io.read(ClustersTable)
   }
 
-  /** The previous ingest's HAR hot list as a driver-local copy (so
-    * republishing it can't invalidate a plan over it), or None when it
-    * is absent or empty — checked from its footers, so an empty list
-    * costs no job — or a pre-(key, n) list of an older store (HAR only
-    * routes work, so ignoring it never changes the pair set). */
-  private def inheritedHotList(): Option[DataFrame] =
-    Some(HarTable)
-      .filter(t => io.exists(t) && io.fileCounts(t).exists(_._2 > 0) &&
-        io.read(t).columns.contains("key"))
-      .map(io.readMaterialized)
-
   /** Cross-batch probe: new postings vs the stored index, as raw
-    * (id1, id2, srcbit) pairs, plus a cleanup for its cached key set.
-    * `nPostings` (the staged batch's footer row count) bounds the number
-    * of distinct new keys and sizes the Bloom filter without a job. */
-  private def crossPairs(newPost: Dataset[BucketRow], nPostings: Long): (DataFrame, () => Unit) = {
+    * (id1, id2, srcbit) pairs. `nPostings` (the staged batch's footer
+    * row count) bounds the number of distinct new keys and sizes the
+    * Bloom filter without a job. */
+  private def crossPairs(newPost: Dataset[BucketRow], nPostings: Long): DataFrame = {
     import spark.implicits._
     if (!io.hasBatches(PostStore))
-      return (spark.emptyDataset[(Long, Long, Int)].toDF("id1", "id2", "srcbit"), () => ())
+      return spark.emptyDataset[(Long, Long, Int)].toDF("id1", "id2", "srcbit")
     val old = io.readBatches(PostStore)
-    val newKeys = newPost.select("band", "bucket").distinct().persist(lvl)
     // F7 Bloom front-end (DDFS's in-memory filter that prunes index
     // probes, reference src/utils/bloom_filter.c:98-127): a driver-built
     // Bloom over the new batch's bucket keys drops ~all store rows whose
@@ -273,8 +255,9 @@ final class IncrementalDedup(
     // side is |store| rows, the batch side |batch| — without the bloom
     // every stored posting pays the exchange; with it only (touched +
     // fpp * rest) do. False positives are removed by the equi-join; no
-    // false negatives.
-    val bloom = newKeys.stat.bloomFilter(
+    // false negatives. Built straight from the staged postings: inserting
+    // a key twice sets the same bits.
+    val bloom = newPost.stat.bloomFilter(
       xxhash64(col("band"), col("bucket")), math.max(nPostings, 1L), cfg.bloomFpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((k: Long) => bloomBc.value.mightContainLong(k))
@@ -283,7 +266,7 @@ final class IncrementalDedup(
     // at the newest cfg.indexValueLength entries
     val touched = old
       .filter(mightContain(xxhash64(col("band"), col("bucket"))))
-      .join(newKeys, Seq("band", "bucket"))
+      .join(newPost.select("band", "bucket").distinct(), Seq("band", "bucket"))
     val w = Window.partitionBy("band", "bucket")
       .orderBy(col("ingest_seq").desc, col("nid").desc)
     val capped = touched
@@ -299,7 +282,7 @@ final class IncrementalDedup(
         least(col("nid"), col("old_id")).as("id1"),
         greatest(col("nid"), col("old_id")).as("id2"),
         PairGen.srcbitCol(cls).as("srcbit"))
-    (pairs, () => { newKeys.unpersist(blocking = false); () })
+    pairs
   }
 }
 
@@ -309,7 +292,6 @@ object IncrementalDedup {
   val PostStore = "postings_store"
   val EdgeStore = "edges_store"
   val ClustersTable = "clusters_current"
-  val HarTable = "har_hot_buckets"
   /** Staged candidate pairs of the ingest in flight (never committed;
     * dropped once the ingest commits). */
   val CandStore = "candidates_store"
@@ -320,14 +302,15 @@ object IncrementalDedup {
 
   private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
 
-  /** A staged stage's marker: the key it was computed under and the
-    * counters it produced. */
-  private final case class StageMark(key: String, counters: Map[String, Double])
+  /** A staged stage's marker: the key it was computed under, the
+    * counters it produced and (candidate stage) the HAR hot list. */
+  private final case class StageMark(key: String, counters: Map[String, Double],
+      hot: Seq[HotKey] = Seq.empty)
 
-  /** A stage's output plus what runs after it is written: cleanup, and
-    * the counters to record. */
+  /** A stage's output, what runs after it is written (cleanup, and the
+    * counters to record), and the HAR hot list it produced. */
   private final case class Staged(df: DataFrame,
-      finish: () => Map[String, Double] = () => Map.empty)
+      finish: () => Map[String, Double] = () => Map.empty, hot: Seq[HotKey] = Seq.empty)
 
   /** Stage key: config hash + input fingerprint + committed batch list. */
   private def stageKey(cfg: DedupConfig, fp: String, committed: Seq[String]): String =

@@ -45,29 +45,29 @@ final class Retention(
   val io: TableBackend = new TableIO(spark, workDir)
 
   /** Expire the given ingest batches from every store, reclaim index
-    * entries that reference them, and recompute the cluster table. */
+    * entries that reference them, and recompute the cluster table.
+    * Ingest's commit discipline, reversed: sig_store is the commit
+    * marker, so the batches to drop and their image ids are read from
+    * it and it is unlisted LAST, after compaction and the cluster
+    * publish. A crash anywhere earlier leaves the batches listed there,
+    * and a retry finishes the job. Counts come from parquet footers. */
   def expire(runIds: Seq[String], gcRunId: String): Report = {
-    val present = io.batches(ImagesStore)
-    val toDrop = runIds.filter(present.contains)
-    if (toDrop.isEmpty) return Report(Seq.empty, 0L, 0L,
-      if (io.hasBatches(ImagesStore)) io.readBatches(ImagesStore).count() else 0L)
+    val committed = io.batches(SigStore)
+    val toDrop = runIds.filter(committed.contains)
+    val survivors = committed.filterNot(toDrop.contains)
+    def images(batches: Seq[String]) = batches.map(io.batchRowCount(SigStore, _)).sum
+    val survivingImages = images(survivors)
+    if (toDrop.isEmpty) return Report(Seq.empty, 0L, 0L, survivingImages)
+    val droppedImages = images(toDrop)
 
-    // the dropped-id set (read ONLY the dropped batch dirs, id column).
-    // Materialized DURABLY before any dir is deleted: a cached-only
-    // copy whose blocks are lost AFTER the drop would recompute its
-    // lineage from paths that no longer exist and abort GC mid-way.
-    // The tmp name carries ".tmp-" so a crashed GC's copy is reclaimed
-    // by the same gcOrphans sweep as crashed publishes.
-    val dropTmp = s"$workDir/gc-dropids.tmp-$gcRunId"
-    toDrop.map(r => io.readBatch(ImagesStore, r).select("image_id"))
-      .reduce(_ unionByName _).distinct()
-      .write.mode("overwrite").parquet(dropTmp)
-    val dropIds = spark.read.parquet(dropTmp)
-    val droppedImages = dropIds.count()
+    // the dropped-id set: the dropped batches' signature rows, whose
+    // dirs stay in place until the very end
+    val dropIds = toDrop.map(r => io.readBatch(SigStore, r).select("image_id"))
+      .reduce(_ unionByName _)
 
-    // D1 + D2: manifest-first batch drops from every batch-owned store
-    for (store <- Seq(ImagesStore, SigStore, PostStore, EdgeStore); r <- toDrop)
-      if (io.batches(store).contains(r)) io.dropBatch(store, r)
+    // D1 + D2: manifest-first batch drops from the other batch-owned
+    // stores (a batch a crashed attempt already dropped is skipped)
+    for (store <- Seq(ImagesStore, PostStore, EdgeStore); r <- toDrop) io.dropBatch(store, r)
 
     // D3: compact surviving edge batches that reference dropped ids
     // (cross-batch pairs discovered by a LATER, surviving ingest) —
@@ -78,27 +78,23 @@ final class Retention(
     // stay byte-identical.
     val reclaimed = compactEdges(dropIds, gcRunId)
 
-    // recompute clusters over the surviving corpus
-    val surviving =
-      if (io.hasBatches(ImagesStore)) io.readBatches(ImagesStore).select("image_id")
-      else spark.emptyDataFrame.withColumn("image_id", lit(""))
-    val survivingCount = surviving.count()
-    if (survivingCount > 0) {
+    // recompute clusters over the surviving corpus, published as of the
+    // newest surviving batch: ingest trusts an assignment only when it
+    // names the last committed batch
+    if (survivingImages > 0) {
+      val surviving = io.readBatches(ImagesStore).select("image_id")
       val edges =
         if (io.hasBatches(EdgeStore))
           io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
         else surviving.limit(0).select(col("image_id").as("src"), col("image_id").as("dst"))
-      // published as of the newest surviving batch: ingest trusts an
-      // assignment only when it names the last committed batch
       io.publish(DedupPipeline.assign(surviving, edges), ClustersTable, cfg.configHash,
-        io.batches(SigStore).lastOption.getOrElse(gcRunId))
+        survivors.last)
     } else if (io.exists(ClustersTable)) {
       io.drop(ClustersTable)
     }
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dropTmp), spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(dropTmp), true)
-    Report(toDrop, droppedImages, reclaimed, survivingCount)
+    // commit: unlist the signature batches last
+    for (r <- toDrop) io.dropBatch(SigStore, r)
+    Report(toDrop, droppedImages, reclaimed, survivingImages)
   }
 
   /** D3 edge-store compaction against a dropped-id set, batch-count
@@ -115,8 +111,9 @@ final class Retention(
       .join(dropIds.withColumnRenamed("image_id", "id2"), Seq("id2"), "left_anti")
     // durable materialization BEFORE any dir is rewritten: a lazy plan
     // (or cached-only copy) would recompute its lineage from batch dirs
-    // this method is about to replace. Same ".tmp-" reclaim discipline
-    // as the dropIds copy.
+    // this method is about to replace. The ".tmp-" name lets a crashed
+    // GC's copy be reclaimed by the same gcOrphans sweep as crashed
+    // publishes.
     val edgesTmp = s"$workDir/gc-edges.tmp-$gcRunId"
     pruned.write.mode("overwrite").parquet(edgesTmp)
     val survivors = spark.read.parquet(edgesTmp)
@@ -142,8 +139,7 @@ final class Retention(
     * (destor fires do_delete when jcr.id - retention crosses zero,
     * src/destor.c:318-322). */
   def retainLast(n: Int, gcRunId: String): Report = {
-    val all = io.batches(ImagesStore)
-    expire(all.dropRight(n), gcRunId)
+    expire(io.batches(SigStore).dropRight(n), gcRunId)
   }
 
   /** GC crashed-publish leftovers (invisible-by-protocol tmp dirs). */

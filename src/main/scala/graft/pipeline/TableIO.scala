@@ -42,7 +42,6 @@ trait TableBackend {
   def isPublished(table: String, configHash: String): Boolean
   def publishedBy(table: String): Option[String]
   def read(table: String): DataFrame
-  def readMaterialized(table: String): DataFrame
   def batches(table: String): Seq[String]
   def batchDirs(table: String): Seq[String]
   def stageBatch(df: DataFrame, table: String, runId: String): Long
@@ -179,17 +178,6 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
       "\"run_id\":\"([^\"]*)\"".r.findFirstMatchIn(_).map(_.group(1)))
 
   def read(table: String): DataFrame = scan(Seq(tablePath(table)))
-
-  /** Read a SMALL table fully materialized to the driver and re-created
-    * as a local DataFrame — for control tables (e.g. the HAR hot-bucket
-    * list) that are re-published while lazy plans still reference them:
-    * a plan over the materialized copy can never observe the overwrite. */
-  def readMaterialized(table: String): DataFrame = {
-    val df = read(table)
-    // a local relation: emptiness checks and collects on it run on the
-    // driver without a Spark job
-    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-  }
 
   // ------------------------------------------------------------------
   // Append-oriented batch stores (incremental ingest / retention).

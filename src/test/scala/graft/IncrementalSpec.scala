@@ -63,9 +63,11 @@ class IncrementalSpec extends AnyFunSuite {
     // index stores carry exactly one signature/image per ingested row
     assert(inc.io.readBatches(IncrementalDedup.SigStore).count() == corpus.count())
     assert(inc.io.readBatches(IncrementalDedup.ImagesStore).count() == corpus.count())
-    // HAR state was handed off (boilerplate caption bucket is hot at 16 groups? —
-    // list may be empty at this size; the table itself must exist)
-    assert(inc.io.exists(IncrementalDedup.HarTable))
+    // HAR state was handed off in r2's record (the list may be empty at
+    // this size; every key on it ran over the cap)
+    val rec2 = inc.record("r2").get
+    val cap2 = rec2.stages.find(_.stage == "candidate_pairs").get.counters("cap_used")
+    assert(rec2.har_hot.forall(_.n > cap2))
 
     corpus.unpersist(); batchA.unpersist(); batchB.unpersist()
   }
@@ -177,18 +179,31 @@ class IncrementalSpec extends AnyFunSuite {
     }
 
     val har = twoIngests { inc =>
-      val hot = inc.io.read(IncrementalDedup.HarTable)
-      assert(hot.columns.toSeq == Seq("key", "n"))
-      assert(hot.count() > 0, "batch A published no hot key")
+      val hot = inc.record("r1").get.har_hot
+      // the list is (key, n) on the packed posting key of A's postings
+      val keys = inc.io.readBatch(IncrementalDedup.PostStore, "r1")
+        .select(DedupPipeline.packedKeyCol).as[Long].collect().toSet
+      assert(hot.forall(h => keys.contains(h.key)))
+      assert(hot.nonEmpty, "batch A recorded no hot key")
     }
     assert(inherited(har) > 0)
-    val plain = twoIngests(_.io.drop(IncrementalDedup.HarTable))
+    /** Rewrite r1's stored record through `f` on its JSON. */
+    def editRecord(inc: IncrementalDedup)(f: org.json4s.JValue => org.json4s.JValue): Unit = {
+      import org.json4s.jackson.JsonMethods.{compact, parse, render}
+      val rec = inc.io.batchMeta(IncrementalDedup.SigStore, "r1", "RECORD.json").get
+      inc.io.putBatchMeta(IncrementalDedup.SigStore, "r1", "RECORD.json", compact(render(f(parse(rec)))))
+    }
+    // the list dropped from the record: no list
+    val plain = twoIngests(editRecord(_)(_.replace(List("har_hot"), org.json4s.JArray(Nil))))
     assert(inherited(plain) == 0)
     assert(pairsOf(har) == pairsOf(plain))
     assert(clustersOf(har) == clustersOf(plain))
-    // a (band, bucket, n) list left by an older store counts as no list
-    val old = twoIngests(_.io.publish(Seq((0, 7L, 9L)).toDF("band", "bucket", "n"),
-      IncrementalDedup.HarTable, cfgHot.configHash, "r1"))
+    // a record written before it carried the list counts as no list, and
+    // an older store's har_hot_buckets table is no longer read
+    val old = twoIngests { inc =>
+      editRecord(inc)(_.removeField(_._1 == "har_hot"))
+      inc.io.publish(Seq((1L, 9L)).toDF("key", "n"), "har_hot_buckets", cfgHot.configHash, "r1")
+    }
     assert(inherited(old) == 0)
     assert(pairsOf(old) == pairsOf(plain) && clustersOf(old) == clustersOf(plain))
 

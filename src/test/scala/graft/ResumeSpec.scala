@@ -20,6 +20,8 @@ import java.nio.file.{Files, Paths}
 class ResumeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.Sessions.local(4, 8, "resume-spec")
   val cfg = DedupConfig.default
+  // the median bucket size as cap: each batch records a non-empty HAR list
+  val cfgHot = cfg.copy(bucketCap = 2, skewQuantile = 0.5)
   val Stages = Seq("signatures", "images", "postings", "candidate_pairs", "verified_pairs", "clusters")
 
   import spark.implicits._
@@ -70,25 +72,36 @@ class ResumeSpec extends AnyFunSuite {
     assert(assignment(clean) == DedupPipeline.run(a.union(b), cfg)
       .collect().map(r => (r.image_id, r.cluster_id)).sorted.toSeq)
 
+    // the crash-at-commit stores run with a non-empty HAR list, so the
+    // resumed candidate stage must hand off the same list as a clean run
+    val hotDir = Files.createTempDirectory("graft-resume-hot").toString
+    val hot = new IncrementalDedup(spark, hotDir, cfgHot)
+    hot.ingest(a, "a")
+    hot.ingest(b, "b")
+    val hotList = hot.record("b").get.har_hot
+    assert(hotList.nonEmpty)
+
     // full resume: every stage was staged, so the retry recomputes none
     val fullDir = Files.createTempDirectory("graft-resume-full").toString
-    val full = new IncrementalDedup(spark, fullDir, cfg)
+    val full = new IncrementalDedup(spark, fullDir, cfgHot)
     full.ingest(a, "a")
     crashBeforeCommit(full, fullDir, b)
     full.ingest(b, "b")
     assert(resumedStages(full, "b") == Stages.toSet)
-    assert(storeRows(fullDir) == storeRows(cleanDir))
+    assert(storeRows(fullDir) == storeRows(hotDir))
+    assert(full.record("b").get.har_hot == hotList)
 
     // partial resume: drop the last two stages' outputs -> only they recompute
     val partDir = Files.createTempDirectory("graft-resume-part").toString
-    val part = new IncrementalDedup(spark, partDir, cfg)
+    val part = new IncrementalDedup(spark, partDir, cfgHot)
     part.ingest(a, "a")
     crashBeforeCommit(part, partDir, b)
     part.io.dropBatch(IncrementalDedup.EdgeStore, "b")
     part.io.drop(IncrementalDedup.ClustersTable) // cluster maintenance replays the edge store
     part.ingest(b, "b")
     assert(resumedStages(part, "b") == Set("signatures", "images", "postings", "candidate_pairs"))
-    assert(storeRows(partDir) == storeRows(cleanDir))
+    assert(storeRows(partDir) == storeRows(hotDir))
+    assert(part.record("b").get.har_hot == hotList)
 
     // config change: the staged stages were keyed on the old config
     val cfgDir = Files.createTempDirectory("graft-resume-cfg").toString

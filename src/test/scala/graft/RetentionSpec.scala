@@ -71,6 +71,38 @@ class RetentionSpec extends AnyFunSuite {
     corpus.unpersist(); batchA.unpersist(); batchB.unpersist(); batchC.unpersist()
   }
 
+  test("expire that crashes after its first drop finishes on retry, equal to a clean expire") {
+    val corpus = CorpusGen.generate(spark, 10).cache()
+    val idNum = substring(col("image_id"), 4, 10).cast("long")
+    val stores = Seq(IncrementalDedup.ImagesStore, IncrementalDedup.SigStore,
+      IncrementalDedup.PostStore, IncrementalDedup.EdgeStore)
+    /** Every store's batch list and the cluster rows after `expireB0`. */
+    def afterExpire(expireB0: (String, IncrementalDedup) => Unit) = {
+      val dir = Files.createTempDirectory("graft-ret-crash").toString
+      val inc = new IncrementalDedup(spark, dir, cfg)
+      (0 until 2).foreach(m => inc.ingest(corpus.filter(idNum % 2 === m), s"b$m"))
+      expireB0(dir, inc)
+      (stores.map(s => s -> inc.io.batches(s)),
+        inc.clusters.collect().map(_.mkString("|")).sorted.toSeq)
+    }
+    val clean = afterExpire((dir, _) => new Retention(spark, dir, cfg).expire(Seq("b0"), "gc"))
+    val retried = afterExpire { (dir, inc) =>
+      // crash on the second drop: postings_store's manifest is a directory
+      val manifest = java.nio.file.Paths.get(dir, IncrementalDedup.PostStore, "_STORE.json")
+      val saved = manifest.resolveSibling("saved.json")
+      Files.move(manifest, saved)
+      Files.createDirectory(manifest)
+      try assertThrows[java.io.IOException](new Retention(spark, dir, cfg).expire(Seq("b0"), "gc"))
+      finally { Files.delete(manifest); Files.move(saved, manifest) }
+      assert(!inc.io.batches(IncrementalDedup.ImagesStore).contains("b0"), "the first drop ran")
+      val report = new Retention(spark, dir, cfg).expire(Seq("b0"), "gc2")
+      assert(report.droppedBatches == Seq("b0") && report.droppedImages > 0)
+    }
+    assert(clean._1.forall(_._2 == Seq("b1")))
+    assert(retried == clean)
+    corpus.unpersist()
+  }
+
   test("retainLast keeps the newest n batches; orphan tmp dirs are GC'd") {
     val dir = Files.createTempDirectory("graft-ret2").toString
     val corpus = CorpusGen.generate(spark, 9).cache()

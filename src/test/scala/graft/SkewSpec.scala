@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{BucketRow, DedupConfig}
+import graft.core.{BucketRow, DedupConfig, HotKey}
 import graft.ops.SkewControl
 import graft.pipeline.DedupPipeline
 import graft.synth.CorpusGen
@@ -23,9 +23,10 @@ class SkewSpec extends AnyFunSuite {
     }
 
   /** A hand-built HAR hot list: (band, bucket, n) → (key, n) on the
-    * packed posting key, the published list's schema. */
-  private def hotList(buckets: Seq[(Int, Long, Long)]) =
+    * packed posting key, the recorded list's shape. */
+  private def hotList(buckets: Seq[(Int, Long, Long)]): Seq[HotKey] =
     buckets.toDF("band", "bucket", "n").select(DedupPipeline.packedKeyCol.as("key"), $"n")
+      .as[HotKey].collect().toSeq
 
   test("CBR: shifted bucket-size distribution re-derives the cap (knob not dead)") {
     // a corpus whose TYPICAL bucket has 100 members — above the static
@@ -41,7 +42,7 @@ class SkewSpec extends AnyFunSuite {
     // with the adaptive cap, a 100-member bucket is all-pairs (C(100,2)
     // per bucket), NOT star-paired (99) — the static cap would have
     // star-paired the entire corpus
-    val sk = DedupPipeline.candidatesSkewAware(bk, cfg, None)
+    val sk = DedupPipeline.candidatesSkewAware(bk, cfg)
     val one = sk.pairs.filter("id1 < 100000").count()
     assert(sk.capUsed == cap)
     assert(one == 100L * 99 / 2, s"bucket0 pairs=$one")
@@ -49,28 +50,26 @@ class SkewSpec extends AnyFunSuite {
     val mega = sk.pairs.filter("id1 >= 20000000 or id2 >= 20000000").count()
     assert(mega == 4999, s"mega pairs=$mega")
     // and it is reported as hot for the next run (HAR handoff)
-    val hot = sk.hotBuckets.collect()
-    assert(hot.length == 1 && hot.head.getAs[Long]("n") == 5000)
-    sk.cleanup()
+    val hot = sk.hotList
+    assert(hot.length == 1 && hot.head.n == 5000)
   }
 
   test("HAR: inherited hot buckets take the broadcast min-join path with an identical pair set") {
     val dist = Seq.fill(200)(8) :+ 500 // one planted hot bucket (q99 of sizes = 8 -> cap stays at the static 64)
     val bk = spark.createDataset(postings(dist))
 
-    val base = DedupPipeline.candidatesSkewAware(bk, cfg, None)
+    val base = DedupPipeline.candidatesSkewAware(bk, cfg)
     val basePairs = base.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)]
       .collect().toSet
-    val hot = base.hotBuckets
-    assert(hot.count() == 1)
+    val hot = base.hotList
+    assert(hot.length == 1)
 
     // run 2 "inherits" run 1's hot list: identical candidates, but the
     // hot bucket's postings never enter the sort shuffle
-    val har = DedupPipeline.candidatesSkewAware(bk, cfg, Some(hot))
+    val har = DedupPipeline.candidatesSkewAware(bk, cfg, hot)
     val harPairs = har.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)]
       .collect().toSet
     assert(harPairs == basePairs)
-    base.cleanup(); har.cleanup()
   }
 
   test("HAR: inherited keys still count in the CBR cap (pair set and cap unchanged)") {
@@ -79,14 +78,13 @@ class SkewSpec extends AnyFunSuite {
     // sizes alone (singletons) would fall to the floor and star them
     val bk = spark.createDataset(postings(Seq.fill(100)(1) ++ Seq(5, 5)))
     val cfgLow = cfg.copy(bucketCap = 2)
-    val base = DedupPipeline.candidatesSkewAware(bk, cfgLow, None)
+    val base = DedupPipeline.candidatesSkewAware(bk, cfgLow)
     val har = DedupPipeline.candidatesSkewAware(bk, cfgLow,
-      Some(hotList(Seq((0, 100L * 1000003L, 9L), (0, 101L * 1000003L, 9L)))))
+      hotList(Seq((0, 100L * 1000003L, 9L), (0, 101L * 1000003L, 9L))))
     def pairs(sk: DedupPipeline.SkewAwareCandidates) =
       sk.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)].collect().toSet
     assert(base.capUsed == 5 && har.capUsed == 5)
     assert(pairs(har) == pairs(base) && pairs(base).size == 20)
-    base.cleanup(); har.cleanup()
   }
 
   test("HAR: hamming-LSH hot bucket still rejects far members at emission") {
@@ -102,13 +100,12 @@ class SkewSpec extends AnyFunSuite {
     val bk = spark.createDataset(
       members.map { case (id, p) => BucketRow(band, 7L, id, p) } ++ filler)
     val hot = hotList(Seq((band, 7L, 5L)))
-    val har = DedupPipeline.candidatesSkewAware(bk, cfgSmall, Some(hot))
+    val har = DedupPipeline.candidatesSkewAware(bk, cfgSmall, hot)
     assert(har.capUsed == 4)
     val pairs = har.pairs.select("id1", "id2").as[(Long, Long)].collect().toSet
     // star from min member nid 1 (payload 0): far members rejected by
     // the hamming gate exactly as the streamed expander would
     assert(pairs == Set((1L, 2L), (1L, 3L)))
-    har.cleanup()
   }
 
   test("HAR: an inherited key that shrank below the cap is all-paired again") {
@@ -118,10 +115,65 @@ class SkewSpec extends AnyFunSuite {
     val bk = spark.createDataset(
       Seq(1L, 2L, 3L).map(id => BucketRow(0, 7L, id)) ++ filler)
     val hot = hotList(Seq((0, 7L, 999L)))
-    val har = DedupPipeline.candidatesSkewAware(bk, cfg, Some(hot))
+    val har = DedupPipeline.candidatesSkewAware(bk, cfg, hot)
     val pairs = har.pairs.select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    har.cleanup()
+  }
+
+  test("nothing is cached and the postings take one shuffle, with and without an inherited list") {
+    // one band, disjoint buckets: every pair is emitted exactly once, so
+    // the pair-dedup shuffle writes exactly |pairs| records and any
+    // other shuffle write shows up on its own
+    val dist = Seq.fill(200)(8) :+ 500
+    val bk = spark.createDataset(postings(dist))
+    val nPostings = dist.sum.toLong
+    val sc = spark.sparkContext
+    /** Shuffle records written per completed stage while `f` runs. */
+    def stageWrites[T](f: => T): (T, Seq[Long]) = {
+      val recs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          recs.add(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val out = f
+        org.apache.spark.ListenerBusDrain(sc)
+        (out, recs.toArray.toSeq.map(_.asInstanceOf[Long]).filter(_ > 0))
+      } finally sc.removeSparkListener(listener)
+    }
+    // suites share one session: drop what earlier suites left cached,
+    // so anything cached from here on was cached by this test
+    spark.catalog.clearCache()
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    def nothingCached(): Unit = {
+      assert(sc.getPersistentRDDs.keySet == persistedBefore,
+        s"persisted: ${sc.getPersistentRDDs -- persistedBefore}")
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
+
+    val ((plainPairs, hot), plainWrites) = stageWrites {
+      val sk = DedupPipeline.candidatesSkewAware(bk, cfg)
+      (sk.pairs.collect().length.toLong, sk.hotList)
+    }
+    nothingCached()
+    // the posting exchange wrote |postings| records, once; the pair
+    // dedup |pairs|; the size histogram shuffled nothing
+    assert(plainWrites.sorted == Seq(nPostings, plainPairs).sorted, s"writes=$plainWrites")
+    assert(hot.map(_.n) == Seq(500L))
+
+    val (harPairs, harWrites) = stageWrites {
+      DedupPipeline.candidatesSkewAware(bk, cfg, hot).pairs.collect().length.toLong
+    }
+    nothingCached()
+    assert(harPairs == plainPairs)
+    // the inherited bucket bypasses the posting exchange; the only other
+    // write is the per-key min aggregate (at most one row per input
+    // partition)
+    val rest = harWrites.diff(Seq(nPostings - 500, plainPairs))
+    assert(harWrites.length == rest.length + 2, s"writes=$harWrites")
+    assert(rest.sum <= sc.defaultParallelism, s"writes=$harWrites")
   }
 
   test("pipeline end-to-end result is invariant under HAR inheritance") {
@@ -135,14 +187,13 @@ class SkewSpec extends AnyFunSuite {
     // inherit a FABRICATED hot list naming real buckets: result must
     // not change (only the physical path for those keys does)
     val someBuckets = bk.toDF().groupBy(DedupPipeline.packedKeyCol.as("key"))
-      .count().withColumnRenamed("count", "n").limit(20)
-    val sk = DedupPipeline.candidatesSkewAware(bk, cfg,
-      Some(someBuckets.cache()))
+      .count().withColumnRenamed("count", "n").limit(20).as[HotKey].collect().toSeq
+    val sk = DedupPipeline.candidatesSkewAware(bk, cfg, someBuckets)
     val (ver, cleanup, _) = DedupPipeline.verifyWithCleanup(sk.pairs, sigs, corpus.toDF(), cfg)
     val got = DedupPipeline.clusters(corpus.toDF(), ver)
       .collect().map(r => (r.image_id, r.cluster_id)).sorted.toSeq
     assert(got == direct)
-    cleanup(); sk.cleanup()
+    cleanup()
     sigs.unpersist(); corpus.unpersist()
   }
 }

@@ -42,7 +42,6 @@ class TableBackendSpec extends AnyFunSuite {
       tbl.get(table).exists(_.configHash == configHash)
     def publishedBy(table: String): Option[String] = tbl.get(table).map(_.runId)
     def read(table: String): DataFrame = df(tbl(table))
-    def readMaterialized(table: String): DataFrame = read(table)
     def batches(table: String): Seq[String] = order.getOrElse(table, Vector.empty)
     def batchDirs(table: String): Seq[String] =
       batch.keys.filter(_._1 == table).map(_._2).toSeq
@@ -97,7 +96,6 @@ class TableBackendSpec extends AnyFunSuite {
     assert(io.exists("t1"))
     assert(io.isPublished("t1", "cfgA") && !io.isPublished("t1", "cfgB"))
     assert(io.read("t1").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
-    assert(io.readMaterialized("t1").collect().length == 3)
     assert(io.fileCounts("t1").map(_._2).sum == 3)
     io.publish(b, "t1", "cfgB", "run2") // replace
     assert(io.isPublished("t1", "cfgB") && !io.isPublished("t1", "cfgA"))
