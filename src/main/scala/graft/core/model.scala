@@ -57,21 +57,16 @@ final case class SignatureRow(
     degenerate: Boolean = false
 )
 
-/** One LSH bucket posting: (band index, band hash) → image. The analog of
-  * destor's feature→segment kv postings (`src/index/kvstore_htable.c`).
-  * `payload` carries the full 64-bit hash for hamming-LSH bands so the
-  * pair generator can reject far pairs AT EMISSION (bucket collisions
-  * grow ~n^2/keyspace; filtering before the pair shuffle keeps the
-  * candidate stream linear). 0 for bands with no payload semantics.
+/** One LSH bucket posting: bucket key → image. The analog of destor's
+  * feature→segment kv postings (`src/index/kvstore_htable.c`), keyed
+  * like them on one value: `key` is the bucket's `PairGen.postingKey`,
+  * made once where the posting is emitted. `payload` carries the full
+  * 64-bit hash for hamming-LSH bands so the pair generator can reject
+  * far pairs AT EMISSION (bucket collisions grow ~n^2/keyspace;
+  * filtering before the pair shuffle keeps the candidate stream
+  * linear). 0 for bands with no payload semantics.
   */
-final case class BucketRow(band: Int, bucket: Long, nid: Long, payload: Long = 0L)
-
-/** An unverified candidate pair (id1 < id2 lexicographically).
-  * `src` names the generating stage: "exact" | "minhash" | "phash" |
-  * "substr" — the analog of destor's dedup-decision provenance flags
-  * (`src/destor.h:170-188`).
-  */
-final case class CandidatePair(id1: String, id2: String, src: String)
+final case class BucketRow(key: Long, nid: Long, payload: Long = 0L)
 
 /** A verified duplicate pair with its evidence. */
 final case class VerifiedPair(

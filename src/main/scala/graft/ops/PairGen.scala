@@ -4,6 +4,7 @@ import graft.signatures.Sig
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** Streamed run-length candidate-pair expansion from LSH bucket
@@ -42,11 +43,28 @@ object PairGen {
   val SrcPhash = 4
   val SrcSubstr = 8
 
-  /** Signature class (a packed key's low two bits) → source bit. */
+  /** Signature classes — a posting key's low two bits. Phash buckets
+    * are hamming-LSH: their members pair only when the payloads
+    * (phashes) are within hammingMax bits. */
+  val ClassMinhash = 0
+  val ClassPhash = 1
+  val ClassSubstr = 2
+  val ClassExact = 3
+
+  /** Signature class → source bit. */
   private val ClassSrcbit = Array(SrcMinhash, SrcPhash, SrcSubstr, SrcExact)
-  /** The class whose buckets are hamming-LSH: members pair only when
-    * their payloads (phashes) are within hammingMax bits. */
-  private val HammingClass = 1
+
+  /** The posting key of bucket `bucket` of band `band`, class `cls`:
+    * Spark's `xxhash64(band, bucket)` (seed 42) with the class in the
+    * low two bits, so buckets of different classes never merge. It is
+    * the posting's only key — the posting sort, the HAR hot list, the
+    * stored index and the cross-batch probe all use it — so a posting
+    * row is exactly (key, id, payload), three longs, 32 bytes in an
+    * UnsafeRow instead of 48 with band and bucket alongside: postings
+    * are the pipeline's one O(data) shuffle, and the Tungsten sort on
+    * one long key is a pure radix sort (zero comparator calls). */
+  def postingKey(band: Int, bucket: Long, cls: Int): Long =
+    (XXH64.hashLong(bucket, XXH64.hashInt(band, 42L)) & -4L) | cls
 
   /** The class rule as columns, for the join-shaped pair paths (HAR
     * star pairs, the cross-batch probe): the class's source bit, and
@@ -56,7 +74,7 @@ object PairGen {
       (c, i) => c.when(cls === i, ClassSrcbit(i)))
 
   def hammingOk(cls: Column, a: Column, b: Column, hamMax: Int): Column =
-    cls =!= HammingClass || bit_count(a.bitwiseXOR(b)) <= hamMax
+    cls =!= ClassPhash || bit_count(a.bitwiseXOR(b)) <= hamMax
 
   /** Repartition + sort a (key, ...) posting table on its key: the one
     * posting shuffle. */
@@ -156,7 +174,7 @@ object PairGen {
       if (len < 2) return Iterator.empty
       val cls = (key & 3L).toInt
       val sb = ClassSrcbit(cls)
-      val ham = cls == HammingClass
+      val ham = cls == ClassPhash
       if (len <= cap) {
         // primitive dual-array insertion sort (len is cap-bounded);
         // canonical id1 < id2 within the bucket

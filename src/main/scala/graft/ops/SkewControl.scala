@@ -39,10 +39,10 @@ import org.apache.spark.sql.functions._
   */
 object SkewControl {
 
-  /** Bucket-size table (band, bucket, n) from a posting table —
-    * ONE partial-aggregated shuffle, tiny result. */
+  /** Bucket-size table (key, n) from a posting table — ONE
+    * partial-aggregated shuffle, tiny result. */
   def bucketSizes(postings: DataFrame): DataFrame =
-    postings.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
+    postings.groupBy("key").agg(count(lit(1)).as("n"))
 
   /** CBR adaptive cap: the `skewQuantile`-quantile of bucket sizes,
     * never below `floor` (the static bucketCap). Computed EXACTLY via a

@@ -4,8 +4,9 @@ import graft.core._
 import graft.signatures.{Codec, Sig}
 import graft.cluster.ConnectedComponents
 import graft.ops.PairGen
-import graft.ops.PairGen.{SrcExact, SrcMinhash, SrcSubstr}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.ops.PairGen.{ClassExact, ClassMinhash, ClassPhash, ClassSubstr, SrcExact, SrcMinhash,
+  SrcSubstr, postingKey}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The near-duplicate detection + clustering pipeline — destor's backup
@@ -24,9 +25,10 @@ import org.apache.spark.sql.functions._
   *  - signatures is a NARROW stage (mapPartitions; no shuffle); `bytes`
   *    is read once here and never again except for the small pixel-
   *    verify side-join (column pruning keeps it out of all other scans).
-  *  - candidate generation shuffles on (band,bucket) — the only O(data)
-  *    shuffle; bucket sizes are bounded by the CAP-analog skew stage
-  *    (star pairing for buckets > bucketCap) so no O(n^2) explosion.
+  *  - candidate generation shuffles on the packed posting key — the
+  *    only O(data) shuffle; bucket sizes are bounded by the CAP-analog
+  *    skew stage (star pairing for buckets > bucketCap) so no O(n^2)
+  *    explosion.
   *  - all joins are equi-joins; AQE splits residual skew.
   */
 /** Intermediate verify-stage row (pre pixel check). Top-level so the
@@ -54,9 +56,10 @@ object DedupPipeline extends Serializable {
     new String(out)
   }
 
-  // --- band-id namespaces: one flat (band,bucket) key space for every
+  // --- band-id namespaces: one flat posting key space for every
   //     candidate source (minhash LSH, phash hamming-LSH, winnowing
   //     substring postings, exact sha) — a single shuffle serves all.
+  //     The band id only salts the key hash (PairGen.postingKey).
   val BandPhash = 1000
   val BandSubstr = 2000
   val BandExactSha = 3000
@@ -157,7 +160,9 @@ object DedupPipeline extends Serializable {
     * Emits, per image: b minhash band keys, phashBands hamming band
     * keys (pigeonhole guarantee for hamming<=hammingMax since
     * hammingMax < phashBands), winnowed caption fingerprints
-    * (guaranteed substring recall), and the two exact keys. */
+    * (guaranteed substring recall), and the two exact keys, each under
+    * its packed posting key (PairGen.postingKey) with the class of the
+    * family that emits it. */
   def buckets(sigs: Dataset[SignatureRow], cfg: DedupConfig): Dataset[BucketRow] = {
     val spark = sigs.sparkSession
     import spark.implicits._
@@ -172,20 +177,23 @@ object DedupPipeline extends Serializable {
       // stage runs at ~60 rows/image so buffer churn is measurable)
       val out = new Array[BucketRow](bk.length + pk.length + fps.length + 2)
       var o = 0
+      def post(band: Int, bucket: Long, cls: Int, payload: Long = 0L): Unit = {
+        out(o) = BucketRow(postingKey(band, bucket, cls), s.nid, payload); o += 1
+      }
       var b = 0
-      while (b < bk.length) { out(o) = BucketRow(b, bk(b), s.nid); o += 1; b += 1 }
+      while (b < bk.length) { post(b, bk(b), ClassMinhash); b += 1 }
       b = 0
-      while (b < pk.length) { out(o) = BucketRow(BandPhash + b, pk(b), s.nid, s.phash); o += 1; b += 1 }
+      while (b < pk.length) { post(BandPhash + b, pk(b), ClassPhash, s.phash); b += 1 }
       var i = 0
-      while (i < fps.length) { out(o) = BucketRow(BandSubstr, fps(i), s.nid); o += 1; i += 1 }
-      out(o) = BucketRow(BandExactSha, Sig.hash64(s.sha), s.nid)
-      out(o + 1) = BucketRow(BandExactPix, Sig.hash64(s.pixsha), s.nid)
+      while (i < fps.length) { post(BandSubstr, fps(i), ClassSubstr); i += 1 }
+      post(BandExactSha, Sig.hash64(s.sha), ClassExact)
+      post(BandExactPix, Sig.hash64(s.pixsha), ClassExact)
       out
     }
   }
 
   /** Stage 3 — candidate pair generation with explicit skew handling.
-    * ONE shuffle groups postings per packed (band,bucket) key; pairs are
+    * ONE shuffle groups postings per packed posting key; pairs are
     * expanded locally by PairGen's run-length expander — all-pairs for
     * buckets <= bucketCap, star pairing to the min image_id above it
     * (destor's CAP capping, src/cap_rewrite.c:44-107: bounded fan-in per
@@ -196,39 +204,13 @@ object DedupPipeline extends Serializable {
     */
   def candidates(bk: Dataset[BucketRow], cfg: DedupConfig): DataFrame =
     finishCandidates(PairGen.expandPairs(
-      PairGen.sortByKey(keyed(bk.toDF())), cfg.bucketCap, cfg.hammingMax))
-
-  /** Signature class of a band: 0 minhash, 1 phash (hamming LSH),
-    * 2 substring, 3 exact — PairGen's class rule maps it to a source bit
-    * and the hamming gate. */
-  private[pipeline] def classCol(band: Column): Column =
-    when(band < BandPhash, 0L)
-      .when(band < BandSubstr, 1L)
-      .when(band < BandExactSha, 2L)
-      .otherwise(3L)
-
-  // --- packed posting shuffle key: xxhash64(band,bucket) with the
-  //     2-bit signature-CLASS index in the low bits. The hot-path
-  //     shuffle row is then exactly (key, nid, payload) — three longs,
-  //     32 bytes in UnsafeRow — instead of carrying band+bucket
-  //     alongside (48 bytes): postings are the pipeline's one O(data)
-  //     shuffle, so every byte here is the binding resource at scale.
-  //     Key collisions merge two same-class buckets: candidates only
-  //     gain members and verify is exact, so recall/correctness are
-  //     unaffected (cross-class merges are impossible — the class bits
-  //     differ). The Tungsten sort on the single long key is a pure
-  //     radix sort (zero comparator calls). The HAR hot list is keyed
-  //     on it too.
-  private[graft] def packedKeyCol: Column =
-    xxhash64(col("band"), col("bucket")).bitwiseAND(lit(-4L)).bitwiseOR(classCol(col("band")))
-
-  /** Postings as PairGen's (key, nid, payload) rows. */
-  private def keyed(bk: DataFrame): DataFrame =
-    bk.select(packedKeyCol.as("key"), col("nid"), col("payload"))
+      PairGen.sortByKey(bk.toDF()), cfg.bucketCap, cfg.hammingMax))
 
   /** Cross-band pair dedup + provenance: bit-OR the source bits of every
-    * band a pair was seen in, label with the strongest evidence class. */
-  private[pipeline] def finishCandidates(pairs: DataFrame): DataFrame =
+    * band a pair was seen in, label with the strongest evidence class.
+    * Takes raw (id1, id2, srcbit) pairs; every candidate path finishes
+    * its pairs here exactly once. */
+  private[graft] def finishCandidates(pairs: DataFrame): DataFrame =
     pairs
       // nid-collision guard: two distinct images hashing to the same nid
       // inside one bucket would emit a degenerate self-pair — drop it
@@ -242,10 +224,12 @@ object DedupPipeline extends Serializable {
           .when(col("srcmask").bitwiseAND(SrcSubstr) =!= 0, "substr")
           .otherwise("phash"))
 
-  /** Skew-aware candidate generation result: the candidate pairs (a
-    * plain lazy query — nothing is cached), this run's HAR hot list as a
-    * driver-side (key, n) list on the packed posting key (the NEXT run's
-    * inherited list), and the CBR-derived effective cap. */
+  /** Skew-aware candidate generation result: the raw (id1, id2, srcbit)
+    * pairs (a plain lazy query — nothing is cached — that the caller
+    * finishes with [[finishCandidates]], together with any other pairs
+    * of the batch), this run's HAR hot list as a driver-side (key, n)
+    * list on the packed posting key (the NEXT run's inherited list), and
+    * the CBR-derived effective cap. */
   final case class SkewAwareCandidates(pairs: DataFrame, hotList: Seq[HotKey], capUsed: Int)
 
   /** Stage 3 with BOTH adaptive skew controllers live (see SkewControl):
@@ -271,7 +255,7 @@ object DedupPipeline extends Serializable {
       inheritedHot: Seq[HotKey] = Seq.empty): SkewAwareCandidates = {
     val spark = bk.sparkSession
     import spark.implicits._
-    val posts = keyed(bk.toDF())
+    val posts = bk.toDF()
 
     // HAR: split the inherited keys out BEFORE the posting shuffle — the
     // whole point is that known-skewed keys never land on one sort
@@ -332,9 +316,7 @@ object DedupPipeline extends Serializable {
     val backPairs = for (hp <- hotPosts if shrunk.nonEmpty) yield PairGen.expandPairs(
       PairGen.sortByKey(hp.join(broadcast(shrunk.map(_._1).toSeq.toDF("key")), Seq("key"), "left_semi")),
       cap, cfg.hammingMax)
-    SkewAwareCandidates(
-      finishCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _)),
-      hotList.toSeq, cap)
+    SkewAwareCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _), hotList.toSeq, cap)
   }
 
   /** Stage 4 — verification with the EXACT oracle predicates (same

@@ -24,8 +24,8 @@ import org.json4s.jackson.Serialization
   *                   store analog; `bytes` is only ever read back for
   *                   pixel-verify side-joins, column-pruned otherwise)
   *   sig_store       per-image signature bundles (recipe/feature analog)
-  *   postings_store  (band, bucket, nid, payload, ingest_seq) —
-  *                   THE probe index (kv store analog)
+  *   postings_store  (key, nid, payload, ingest_seq) on the packed
+  *                   posting key — THE probe index (kv store analog)
   *   edges_store     verified dup pairs per batch (provenance for
   *                   retention-time cluster recompute)
   *   clusters_current  latest full cluster assignment (overwritten per
@@ -51,9 +51,9 @@ import org.json4s.jackson.Serialization
   * ingest inherits) next to its signatures.
   *
   * Probe shape (scale analysis at 10^12 stored rows): the store side is
-  * pruned FIRST by an equi-join on the new batch's distinct (band,
-  * bucket) keys — a fraction proportional to |batch|, not |store| —
-  * then fan-in per bucket is FIFO-capped at cfg.indexValueLength
+  * pruned FIRST by an equi-join on the new batch's distinct posting
+  * keys — a fraction proportional to |batch|, not |store| — then
+  * fan-in per key is FIFO-capped at cfg.indexValueLength
   * newest entries (destor's index_value_length), so one boilerplate
   * bucket accumulated over months cannot explode a single probe.
   * Old-vs-old pairs are never re-generated: within-batch pairs come
@@ -92,6 +92,10 @@ final class IncrementalDedup(
     import spark.implicits._
     val committed = ingested
     require(!committed.contains(runId), s"batch $runId already ingested")
+    // the index's key column, checked in the first batch's footer schema
+    require(!io.hasBatches(PostStore) || io.readBatches(PostStore).columns.contains("key"),
+      s"$PostStore under $workDir was written in the old (band, bucket) posting format, " +
+        "which this version cannot probe; ingest into a new store")
     // crash-retry self-heal: SigStore is the COMMIT MARKER (listed
     // last, and `ingested` is keyed on it), so ANY other runId with a
     // batch dir but no SigStore entry is debris from a crashed attempt:
@@ -174,36 +178,33 @@ final class IncrementalDedup(
     val cand = stage("candidate_pairs", CandStore) {
       val inheritedHot = committed.lastOption.flatMap(record).fold(Seq.empty[HotKey])(_.har_hot)
       val sk = DedupPipeline.candidatesSkewAware(newPost, cfg, inheritedHot)
-      // one cross-source pair dedup: srcmask = bit_or over within + cross
+      // one pair dedup over within + cross pairs: srcmask = bit_or of both
       Staged(DedupPipeline.finishCandidates(
-          sk.pairs.select(col("id1"), col("id2"), col("srcmask").as("srcbit"))
-            .unionByName(crossPairs(newPost, io.batchRowCount(PostStore, runId)))),
+          sk.pairs.unionByName(crossPairs(newPost, io.batchRowCount(PostStore, runId)))),
         () => Map("cap_used" -> sk.capUsed.toDouble,
           "har_inherited_buckets" -> inheritedHot.length.toDouble),
         sk.hotList)
     }
 
-    // 3. verify — old sides resolved from the STORES (no recompute),
-    //    PRUNED to the candidate ids FIRST: verify's shuffle_hash joins
-    //    exchange their full inputs, so feeding them the whole store
-    //    would cost O(|store|) per ingest even though the probe side is
-    //    beautifully bounded (destor's probe equally touches only hit
-    //    keys, src/index/index.c:181-204). A broadcast semi-join (the
-    //    same needIds pattern as verify's internal pixel prune) bounds
-    //    both verify sides by O(|cand|); above the broadcast threshold
-    //    (pathological candidate sets ~ corpus-sized) the shuffled
-    //    semi-join is the correct plan and AQE handles it.
+    // 3. verify — old sides resolved from the STORES (no recompute).
+    //    The signature side is PRUNED to the candidate ids first:
+    //    verify's shuffle_hash joins exchange their full inputs, so
+    //    feeding them the whole store would cost O(|store|) per ingest
+    //    even though the probe side is beautifully bounded (destor's
+    //    probe equally touches only hit keys, src/index/index.c:181-204).
+    //    The image side needs no prune here: verify reads `bytes` only
+    //    through its pixel side-join, which already keeps just the ids
+    //    its pending pairs touch.
     def withStore(staged: DataFrame, store: String): DataFrame =
       if (io.hasBatches(store)) staged.unionByName(io.readBatches(store)) else staged
     val allImages =
       if (cfg.signatureOnly) withStore(images, ImagesStore).select(metaCols: _*)
       else withStore(images, ImagesStore)
     val newEdges = stage("verified_pairs", EdgeStore) {
-      val (verSigs, verImages, cleanupPrune) = pruneToCandidates(cand,
-        io.batchRowCount(CandStore, runId), withStore(sigs.toDF(), SigStore).as[SignatureRow],
-        allImages)
-      val (ver, cleanupMid, _) = DedupPipeline.verifyWithCleanup(cand, verSigs, verImages, cfg)
-      Staged(ver.toDF(), () => { cleanupMid(); cleanupPrune(); Map.empty })
+      val verSigs = pruneToCandidates(cand, io.batchRowCount(CandStore, runId),
+        withStore(sigs.toDF(), SigStore).as[SignatureRow])
+      val (ver, cleanupMid, _) = DedupPipeline.verifyWithCleanup(cand, verSigs, allImages, cfg)
+      Staged(ver.toDF(), () => { cleanupMid(); Map.empty })
     }
 
     // 4. cluster maintenance: previous assignments as star edges + this
@@ -214,15 +215,20 @@ final class IncrementalDedup(
     val t0 = System.nanoTime()
     val clustersResumed = io.isPublished(ClustersTable, key)
     if (!clustersResumed) {
-      val prevEdges =
-        if (committed.isEmpty) spark.emptyDataset[(String, String)].toDF("src", "dst")
+      // (edges, footer row count): the count bounds the edges and sizes
+      // connected components' partitioner without a counting job
+      val (prevEdges, nPrev) =
+        if (committed.isEmpty) (spark.emptyDataset[(String, String)].toDF("src", "dst"), 0L)
         else if (io.publishedBy(ClustersTable) == committed.lastOption)
-          io.read(ClustersTable)
+          (io.read(ClustersTable)
             .filter(col("image_id") =!= col("cluster_id"))
-            .select(col("image_id").as("src"), col("cluster_id").as("dst"))
-        else io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
+            .select(col("image_id").as("src"), col("cluster_id").as("dst")),
+            io.fileCounts(ClustersTable).map(_._2).sum)
+        else (io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst")),
+          storeRowCount(io, EdgeStore))
       io.publish(DedupPipeline.assign(allImages,
-          newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges)),
+          newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges),
+          Some(io.batchRowCount(EdgeStore, runId) + nPrev)),
         ClustersTable, key, runId)
     }
     val clusterFiles = io.fileCounts(ClustersTable).map(_._2)
@@ -240,9 +246,16 @@ final class IncrementalDedup(
   }
 
   /** Cross-batch probe: new postings vs the stored index, as raw
-    * (id1, id2, srcbit) pairs. `nPostings` (the staged batch's footer
+    * (id1, id2, srcbit) pairs, on the packed posting key alone: the
+    * Bloom filter, the join, the FIFO window and the signature class
+    * (`key & 3`) all read `key`. `nPostings` (the staged batch's footer
     * row count) bounds the number of distinct new keys and sizes the
-    * Bloom filter without a job. */
+    * Bloom filter without a job. Trade-off: two same-class buckets whose
+    * keys collide share one FIFO cap, so the cap counts their entries
+    * together — the same 62-bit collision the posting sort and the HAR
+    * list already accept (a colliding bucket may lose stored entries
+    * past the shared cap; the extra pairs it gains are verified
+    * exactly, so it never causes a false merge). */
   private def crossPairs(newPost: Dataset[BucketRow], nPostings: Long): DataFrame = {
     import spark.implicits._
     if (!io.hasBatches(PostStore))
@@ -250,39 +263,35 @@ final class IncrementalDedup(
     val old = io.readBatches(PostStore)
     // F7 Bloom front-end (DDFS's in-memory filter that prunes index
     // probes, reference src/utils/bloom_filter.c:98-127): a driver-built
-    // Bloom over the new batch's bucket keys drops ~all store rows whose
-    // bucket the batch never touches BEFORE the shuffle join. The store
+    // Bloom over the new batch's posting keys drops ~all store rows whose
+    // key the batch never touches BEFORE the shuffle join. The store
     // side is |store| rows, the batch side |batch| — without the bloom
     // every stored posting pays the exchange; with it only (touched +
     // fpp * rest) do. False positives are removed by the equi-join; no
     // false negatives. Built straight from the staged postings: inserting
     // a key twice sets the same bits.
-    val bloom = newPost.stat.bloomFilter(
-      xxhash64(col("band"), col("bucket")), math.max(nPostings, 1L), cfg.bloomFpp)
+    val bloom = newPost.stat.bloomFilter(col("key"), math.max(nPostings, 1L), cfg.bloomFpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((k: Long) => bloomBc.value.mightContainLong(k))
     // store-side prune: bloom first (narrow, pre-shuffle), then the
-    // exact equi-join on the batch's keys; fan-in per bucket FIFO-capped
+    // exact equi-join on the batch's keys; fan-in per key FIFO-capped
     // at the newest cfg.indexValueLength entries
     val touched = old
-      .filter(mightContain(xxhash64(col("band"), col("bucket"))))
-      .join(newPost.select("band", "bucket").distinct(), Seq("band", "bucket"))
-    val w = Window.partitionBy("band", "bucket")
-      .orderBy(col("ingest_seq").desc, col("nid").desc)
+      .filter(mightContain(col("key")))
+      .join(newPost.select("key").distinct(), "key")
+    val w = Window.partitionBy("key").orderBy(col("ingest_seq").desc, col("nid").desc)
     val capped = touched
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= cfg.indexValueLength)
-      .select(col("band"), col("bucket"),
-        col("nid").as("old_id"), col("payload").as("old_payload"))
-    val cls = DedupPipeline.classCol(col("band"))
-    val pairs = newPost.toDF().join(capped, Seq("band", "bucket"))
+      .select(col("key"), col("nid").as("old_id"), col("payload").as("old_payload"))
+    val cls = col("key").bitwiseAND(3L)
+    newPost.toDF().join(capped, "key")
       .filter(col("nid") =!= col("old_id"))
       .filter(PairGen.hammingOk(cls, col("payload"), col("old_payload"), cfg.hammingMax))
       .select(
         least(col("nid"), col("old_id")).as("id1"),
         greatest(col("nid"), col("old_id")).as("id2"),
         PairGen.srcbitCol(cls).as("srcbit"))
-    pairs
   }
 }
 
@@ -346,38 +355,28 @@ object IncrementalDedup {
     }
   }
 
-  /** Ids (pairs * 2, or touched rows) at or below which the candidate
-    * id list broadcasts — the same order as verify's pixel needIds
-    * threshold; a long id is 8 bytes, so 4M ids is a ~32 MB build side. */
+  /** Ids (pairs * 2) at or below which the candidate id list
+    * broadcasts — the same order as verify's pixel needIds threshold; a
+    * long id is 8 bytes, so 4M ids is a ~32 MB build side. */
   private[pipeline] val BroadcastIdLimit = 4000000L
 
-  /** Prune the verify-stage signature and image sides to the ids that
-    * appear in the candidate pairs: verify cost is then O(batch +
-    * touched), never O(store). Returns (prunedSigs, prunedImages,
-    * cleanup) — the pruned signature set is persisted (it feeds both
-    * verify caption joins AND the image-id derivation); call cleanup
-    * after the verified pairs are materialized. */
+  /** Rows of every committed batch of `store`, from parquet footers. */
+  private[pipeline] def storeRowCount(io: TableBackend, store: String): Long =
+    io.batches(store).map(io.batchRowCount(store, _)).sum
+
+  /** Prune the verify-stage signature side to the ids in the candidate
+    * pairs, so verify costs O(batch + touched), never O(store): a lazy
+    * semi-join, nothing cached. The id list broadcasts while
+    * `candPairs` (the staged candidates' footer count) keeps it small;
+    * above that (pathological, corpus-sized candidate sets) the
+    * shuffled semi-join is the correct plan and AQE handles it. */
   private[graft] def pruneToCandidates(
       cand: DataFrame,
       candPairs: Long,
-      allSigs: Dataset[SignatureRow],
-      allImages: DataFrame): (Dataset[SignatureRow], DataFrame, () => Unit) = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val candIdsRaw = cand.select(col("id1").as("nid"))
-      .union(cand.select(col("id2").as("nid"))).distinct()
-    val candIds =
-      if (candPairs * 2 <= BroadcastIdLimit) broadcast(candIdsRaw) else candIdsRaw
-    val verSigs = allSigs.toDF().join(candIds, "nid").as[SignatureRow].persist(lvl)
-    // touched image ids come from the (already pruned, persisted)
-    // signature rows — O(|cand|), and counting it materializes the
-    // cache before verify's joins consume it twice
-    val nTouched = verSigs.count()
-    val touchedIds = verSigs.toDF().select("image_id")
-    val verImages = allImages.join(
-      if (nTouched <= BroadcastIdLimit) broadcast(touchedIds) else touchedIds,
-      "image_id")
-    (verSigs, verImages, () => { verSigs.unpersist(blocking = false); () })
+      allSigs: Dataset[SignatureRow]): Dataset[SignatureRow] = {
+    import allSigs.sparkSession.implicits._
+    val candIds = cand.select(col("id1").as("nid")).union(cand.select(col("id2").as("nid")))
+    allSigs.join(if (candPairs * 2 <= BroadcastIdLimit) broadcast(candIds) else candIds,
+      Seq("nid"), "left_semi").as[SignatureRow]
   }
 }

@@ -87,8 +87,10 @@ final class Retention(
         if (io.hasBatches(EdgeStore))
           io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
         else surviving.limit(0).select(col("image_id").as("src"), col("image_id").as("dst"))
-      io.publish(DedupPipeline.assign(surviving, edges), ClustersTable, cfg.configHash,
-        survivors.last)
+      // the compacted edge batches' footer rows size connected
+      // components' partitioner without a counting job
+      io.publish(DedupPipeline.assign(surviving, edges, Some(storeRowCount(io, EdgeStore))),
+        ClustersTable, cfg.configHash, survivors.last)
     } else if (io.exists(ClustersTable)) {
       io.drop(ClustersTable)
     }

@@ -138,19 +138,86 @@ class IncrementalSpec extends AnyFunSuite {
     val ids = sigs.collect().map(_.nid).distinct.sorted.take(4)
     val cand = Seq((ids(0), ids(1), 3, "exact"), (ids(2), ids(3), 2, "minhash"))
       .toDF("id1", "id2", "srcmask", "src")
-    val (vs, vi, cleanup) = IncrementalDedup.pruneToCandidates(cand, 2L, sigs, corpus.toDF())
+    val vs = IncrementalDedup.pruneToCandidates(cand, 2L, sigs)
     // the signature side verify sees is exactly the candidate-touched
     // rows — a 6-group store contributes 4 rows, not nStore
     assert(nStore > 4)
     assert(vs.count() == 4)
     assert(vs.collect().map(_.nid).toSet == ids.toSet)
-    // the image side likewise, and its physical plan joins a BROADCAST
-    // of the touched ids — the image store is never hash-exchanged
-    assert(vi.count() == 4)
-    val plan = vi.queryExecution.executedPlan.toString
+    // the image side is bounded by verify's own pixel side-join: the
+    // `bytes` rows it caches are only ids of pairs pending a pixel
+    // check, selected by a join with a BROADCAST of those ids — the
+    // image store is never hash-exchanged
+    val real = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg).cache()
+    val (ver, cleanup, _) = DedupPipeline.verifyWithCleanup(real,
+      IncrementalDedup.pruneToCandidates(real, real.count(), sigs), corpus.toDF(), cfg)
+    ver.count()
+    val pix = ver.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
+        if r.output.exists(_.name.startsWith("bytes")) => r.cacheBuilder.cachedPlan
+    }
+    assert(pix.nonEmpty, "no cached pixel side")
+    val plan = pix.head.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast prune, got:\n$plan")
+    val pixIds = pix.head.execute().map(_.getUTF8String(0).toString).collect().toSet
+    val imageOf = sigs.collect().map(s => s.nid -> s.image_id).toMap
+    val touched = real.select("id1", "id2").as[(Long, Long)].collect()
+      .flatMap { case (a, b) => Seq(imageOf(a), imageOf(b)) }.toSet
+    assert(pixIds.nonEmpty && pixIds.subsetOf(touched) && pixIds.size < nStore,
+      s"pixel side holds ${pixIds.size} of $nStore images")
     cleanup()
-    corpus.unpersist(); sigs.unpersist()
+    real.unpersist(); corpus.unpersist(); sigs.unpersist()
+  }
+
+  test("the candidate stage finishes its within-batch and cross-batch pairs in one aggregate") {
+    val corpus = CorpusGen.generate(spark, 8).cache()
+    val idNum = substring(col("image_id"), 4, 10).cast("long")
+    // every (id1, id2) aggregate in the plan of each candidates_store write
+    val aggregates = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      import org.apache.spark.sql.catalyst.expressions.NamedExpression
+      import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+      import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.logical.foreach {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toString.contains(IncrementalDedup.CandStore) =>
+            aggregates.add(w.query.collect {
+              case a: Aggregate if a.groupingExpressions.collect { case n: NamedExpression => n.name } ==
+                Seq("id1", "id2") => a
+            }.length)
+          case _ =>
+        }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val inc = new IncrementalDedup(spark, Files.createTempDirectory("graft-incr-agg").toString, cfg)
+      inc.ingest(corpus.filter(idNum % 2 === 0), "r1")
+      inc.ingest(corpus.filter(idNum % 2 === 1), "r2") // with cross-batch pairs
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val seen = aggregates.toArray.toSeq
+    // one candidate write per ingest, one aggregate in each
+    assert(seen == Seq(1, 1), s"(id1, id2) aggregates per candidate write: $seen")
+    corpus.unpersist()
+  }
+
+  test("a postings store in the old (band, bucket) format fails with a named error before any stage runs") {
+    val corpus = CorpusGen.generate(spark, 4).cache()
+    val idNum = substring(col("image_id"), 4, 10).cast("long")
+    val inc = new IncrementalDedup(spark, Files.createTempDirectory("graft-incr-old").toString, cfg)
+    inc.ingest(corpus.filter(idNum % 2 === 0), "r1")
+    // r1's postings as an older version wrote them
+    inc.io.rewriteBatch(Seq((0, 7L, 1L, 0L, 0)).toDF("band", "bucket", "nid", "payload", "ingest_seq"),
+      IncrementalDedup.PostStore, "r1")
+    val e = intercept[IllegalArgumentException](inc.ingest(corpus.filter(idNum % 2 === 1), "r2"))
+    assert(e.getMessage.contains(IncrementalDedup.PostStore) && e.getMessage.contains("(band, bucket)"),
+      e.getMessage)
+    // nothing committed, nothing staged
+    assert(inc.ingested == Seq("r1"))
+    for (s <- IncrementalDedup.StageStores) assert(!inc.io.batchDirs(s).contains("r2"), s"$s staged r2")
+    corpus.unpersist()
   }
 
   test("HAR through ingest: batch 2 inherits batch 1's hot keys and clusters as without the list") {
@@ -182,7 +249,7 @@ class IncrementalSpec extends AnyFunSuite {
       val hot = inc.record("r1").get.har_hot
       // the list is (key, n) on the packed posting key of A's postings
       val keys = inc.io.readBatch(IncrementalDedup.PostStore, "r1")
-        .select(DedupPipeline.packedKeyCol).as[Long].collect().toSet
+        .select("key").as[Long].collect().toSet
       assert(hot.forall(h => keys.contains(h.key)))
       assert(hot.nonEmpty, "batch A recorded no hot key")
     }

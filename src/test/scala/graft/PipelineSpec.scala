@@ -84,6 +84,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(missedCand.size <= math.max(1, oraclePairs.size / 100), s"candidate misses: ${missedCand.take(5)}")
   }
 
+  test("buckets emits Spark's xxhash64(band, bucket) & -4 | class as each posting's key") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.xxhash64
+    import graft.signatures.Sig
+    val few = DedupPipeline.signatures(corpus, cfg).limit(3).collect().toSeq
+    val got = DedupPipeline.buckets(spark.createDataset(few), cfg).collect()
+      .map(r => (r.key, r.nid, r.payload)).sorted.toSeq
+    // (band, bucket, class, nid, payload) of every posting by the band
+    // layout: minhash bands, phash combos, caption fingerprints, sha, pixsha
+    val layout = few.flatMap { s =>
+      val pk = Sig.hammingComboKeys(s.phash, cfg.phashBlocks, cfg.phashCombo)
+      val fps =
+        if (s.caption.length >= cfg.substrMinChars)
+          Sig.captionFingerprints(s.caption, cfg.substrGram, cfg.substrWindow).toSeq
+        else Seq.empty
+      s.bands.indices.map(b => (b, s.bands(b), 0L, s.nid, 0L)) ++
+        pk.indices.map(b => (DedupPipeline.BandPhash + b, pk(b), 1L, s.nid, s.phash)) ++
+        fps.map(f => (DedupPipeline.BandSubstr, f, 2L, s.nid, 0L)) ++
+        Seq((DedupPipeline.BandExactSha, Sig.hash64(s.sha), 3L, s.nid, 0L),
+          (DedupPipeline.BandExactPix, Sig.hash64(s.pixsha), 3L, s.nid, 0L))
+    }
+    assert(layout.map(_._3).toSet == Set(0L, 1L, 2L, 3L))
+    val want = layout.toDF("band", "bucket", "cls", "nid", "payload")
+      .select(xxhash64($"band", $"bucket").bitwiseAND(-4L).bitwiseOR($"cls"), $"nid", $"payload")
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(got == want)
+  }
+
   test("cluster assignment is invariant to partitioning") {
     val a = DedupPipeline.run(corpus.repartition(3), cfg).collect()
       .map(c => c.image_id -> c.cluster_id).sortBy(_._1).toSeq

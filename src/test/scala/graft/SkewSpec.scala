@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{BucketRow, DedupConfig, HotKey}
-import graft.ops.SkewControl
+import graft.ops.{PairGen, SkewControl}
 import graft.pipeline.DedupPipeline
 import graft.synth.CorpusGen
 import org.apache.spark.sql.SparkSession
@@ -16,17 +16,19 @@ class SkewSpec extends AnyFunSuite {
 
   import spark.implicits._
 
+  /** The posting key of a synthetic bucket (minhash class unless named). */
+  private def key(band: Int, bucket: Long, cls: Int = PairGen.ClassMinhash): Long =
+    PairGen.postingKey(band, bucket, cls)
+
   // synthetic nid scheme: bucket b's members are [b*100000, b*100000+n)
   private def postings(sizes: Seq[Int]): Seq[BucketRow] =
     sizes.zipWithIndex.flatMap { case (n, b) =>
-      (0 until n).map(i => BucketRow(0, b.toLong * 1000003L, b.toLong * 100000 + i))
+      (0 until n).map(i => BucketRow(key(0, b.toLong * 1000003L), b.toLong * 100000 + i))
     }
 
-  /** A hand-built HAR hot list: (band, bucket, n) → (key, n) on the
-    * packed posting key, the recorded list's shape. */
-  private def hotList(buckets: Seq[(Int, Long, Long)]): Seq[HotKey] =
-    buckets.toDF("band", "bucket", "n").select(DedupPipeline.packedKeyCol.as("key"), $"n")
-      .as[HotKey].collect().toSeq
+  /** The finished candidate pairs of a skew-aware run. */
+  private def finished(sk: DedupPipeline.SkewAwareCandidates) =
+    DedupPipeline.finishCandidates(sk.pairs)
 
   test("CBR: shifted bucket-size distribution re-derives the cap (knob not dead)") {
     // a corpus whose TYPICAL bucket has 100 members — above the static
@@ -43,11 +45,11 @@ class SkewSpec extends AnyFunSuite {
     // per bucket), NOT star-paired (99) — the static cap would have
     // star-paired the entire corpus
     val sk = DedupPipeline.candidatesSkewAware(bk, cfg)
-    val one = sk.pairs.filter("id1 < 100000").count()
+    val one = finished(sk).filter("id1 < 100000").count()
     assert(sk.capUsed == cap)
     assert(one == 100L * 99 / 2, s"bucket0 pairs=$one")
     // the mega-bucket is above the adaptive cap: star pairs only
-    val mega = sk.pairs.filter("id1 >= 20000000 or id2 >= 20000000").count()
+    val mega = finished(sk).filter("id1 >= 20000000 or id2 >= 20000000").count()
     assert(mega == 4999, s"mega pairs=$mega")
     // and it is reported as hot for the next run (HAR handoff)
     val hot = sk.hotList
@@ -59,7 +61,7 @@ class SkewSpec extends AnyFunSuite {
     val bk = spark.createDataset(postings(dist))
 
     val base = DedupPipeline.candidatesSkewAware(bk, cfg)
-    val basePairs = base.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)]
+    val basePairs = finished(base).select("id1", "id2", "srcmask").as[(Long, Long, Int)]
       .collect().toSet
     val hot = base.hotList
     assert(hot.length == 1)
@@ -67,7 +69,7 @@ class SkewSpec extends AnyFunSuite {
     // run 2 "inherits" run 1's hot list: identical candidates, but the
     // hot bucket's postings never enter the sort shuffle
     val har = DedupPipeline.candidatesSkewAware(bk, cfg, hot)
-    val harPairs = har.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)]
+    val harPairs = finished(har).select("id1", "id2", "srcmask").as[(Long, Long, Int)]
       .collect().toSet
     assert(harPairs == basePairs)
   }
@@ -80,9 +82,9 @@ class SkewSpec extends AnyFunSuite {
     val cfgLow = cfg.copy(bucketCap = 2)
     val base = DedupPipeline.candidatesSkewAware(bk, cfgLow)
     val har = DedupPipeline.candidatesSkewAware(bk, cfgLow,
-      hotList(Seq((0, 100L * 1000003L, 9L), (0, 101L * 1000003L, 9L))))
+      Seq(HotKey(key(0, 100L * 1000003L), 9L), HotKey(key(0, 101L * 1000003L), 9L)))
     def pairs(sk: DedupPipeline.SkewAwareCandidates) =
-      sk.pairs.select("id1", "id2", "srcmask").as[(Long, Long, Int)].collect().toSet
+      finished(sk).select("id1", "id2", "srcmask").as[(Long, Long, Int)].collect().toSet
     assert(base.capUsed == 5 && har.capUsed == 5)
     assert(pairs(har) == pairs(base) && pairs(base).size == 20)
   }
@@ -96,13 +98,13 @@ class SkewSpec extends AnyFunSuite {
     val members = Seq(
       (1L, 0L), (2L, 1L), (3L, 3L), // hamming(0, x) <= 2 bits
       (4L, 0x00ffffffffL), (5L, 0xffff000000L)) // far
-    val filler = (0 until 200).map(i => BucketRow(0, 500L + i, 900000L + i))
+    val filler = (0 until 200).map(i => BucketRow(key(0, 500L + i), 900000L + i))
     val bk = spark.createDataset(
-      members.map { case (id, p) => BucketRow(band, 7L, id, p) } ++ filler)
-    val hot = hotList(Seq((band, 7L, 5L)))
+      members.map { case (id, p) => BucketRow(key(band, 7L, PairGen.ClassPhash), id, p) } ++ filler)
+    val hot = Seq(HotKey(key(band, 7L, PairGen.ClassPhash), 5L))
     val har = DedupPipeline.candidatesSkewAware(bk, cfgSmall, hot)
     assert(har.capUsed == 4)
-    val pairs = har.pairs.select("id1", "id2").as[(Long, Long)].collect().toSet
+    val pairs = finished(har).select("id1", "id2").as[(Long, Long)].collect().toSet
     // star from min member nid 1 (payload 0): far members rejected by
     // the hamming gate exactly as the streamed expander would
     assert(pairs == Set((1L, 2L), (1L, 3L)))
@@ -111,12 +113,12 @@ class SkewSpec extends AnyFunSuite {
   test("HAR: an inherited key that shrank below the cap is all-paired again") {
     // run-2 bucket has only 3 members though it was hot last run: the
     // star path must NOT fire (pair set == plain expander's all-pairs)
-    val filler = (0 until 200).map(i => BucketRow(0, 500L + i, 900000L + i))
+    val filler = (0 until 200).map(i => BucketRow(key(0, 500L + i), 900000L + i))
     val bk = spark.createDataset(
-      Seq(1L, 2L, 3L).map(id => BucketRow(0, 7L, id)) ++ filler)
-    val hot = hotList(Seq((0, 7L, 999L)))
+      Seq(1L, 2L, 3L).map(id => BucketRow(key(0, 7L), id)) ++ filler)
+    val hot = Seq(HotKey(key(0, 7L), 999L))
     val har = DedupPipeline.candidatesSkewAware(bk, cfg, hot)
-    val pairs = har.pairs.select("id1", "id2").as[(Long, Long)].collect().toSet
+    val pairs = finished(har).select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
@@ -155,7 +157,7 @@ class SkewSpec extends AnyFunSuite {
 
     val ((plainPairs, hot), plainWrites) = stageWrites {
       val sk = DedupPipeline.candidatesSkewAware(bk, cfg)
-      (sk.pairs.collect().length.toLong, sk.hotList)
+      (finished(sk).collect().length.toLong, sk.hotList)
     }
     nothingCached()
     // the posting exchange wrote |postings| records, once; the pair
@@ -164,7 +166,7 @@ class SkewSpec extends AnyFunSuite {
     assert(hot.map(_.n) == Seq(500L))
 
     val (harPairs, harWrites) = stageWrites {
-      DedupPipeline.candidatesSkewAware(bk, cfg, hot).pairs.collect().length.toLong
+      finished(DedupPipeline.candidatesSkewAware(bk, cfg, hot)).collect().length.toLong
     }
     nothingCached()
     assert(harPairs == plainPairs)
@@ -186,10 +188,10 @@ class SkewSpec extends AnyFunSuite {
     val bk = DedupPipeline.buckets(sigs, cfg)
     // inherit a FABRICATED hot list naming real buckets: result must
     // not change (only the physical path for those keys does)
-    val someBuckets = bk.toDF().groupBy(DedupPipeline.packedKeyCol.as("key"))
+    val someBuckets = bk.toDF().groupBy("key")
       .count().withColumnRenamed("count", "n").limit(20).as[HotKey].collect().toSeq
     val sk = DedupPipeline.candidatesSkewAware(bk, cfg, someBuckets)
-    val (ver, cleanup, _) = DedupPipeline.verifyWithCleanup(sk.pairs, sigs, corpus.toDF(), cfg)
+    val (ver, cleanup, _) = DedupPipeline.verifyWithCleanup(finished(sk), sigs, corpus.toDF(), cfg)
     val got = DedupPipeline.clusters(corpus.toDF(), ver)
       .collect().map(r => (r.image_id, r.cluster_id)).sorted.toSeq
     assert(got == direct)
