@@ -93,7 +93,7 @@ final class IncrementalDedup(
     val committed = ingested
     require(!committed.contains(runId), s"batch $runId already ingested")
     // the index's key column, checked in the first batch's footer schema
-    require(!io.hasBatches(PostStore) || io.readBatches(PostStore).columns.contains("key"),
+    require(io.batches(PostStore).headOption.forall(io.readBatch(PostStore, _).columns.contains("key")),
       s"$PostStore under $workDir was written in the old (band, bucket) posting format, " +
         "which this version cannot probe; ingest into a new store")
     // crash-retry self-heal: SigStore is the COMMIT MARKER (listed
@@ -123,24 +123,30 @@ final class IncrementalDedup(
     var hot = Seq.empty[HotKey]
 
     /** Run one stage into its staged batch of `store` — or resume it
-      * when its marker carries this ingest's key — and read it back. */
+      * when its marker carries this ingest's key — and read it back. Its
+      * footer row counts are read once (by the write, or by the resume)
+      * and kept in its record. */
     def stage(name: String, store: String)(run: => Staged): DataFrame = {
       val t0 = System.nanoTime()
       val resumed = marks.get(store).filter(_.key == key)
-      val mark = resumed.getOrElse {
-        val s = run
-        io.stageBatch(s.df, store, runId)
-        val c = s.finish() // may set `key` (the signature stage)
-        val m = StageMark(key, c, s.hot)
-        io.putBatchMeta(store, runId, MarkFile, Serialization.write(m))
-        m
+      val (mark, files) = resumed match {
+        case Some(m) => (m, io.batchFileCounts(store, runId))
+        case None =>
+          val s = run
+          val files = io.stageBatch(s.df, store, runId)
+          val c = s.finish() // may set `key` (the signature stage)
+          val m = StageMark(key, c, s.hot)
+          io.putBatchMeta(store, runId, MarkFile, Serialization.write(m))
+          (m, files)
       }
       if (mark.hot.nonEmpty) hot = mark.hot
-      val files = io.batchFileCounts(store, runId).map(_._2)
-      records += StageRecord(name, resumed.isDefined, files.sum,
-        (System.nanoTime() - t0) / 1000000, files, mark.counters)
+      val fileRows = files.map(_._2)
+      records += StageRecord(name, resumed.isDefined, fileRows.sum,
+        (System.nanoTime() - t0) / 1000000, fileRows, mark.counters)
       io.readBatch(store, runId)
     }
+    /** Rows a finished stage staged, from its record. */
+    def stagedRows(name: String): Long = records.find(_.stage == name).get.rows
 
     // 1. signatures + postings for the NEW batch only (narrow stages).
     //    The signature write also yields the input fingerprint and the
@@ -180,7 +186,7 @@ final class IncrementalDedup(
       val sk = DedupPipeline.candidatesSkewAware(newPost, cfg, inheritedHot)
       // one pair dedup over within + cross pairs: srcmask = bit_or of both
       Staged(DedupPipeline.finishCandidates(
-          sk.pairs.unionByName(crossPairs(newPost, io.batchRowCount(PostStore, runId)))),
+          sk.pairs.unionByName(crossPairs(newPost, stagedRows("postings")))),
         () => Map("cap_used" -> sk.capUsed.toDouble,
           "har_inherited_buckets" -> inheritedHot.length.toDouble),
         sk.hotList)
@@ -201,7 +207,7 @@ final class IncrementalDedup(
       if (cfg.signatureOnly) withStore(images, ImagesStore).select(metaCols: _*)
       else withStore(images, ImagesStore)
     val newEdges = stage("verified_pairs", EdgeStore) {
-      val verSigs = pruneToCandidates(cand, io.batchRowCount(CandStore, runId),
+      val verSigs = pruneToCandidates(cand, stagedRows("candidate_pairs"),
         withStore(sigs.toDF(), SigStore).as[SignatureRow])
       val (ver, cleanupMid, _) = DedupPipeline.verifyWithCleanup(cand, verSigs, allImages, cfg)
       Staged(ver.toDF(), () => { cleanupMid(); Map.empty })
@@ -214,7 +220,7 @@ final class IncrementalDedup(
     //    store, whose components ARE the committed assignment.
     val t0 = System.nanoTime()
     val clustersResumed = io.isPublished(ClustersTable, key)
-    if (!clustersResumed) {
+    val clusterFiles = (if (clustersResumed) io.fileCounts(ClustersTable) else {
       // (edges, footer row count): the count bounds the edges and sizes
       // connected components' partitioner without a counting job
       val (prevEdges, nPrev) =
@@ -228,10 +234,9 @@ final class IncrementalDedup(
           storeRowCount(io, EdgeStore))
       io.publish(DedupPipeline.assign(allImages,
           newEdges.select(col("id1").as("src"), col("id2").as("dst")).unionByName(prevEdges),
-          Some(io.batchRowCount(EdgeStore, runId) + nPrev)),
+          Some(stagedRows("verified_pairs") + nPrev)),
         ClustersTable, key, runId)
-    }
-    val clusterFiles = io.fileCounts(ClustersTable).map(_._2)
+    }).map(_._2)
     records += StageRecord("clusters", clustersResumed, clusterFiles.sum,
       (System.nanoTime() - t0) / 1000000, clusterFiles)
 

@@ -38,19 +38,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 trait TableBackend {
   def fileCounts(table: String): Seq[(String, Long)]
-  def publish(df: DataFrame, table: String, configHash: String, runId: String): Long
+  def publish(df: DataFrame, table: String, configHash: String, runId: String): Seq[(String, Long)]
   def isPublished(table: String, configHash: String): Boolean
   def publishedBy(table: String): Option[String]
   def read(table: String): DataFrame
   def batches(table: String): Seq[String]
   def batchDirs(table: String): Seq[String]
-  def stageBatch(df: DataFrame, table: String, runId: String): Long
+  def stageBatch(df: DataFrame, table: String, runId: String): Seq[(String, Long)]
   def commitBatch(table: String, runId: String): Unit
   def appendBatch(df: DataFrame, table: String, runId: String): Long = {
     require(!batches(table).contains(runId), s"batch $runId already in $table")
-    val rows = stageBatch(df, table, runId)
+    val files = stageBatch(df, table, runId)
     commitBatch(table, runId)
-    rows
+    files.map(_._2).sum
   }
   def rewriteBatch(df: DataFrame, table: String, runId: String): Unit
   def dropBatch(table: String, runId: String): Unit
@@ -86,7 +86,10 @@ trait TableBackend {
   * Row counts come from the parquet FOOTERS (driver-side metadata reads,
   * one per file) — round 1 re-scanned the freshly written table twice
   * per stage (once to count, once for per-file lineage), which at 100 TB
-  * is two extra full-table passes per stage.
+  * is two extra full-table passes per stage. Footer reads share the
+  * session's Hadoop configuration (no per-read `Configuration` is built
+  * or parsed, and session settings reach them), and a write hands back
+  * the per-file counts it read, so its caller never reads them again.
   */
 final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   private def fs: FileSystem = new Path(baseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -98,11 +101,16 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
 
+  /** Open one parquet footer with read options built from the session's
+    * Hadoop configuration: the one-argument `ParquetFileReader.open`
+    * builds and parses a fresh `Configuration` per file, one that misses
+    * the session's settings (a decryption factory, say). */
   private def footer[T](s: org.apache.hadoop.fs.FileStatus)(
       f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-        s, spark.sparkContext.hadoopConfiguration))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, s.getPath).build())
     try f(reader) finally reader.close()
   }
 
@@ -147,9 +155,9 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   def fileCounts(table: String): Seq[(String, Long)] =
     footerCounts(tablePath(table))
 
-  /** Publish and return the rows written (parquet footers — no
+  /** Publish and return the per-file rows written (parquet footers — no
     * re-scan). */
-  def publish(df: DataFrame, table: String, configHash: String, runId: String): Long = {
+  def publish(df: DataFrame, table: String, configHash: String, runId: String): Seq[(String, Long)] = {
     val f = fs
     val tmp = new Path(baseDir, s"$table.tmp-$runId")
     f.delete(tmp, true)
@@ -158,10 +166,10 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     f.delete(dest, true)
     if (!f.rename(tmp, dest))
       throw new java.io.IOException(s"atomic publish failed: $tmp -> $dest")
-    val rows = fileCounts(table).map(_._2).sum
+    val files = fileCounts(table)
     writeText(manifestPath(table),
-      s"""{"table":"$table","rows":$rows,"config_hash":"$configHash","run_id":"$runId","ts":${System.currentTimeMillis()}}""")
-    rows
+      s"""{"table":"$table","rows":${files.map(_._2).sum},"config_hash":"$configHash","run_id":"$runId","ts":${System.currentTimeMillis()}}""")
+    files
   }
 
   /** True iff the table was fully published under the SAME config —
@@ -218,8 +226,8 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
 
   /** Write one batch into place WITHOUT listing it in the store
     * manifest (tmp-write, then rename over any earlier staged copy).
-    * Returns rows written (parquet footers — no re-scan). */
-  def stageBatch(df: DataFrame, table: String, runId: String): Long = {
+    * Returns the per-file rows written (parquet footers — no re-scan). */
+  def stageBatch(df: DataFrame, table: String, runId: String): Seq[(String, Long)] = {
     val f = fs
     val tmp = new Path(baseDir, s"$table.tmp-$runId")
     f.delete(tmp, true)
@@ -229,7 +237,7 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     f.mkdirs(tablePath(table))
     if (!f.rename(tmp, dest))
       throw new java.io.IOException(s"batch stage failed: $tmp -> $dest")
-    batchRowCount(table, runId)
+    batchFileCounts(table, runId)
   }
 
   /** Make a staged batch visible by listing it in the store manifest

@@ -16,6 +16,7 @@ class IncrementalSpec extends AnyFunSuite {
   val cfg = DedupConfig.default
 
   import spark.implicits._
+  import IncrementalSpec.assertRecordMatchesFooters
 
   test("two-batch ingest == one-shot over the union; A's batch files untouched by B's ingest") {
     val dir = Files.createTempDirectory("graft-incr").toString
@@ -36,6 +37,7 @@ class IncrementalSpec extends AnyFunSuite {
     val inc = new IncrementalDedup(spark, dir, cfg)
     inc.ingest(batchA, "r1")
     assert(inc.ingested == Seq("r1"))
+    assertRecordMatchesFooters(inc, "r1")
 
     // fingerprint A's committed store files before B's ingest
     def storeFiles(store: String): Seq[(String, Long, Long)] = {
@@ -51,6 +53,7 @@ class IncrementalSpec extends AnyFunSuite {
 
     val merged = inc.ingest(batchB, "r2")
     assert(inc.ingested == Seq("r1", "r2"))
+    assertRecordMatchesFooters(inc, "r2")
 
     // batch A's signature/posting/image files are byte-stable: nothing
     // about A was recomputed or rewritten
@@ -284,5 +287,27 @@ class IncrementalSpec extends AnyFunSuite {
     inc.ingest(c, "r1")
     assertThrows[IllegalArgumentException](inc.ingest(c, "r1"))
     c.unpersist()
+  }
+}
+
+object IncrementalSpec {
+  import org.scalatest.Assertions._
+
+  /** The stages whose outputs outlive the commit, and the store each
+    * one stages into (the candidate batch is dropped at commit). */
+  private val StageStore = Map("signatures" -> IncrementalDedup.SigStore,
+    "images" -> IncrementalDedup.ImagesStore, "postings" -> IncrementalDedup.PostStore,
+    "verified_pairs" -> IncrementalDedup.EdgeStore)
+
+  /** A committed ingest's record keeps the per-file rows its stages
+    * staged: each equals the footer counts of that stage's batch, and
+    * the clusters stage's those of the published table (so `runId` must
+    * be the latest ingest). */
+  def assertRecordMatchesFooters(inc: IncrementalDedup, runId: String): Unit = {
+    val recorded = inc.record(runId).get.stages.map(s => s.stage -> s.file_rows).toMap
+    val footers = StageStore.map { case (stage, store) =>
+      stage -> inc.io.batchFileCounts(store, runId).map(_._2)
+    } + ("clusters" -> inc.io.fileCounts(IncrementalDedup.ClustersTable).map(_._2))
+    for ((stage, files) <- footers) assert(recorded(stage) == files, s"$runId $stage")
   }
 }

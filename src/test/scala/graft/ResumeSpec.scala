@@ -86,8 +86,13 @@ class ResumeSpec extends AnyFunSuite {
     val full = new IncrementalDedup(spark, fullDir, cfgHot)
     full.ingest(a, "a")
     crashBeforeCommit(full, fullDir, b)
+    // the staged candidates are dropped at commit: take their footers now
+    val candFiles = full.io.batchFileCounts(IncrementalDedup.CandStore, "b").map(_._2)
     full.ingest(b, "b")
     assert(resumedStages(full, "b") == Stages.toSet)
+    // a resumed stage records the footer counts of the batch it resumed
+    IncrementalSpec.assertRecordMatchesFooters(full, "b")
+    assert(full.record("b").get.stages.find(_.stage == "candidate_pairs").get.file_rows == candFiles)
     assert(storeRows(fullDir) == storeRows(hotDir))
     assert(full.record("b").get.har_hot == hotList)
 
@@ -100,6 +105,7 @@ class ResumeSpec extends AnyFunSuite {
     part.io.drop(IncrementalDedup.ClustersTable) // cluster maintenance replays the edge store
     part.ingest(b, "b")
     assert(resumedStages(part, "b") == Set("signatures", "images", "postings", "candidate_pairs"))
+    IncrementalSpec.assertRecordMatchesFooters(part, "b")
     assert(storeRows(partDir) == storeRows(hotDir))
     assert(part.record("b").get.har_hot == hotList)
 

@@ -33,10 +33,10 @@ class TableBackendSpec extends AnyFunSuite {
 
     def fileCounts(table: String): Seq[(String, Long)] =
       Seq("mem-0" -> tbl(table).rows.size.toLong)
-    def publish(d: DataFrame, table: String, configHash: String, runId: String): Long = {
+    def publish(d: DataFrame, table: String, configHash: String, runId: String): Seq[(String, Long)] = {
       val rows = d.collect().toSeq
       tbl(table) = Tbl(d.schema, rows, configHash, runId)
-      rows.size.toLong
+      fileCounts(table)
     }
     def isPublished(table: String, configHash: String): Boolean =
       tbl.get(table).exists(_.configHash == configHash)
@@ -45,10 +45,9 @@ class TableBackendSpec extends AnyFunSuite {
     def batches(table: String): Seq[String] = order.getOrElse(table, Vector.empty)
     def batchDirs(table: String): Seq[String] =
       batch.keys.filter(_._1 == table).map(_._2).toSeq
-    def stageBatch(d: DataFrame, table: String, runId: String): Long = {
-      val rows = d.collect().toSeq
-      batch((table, runId)) = Tbl(d.schema, rows, "")
-      rows.size.toLong
+    def stageBatch(d: DataFrame, table: String, runId: String): Seq[(String, Long)] = {
+      batch((table, runId)) = Tbl(d.schema, d.collect().toSeq, "")
+      batchFileCounts(table, runId)
     }
     def commitBatch(table: String, runId: String): Unit =
       if (!batches(table).contains(runId)) order(table) = batches(table).toVector :+ runId
@@ -92,7 +91,7 @@ class TableBackendSpec extends AnyFunSuite {
     val b = Seq((4L, "w")).toDF("id", "v")
 
     // whole-table publish: rows, config-hash guard, read-back, drop
-    assert(io.publish(a, "t1", "cfgA", "run1") == 3)
+    assert(io.publish(a, "t1", "cfgA", "run1").map(_._2).sum == 3)
     assert(io.exists("t1"))
     assert(io.isPublished("t1", "cfgA") && !io.isPublished("t1", "cfgB"))
     assert(io.read("t1").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
@@ -126,10 +125,11 @@ class TableBackendSpec extends AnyFunSuite {
 
     // staging: a staged batch is readable by id, invisible to the store
     // until committed; commit is idempotent; meta goes with the batch
-    assert(io.stageBatch(a, "s", "b3") == 3)
+    // the write hands back the per-file counts a footer read gives
+    val staged = io.stageBatch(a, "s", "b3")
+    assert(staged.map(_._2).sum == 3 && staged == io.batchFileCounts("s", "b3"))
     assert(io.batches("s") == Seq("b2") && io.batchDirs("s").toSet == Set("b2", "b3"))
     assert(io.readBatch("s", "b3").count() == 3 && io.readBatches("s").count() == 1)
-    assert(io.batchFileCounts("s", "b3").map(_._2).sum == 3)
     io.putBatchMeta("s", "b3", "note", "hello")
     assert(io.batchMeta("s", "b3", "note") == Some("hello") && io.batchMeta("s", "b2", "note").isEmpty)
     io.commitBatch("s", "b3")
@@ -154,4 +154,40 @@ class TableBackendSpec extends AnyFunSuite {
   test("in-memory catalog mock satisfies the same contract (backend swaps without touching callers)") {
     exerciseContract(new InMemoryBackend(spark))
   }
+
+  test("footer reads see the session's Hadoop settings (a parquet crypto factory is asked once per file)") {
+    import spark.implicits._
+    val io = new TableIO(spark, java.nio.file.Files.createTempDirectory("backend-conf").toString)
+    val files = io.stageBatch(Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "v"), "s", "b1")
+    val conf = spark.sparkContext.hadoopConfiguration
+    CountingCryptoFactory.decryptions.set(0)
+    conf.set(CountingCryptoFactory.Property, classOf[CountingCryptoFactory].getName)
+    try {
+      assert(io.batchFileCounts("s", "b1") == files)
+      assert(files.nonEmpty && CountingCryptoFactory.decryptions.get == files.size)
+    } finally conf.unset(CountingCryptoFactory.Property)
+  }
+}
+
+/** A parquet crypto factory that encrypts and decrypts nothing (null
+  * properties = plaintext) and counts the decryption lookups made
+  * through it, so a test can see whether a reader was built from the
+  * configuration the factory is set in. */
+final class CountingCryptoFactory
+    extends org.apache.parquet.crypto.DecryptionPropertiesFactory
+    with org.apache.parquet.crypto.EncryptionPropertiesFactory {
+  def getFileDecryptionProperties(conf: org.apache.hadoop.conf.Configuration,
+      path: org.apache.hadoop.fs.Path): org.apache.parquet.crypto.FileDecryptionProperties = {
+    CountingCryptoFactory.decryptions.incrementAndGet()
+    null
+  }
+  def getFileEncryptionProperties(conf: org.apache.hadoop.conf.Configuration,
+      path: org.apache.hadoop.fs.Path,
+      ctx: org.apache.parquet.hadoop.api.WriteSupport.WriteContext)
+      : org.apache.parquet.crypto.FileEncryptionProperties = null
+}
+
+object CountingCryptoFactory {
+  val Property: String = org.apache.parquet.crypto.DecryptionPropertiesFactory.CRYPTO_FACTORY_CLASS_PROPERTY_NAME
+  val decryptions = new java.util.concurrent.atomic.AtomicInteger
 }
