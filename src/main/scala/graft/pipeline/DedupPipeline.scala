@@ -337,8 +337,10 @@ object DedupPipeline extends Serializable {
     * (otherwise repeated pipeline invocations in one session accumulate
     * cached blocks for the session's lifetime) — plus the resolved
     * candidate-pair count, which rides the Mid materialization for free
-    * and serves downstream as an edge-count upper bound (CC partitioner
-    * sizing without an extra counting pass). */
+    * and serves downstream as an edge-count upper bound (the verified
+    * pairs are a subset of the resolved candidates), which picks
+    * connected components' plan and sizes its partitioner without an
+    * extra counting pass. */
   private[graft] def verifyWithCleanup(
       cand: DataFrame,
       sigs: Dataset[SignatureRow],
@@ -513,7 +515,8 @@ object DedupPipeline extends Serializable {
   /** Stage 5 — connected components + deterministic representative.
     * `images` only contributes the vertex id column, so any frame with
     * an `image_id` column works (the simulation flow passes a bytes-free
-    * projection). */
+    * projection). `edgeCountHint` must be an upper bound of the verified
+    * pairs: it picks connected components' plan (ConnectedComponents.run). */
   def clusters(
       images: DataFrame,
       verified: Dataset[VerifiedPair],
@@ -571,6 +574,8 @@ object DedupPipeline extends Serializable {
     * returning — repeated invocations in one session leak nothing. */
   def run(images: Dataset[ImageRow], cfg: DedupConfig): Dataset[ClusterRow] = {
     val (ver, pairCount, cleanup) = verifiedPairs(images, cfg)
+    // pairCount (resolved candidate pairs) bounds the verified edges
+    // from above: the edgeCountHint contract
     val out = clusters(images.toDF(), ver, Some(pairCount)).localCheckpoint() // eager
     cleanup()
     out

@@ -221,8 +221,9 @@ final class IncrementalDedup(
     val t0 = System.nanoTime()
     val clustersResumed = io.isPublished(ClustersTable, key)
     val clusterFiles = (if (clustersResumed) io.fileCounts(ClustersTable) else {
-      // (edges, footer row count): the count bounds the edges and sizes
-      // connected components' partitioner without a counting job
+      // (edges, footer row count): the count is an upper bound of the
+      // edges (the edgeCountHint contract) — it picks connected
+      // components' plan and sizes its partitioner without a counting job
       val (prevEdges, nPrev) =
         if (committed.isEmpty) (spark.emptyDataset[(String, String)].toDF("src", "dst"), 0L)
         else if (io.publishedBy(ClustersTable) == committed.lastOption)

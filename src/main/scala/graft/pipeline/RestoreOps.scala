@@ -252,6 +252,9 @@ object RestoreOps {
     // skip anti-join: persist it so the verify stage's pair-decode map
     // executes exactly once (it is narrow — two id columns)
     val edges = pixelEvidence(ver, cfg).persist(lvl)
+    // pairCount (resolved candidate pairs) bounds the pixel-evidence
+    // edges, a subset of the verified pairs, from above: the
+    // edgeCountHint contract
     val cc0 = contentClustersFromEdges(images, edges, Some(pairCount))
     val cc = fidelityRepair(images, cc0, cfg, Some(edges)).persist(lvl)
     cc.count()

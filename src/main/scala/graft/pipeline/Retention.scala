@@ -87,8 +87,10 @@ final class Retention(
         if (io.hasBatches(EdgeStore))
           io.readBatches(EdgeStore).select(col("id1").as("src"), col("id2").as("dst"))
         else surviving.limit(0).select(col("image_id").as("src"), col("image_id").as("dst"))
-      // the compacted edge batches' footer rows size connected
-      // components' partitioner without a counting job
+      // the compacted edge batches' footer rows are the exact edge
+      // count, so an upper bound (the edgeCountHint contract): they pick
+      // connected components' plan and size its partitioner without a
+      // counting job
       io.publish(DedupPipeline.assign(surviving, edges, Some(storeRowCount(io, EdgeStore))),
         ClustersTable, cfg.configHash, survivors.last)
     } else if (io.exists(ClustersTable)) {

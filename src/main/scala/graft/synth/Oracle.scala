@@ -62,10 +62,10 @@ object Oracle {
     out.result()
   }
 
-  /** Union-find closure → cluster id (min image_id) per image. */
-  def clusters(ids: Seq[String], pairs: Set[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.Map.empty[String, String]
-    def find(x: String): String = {
+  /** Union-find closure → cluster id (min id under `ord`) per id. */
+  def clusters[K](ids: Seq[K], pairs: Set[(K, K)])(implicit ord: Ordering[K]): Map[K, K] = {
+    val parent = scala.collection.mutable.Map.empty[K, K]
+    def find(x: K): K = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
       var c = x
@@ -75,7 +75,7 @@ object Oracle {
     ids.foreach(id => parent.getOrElseUpdate(id, id))
     pairs.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     ids.map(id => id -> find(id)).toMap
   }

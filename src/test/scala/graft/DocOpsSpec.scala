@@ -37,7 +37,9 @@ class DocOpsSpec extends AnyFunSuite {
     // which nothing changes. The old one-step loop paid init+step (job
     // 1), step (job 2, changes), then a FULL third job just to observe
     // zero changes. The two-step loop folds the observer into job 1's
-    // second accumulator: total LOOP jobs = 1.
+    // second accumulator: total LOOP jobs = 1. maxBroadcastLabels = 0
+    // keeps this small graph on the loop (the default collects it to the
+    // driver) and makes the singleton stitch a shuffle join.
     val center = 50L
     val leaves = (1L to 10L).filter(_ != center)
     val vertices = (center +: leaves).toDF("id")
@@ -49,7 +51,8 @@ class DocOpsSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val out = graft.cluster.ConnectedComponents.run(spark, vertices, edges).collect()
+      val out = graft.cluster.ConnectedComponents.run(spark, vertices, edges,
+        maxBroadcastLabels = 0L).collect()
       // listener events are async: poll until the count is quiescent
       var last = -1
       var spins = 0
@@ -59,12 +62,14 @@ class DocOpsSpec extends AnyFunSuite {
       val got = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
       val minId = (center +: leaves).min
       assert(got.values.toSet == Set(minId), s"star must be one component: $got")
-      // job budget: 2 edge-sizing counts (no edgeCountHint) + 1 loop job
+      // job budget: 1 edge-sizing count (no edgeCountHint) + 1 loop job
       // (steps 2+3: step 2 changes the leaves, step 3 observes zero via
-      // the second accumulator — no separate observer job) + 1 broadcast
-      // build for the singleton stitch + 1 final collect = 5. The
-      // one-step loop needed 6 (its observer round was its own job).
-      assert(jobs.get() == 5, s"expected 5 jobs (1 loop job), saw ${jobs.get()}")
+      // the second accumulator — no separate observer job) + 3 for the
+      // shuffle stitch under AQE (one per side's exchange, then the
+      // broadcast AQE re-plans the join to once the label side proves
+      // small) + 1 final collect = 6. A one-step loop would need one
+      // more (its observer round was its own job).
+      assert(jobs.get() == 6, s"expected 6 jobs (1 loop job), saw ${jobs.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -73,11 +78,13 @@ class DocOpsSpec extends AnyFunSuite {
     // a 300-node path has diameter 299: plain propagation alone would
     // need ~300 rounds (> default maxIter=64), so this passes only if
     // pointer jumping engages after the deferred warm-up rounds and
-    // restores the O(log diameter) bound
+    // restores the O(log diameter) bound (maxBroadcastLabels = 0 keeps
+    // the graph on the loop instead of the driver path)
     val n = 300L
     val vertices = (1L to n).toDF("id")
     val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
-    val out = graft.cluster.ConnectedComponents.run(spark, vertices, edges)
+    val out = graft.cluster.ConnectedComponents.run(spark, vertices, edges,
+        maxBroadcastLabels = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(out.length == n)
     assert(out.forall(_._2 == 1L), s"non-min labels: ${out.filter(_._2 != 1L).take(5).toSeq}")
@@ -85,12 +92,14 @@ class DocOpsSpec extends AnyFunSuite {
 
   test("connected components: broadcast and shuffle stitch plans agree") {
     import spark.implicits._
+    // the default solves this graph on the driver and broadcasts the
+    // labels; maxBroadcastLabels = 0 runs the loop and a shuffle stitch
     val vertices = (1L to 50L).toDF("id")
     val edges = Seq((3L, 7L), (7L, 9L), (20L, 21L)).toDF("src", "dst")
     val bc = graft.cluster.ConnectedComponents.run(spark, vertices, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sh = graft.cluster.ConnectedComponents.run(spark, vertices, edges,
-        maxBroadcastLabels = 0L) // force the shuffle stitch
+        maxBroadcastLabels = 0L) // force the loop and the shuffle stitch
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bc == sh)
     assert(bc(9L) == 3L && bc(21L) == 20L && bc(1L) == 1L)

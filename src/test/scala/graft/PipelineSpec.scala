@@ -123,18 +123,22 @@ class PipelineSpec extends AnyFunSuite {
   test("connected components uses reliable checkpoints when a checkpoint dir is set") {
     import org.apache.spark.sql.functions._
     val sc = spark.sparkContext
-    // chain long enough to cross the every-4-rounds truncation point
+    // chain long enough to cross the every-4-rounds truncation point;
+    // maxBroadcastLabels = 0 keeps it on the loop (the default would
+    // solve it on the driver, which checkpoints nothing)
     val n = 64L
     val verts = spark.range(n).select(concat(lit("v"), col("id")).as("id"))
     val edges = spark.range(n - 1).select(
       concat(lit("v"), col("id")).as("src"),
       concat(lit("v"), col("id") + 1).as("dst"))
-    val plain = graft.cluster.ConnectedComponents.run(spark, verts, edges)
+    val plain = graft.cluster.ConnectedComponents.run(spark, verts, edges,
+        maxBroadcastLabels = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).sortBy(_._1).toSeq
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
     sc.setCheckpointDir(dir)
     try {
-      val durable = graft.cluster.ConnectedComponents.run(spark, verts, edges)
+      val durable = graft.cluster.ConnectedComponents.run(spark, verts, edges,
+          maxBroadcastLabels = 0L)
         .collect().map(r => r.getString(0) -> r.getString(1)).sortBy(_._1).toSeq
       assert(durable == plain)
       // the reliable cut actually wrote checkpoint state
