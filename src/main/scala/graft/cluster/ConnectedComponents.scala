@@ -72,9 +72,10 @@ object ConnectedComponents {
     * corpus scale it can never broadcast). It is also the driver path's
     * gate: the labels are computed on the driver when 2·|edges|, the
     * most label rows the edges can produce, is within it. 2M two-column
-    * rows matches the broadcast payload verify's `needIds` gate allows
-    * (up to 2M single-column rows; a label row carries id + label, so
-    * the row budget is the same order, not the byte budget doubled). */
+    * rows matches the broadcast payload verify's candidate-nid prune
+    * allows (`DedupPipeline.BroadcastIdLimit`: up to 2M pairs, 4M
+    * single-column long ids; a label row carries id + label, so the row
+    * budget is the same order, not the byte budget doubled). */
   val MaxBroadcastLabels = 2000000L
 
   /** @param vertices single-column DF `id` (all nodes, incl. singletons)

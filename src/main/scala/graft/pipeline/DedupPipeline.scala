@@ -23,19 +23,21 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (100 TB / 10^12 rows):
   *  - signatures is a NARROW stage (mapPartitions; no shuffle); `bytes`
-  *    is read once here and never again except for the small pixel-
-  *    verify side-join (column pruning keeps it out of all other scans).
+  *    is read once here and again only by verify, for the candidate-
+  *    touched images (column pruning keeps it out of all other scans).
   *  - candidate generation shuffles on the packed posting key — the
   *    only O(data) shuffle; bucket sizes are bounded by the CAP-analog
   *    skew stage (star pairing for buckets > bucketCap) so no O(n^2)
   *    explosion.
   *  - all joins are equi-joins; AQE splits residual skew.
   */
-/** Intermediate verify-stage row (pre pixel check). Top-level so the
-  * Catalyst product encoder resolves (local case classes have no
-  * TypeTag). */
-private[pipeline] final case class Mid(id1: String, id2: String, src: String,
-    jaccard: Double, hamming: Int, verdict: String, needPixel: Boolean)
+/** One side of a candidate pair in verify, resolved to a signature row
+  * (`sha` set) or to a pixel row (`bytes` set) of an image with that
+  * side's nid. Top-level so the Catalyst product encoder resolves
+  * (local case classes have no TypeTag). */
+private[pipeline] final case class PairSide(id1: Long, id2: Long, src: String, side: Int,
+    image_id: String, sha: String, pixsha: String, phash: Long, caption: String,
+    bytes: Array[Byte], fmt: String)
 
 object DedupPipeline extends Serializable {
 
@@ -319,197 +321,166 @@ object DedupPipeline extends Serializable {
     SkewAwareCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _), hotList.toSeq, cap)
   }
 
+  /** Candidate ids (pairs * 2) at or below which verify broadcasts the
+    * candidate nid list that prunes its signature and image inputs; a
+    * long id is 8 bytes, so 4M ids is a ~32 MB build side. Above it
+    * (pathological, corpus-sized candidate sets) the shuffled semi-join
+    * is the correct plan and AQE handles it. */
+  private[graft] val BroadcastIdLimit = 4000000L
+
+  /** The nid of an image id (Sig.hash64), for the image rows verify
+    * resolves by nid. */
+  private val nidOf = udf((id: String) => Sig.hash64(id))
+
   /** Stage 4 — verification with the EXACT oracle predicates (same
     * DedupConfig): sha equality, exact shingle Jaccard, normalized
-    * substring containment, phash hamming + decoded-pixel PSNR. Only
-    * pairs that need the pixel check touch `bytes` (small side-join —
-    * column pruning keeps the scan narrow). Analog of destor's
-    * per-chunk dedup decision (src/index/index.c:140-217). */
+    * substring containment, phash hamming + decoded-pixel PSNR. Analog
+    * of destor's per-chunk dedup decision, made in one lookup pass
+    * (src/index/index.c:140-217). `cand` is a set of (id1, id2, src)
+    * nid pairs; the candidate-pair bound that picks the broadcast prune
+    * is the plan's row count when Catalyst knows it (a materialized
+    * cache), else one count. One lazy query: see [[verifyPairs]]. */
   def verify(
       cand: DataFrame,
       sigs: Dataset[SignatureRow],
       images: Dataset[ImageRow],
       cfg: DedupConfig): Dataset[VerifiedPair] =
-    verifyWithCleanup(cand, sigs, images.toDF(), cfg)._1
+    verifyPairs(cand, cand.queryExecution.optimizedPlan.stats.rowCount.fold(cand.count())(_.toLong),
+      sigs, images.toDF(), cfg)
 
-  /** verify() plus a cleanup thunk that unpersists the internal Mid
-    * cache — call it AFTER the returned dataset has been materialized
-    * (otherwise repeated pipeline invocations in one session accumulate
-    * cached blocks for the session's lifetime) — plus the resolved
-    * candidate-pair count, which rides the Mid materialization for free
-    * and serves downstream as an edge-count upper bound (the verified
-    * pairs are a subset of the resolved candidates), which picks
-    * connected components' plan and sizes its partitioner without an
-    * extra counting pass. */
-  private[graft] def verifyWithCleanup(
+  /** [[verify]] with the caller's upper bound `candPairs` of the
+    * candidate pairs, as ONE lazy query — nothing persisted, no driver
+    * action:
+    *  - each candidate pair explodes into its two sides, (id1, id2, src,
+    *    side, nid);
+    *  - one shuffle-hash join on `nid` resolves every side against the
+    *    signature rows and the (image_id, bytes, fmt) rows of one images
+    *    scan, both pruned to the candidate nids by a semi-join with a
+    *    broadcast of those nids while `candPairs` keeps it small — so
+    *    verify's exchanges carry O(touched) rows, never O(corpus or
+    *    store), and the image store is never hash-exchanged whole;
+    *  - the joined sides regroup by pair (one exchange, sorted within
+    *    partitions), and one mapPartitions computes every predicate,
+    *    decoding pixels only for the hamming-close pairs that still need
+    *    PSNR.
+    * An nid collision fans out m:n: every (image, image) combination of
+    * a pair's two sides verifies, its pixel rows matched to its
+    * signature rows by image_id, and a combination of an image with
+    * itself is dropped. Image rows are keyed by Sig.hash64(image_id),
+    * the nid `signatures` gives each signature row. Under
+    * cfg.signatureOnly `images` is not read at all. */
+  private[graft] def verifyPairs(
       cand: DataFrame,
+      candPairs: Long,
       sigs: Dataset[SignatureRow],
       images: DataFrame,
-      cfg: DedupConfig): (Dataset[VerifiedPair], () => Unit, Long) = {
+      cfg: DedupConfig): Dataset[VerifiedPair] = {
     val spark = cand.sparkSession
     import spark.implicits._
+    val candNids = cand.select(col("id1").as("nid")).union(cand.select(col("id2").as("nid")))
+    val touched = if (candPairs * 2 <= BroadcastIdLimit) broadcast(candNids) else candNids
+    def pruned(rows: DataFrame) = rows.join(touched, Seq("nid"), "left_semi")
+    val str = lit(null).cast("string")
+    val sigRows = pruned(sigs.select(col("nid"), col("image_id"), col("sha"), col("pixsha"),
+      col("phash"), col("caption"), lit(null).cast("binary").as("bytes"), str.as("fmt")))
+    // signature-only simulation (destor src/destor.h:55-59): `bytes` is
+    // never read; the pairs that would need PSNR settle on phash
+    // evidence alone (see verifyPair)
+    val resolved =
+      if (cfg.signatureOnly) sigRows
+      else sigRows.unionByName(pruned(images.select(nidOf(col("image_id")).as("nid"),
+        col("image_id"), str.as("sha"), str.as("pixsha"), lit(0L).as("phash"), str.as("caption"),
+        col("bytes"), col("fmt"))))
+    // SHUFFLE_HASH, not broadcast: the resolved side is every touched
+    // image with its bytes — at cluster scale far past any broadcast
+    // budget, and locally a driver-side hash-relation build is serial
+    // time that made verify scale NEGATIVELY with cores. The hint pins
+    // the cluster-correct plan.
+    cand.select(col("id1"), col("id2"), col("src"),
+        posexplode(array(col("id1"), col("id2"))).as(Seq("side", "nid")))
+      .join(resolved.hint("shuffle_hash"), "nid")
+      .repartition(col("id1"), col("id2"), col("src"))
+      .sortWithinPartitions("id1", "id2", "src")
+      .as[PairSide]
+      .mapPartitions(verifyGroups(_, cfg))
+  }
 
-    // NOTE: no phash pre-filter join here — the pair generator already
-    // rejects hamming-far pairs AT EMISSION (candidates() checks
-    // Sig.hamming against payload phashes inside every hamming-LSH
-    // bucket), so every phash-only candidate that reaches verify is
-    // hamming-close by construction. Round 1 carried a redundant
-    // two-join bit_count pre-filter here; it filtered nothing and cost
-    // two exchanges plus a second consumer of `cand`.
-    // candidates carry 64-bit nids; the sig join resolves them back to
-    // string image ids (every downstream consumer — CC, restore, API —
-    // speaks image_id). An nid collision fans out m:n here; each joined
-    // row is verified EXACTLY below, so collisions cost extra rows,
-    // never correctness (self-combos are dropped by the img_1 != img_2
-    // filter).
-    val toFull = cand.select("id1", "id2", "src")
-
-    val s1 = sigs.select(
-      col("nid").as("id1"), col("image_id").as("img_1"),
-      col("sha").as("sha_1"), col("pixsha").as("pixsha_1"),
-      col("phash").as("phash_1"), col("caption").as("cap_1"))
-    val s2 = sigs.select(
-      col("nid").as("id2"), col("image_id").as("img_2"),
-      col("sha").as("sha_2"), col("pixsha").as("pixsha_2"),
-      col("phash").as("phash_2"), col("caption").as("cap_2"))
-    // SHUFFLE_HASH, not broadcast: the signature side is O(corpus) — at
-    // cluster scale it can never broadcast (Catalyst's stats would agree),
-    // and locally the driver-side hash-relation build (collect 400k rows
-    // + single-threaded build, twice) was pure serial time that made the
-    // whole verify stage scale NEGATIVELY with cores. The hint pins the
-    // cluster-correct plan at every scale.
-    val joined = toFull
-      .join(s1.hint("shuffle_hash"), "id1")
-      .join(s2.hint("shuffle_hash"), "id2")
-      .filter(col("img_1") =!= col("img_2"))
-
-    val mid = joined
-      .select("img_1", "img_2", "src", "sha_1", "sha_2", "pixsha_1", "pixsha_2",
-        "phash_1", "phash_2", "cap_1", "cap_2")
-      .as[(String, String, String, String, String, String, String, Long, Long, String, String)]
-      .mapPartitions { it =>
-        // per-partition memo: pairs arrive grouped by id1 (post-shuffle),
-        // so each caption's shingle set is computed ~once, not per pair;
-        // identical boilerplate captions (hot clusters) also dedupe here
-        val memo = new java.util.HashMap[String, Array[Long]]()
-        def shingles(cap: String): Array[Long] = {
-          if (memo.size > 100000) memo.clear()
-          var r = memo.get(cap)
-          if (r == null) { r = Sig.shingleHashes(cap, cfg.shingleSize); memo.put(cap, r) }
-          r
-        }
-        it.map { case (i1, i2, src, sA, sB, pA, pB, hA, hB, cA, cB) =>
-          // canonical pair order = lexicographic image_id (nids order the
-          // shuffle; output pairs keep the string-id convention)
-          val flip = i1 > i2
-          val (id1, id2) = if (flip) (i2, i1) else (i1, i2)
-          val (shaA, shaB) = if (flip) (sB, sA) else (sA, sB)
-          val (pixA, pixB) = if (flip) (pB, pA) else (pA, pB)
-          val (phA, phB) = if (flip) (hB, hA) else (hA, hB)
-          val (capA, capB) = if (flip) (cB, cA) else (cA, cB)
-          val ham = Sig.hamming(phA, phB)
-          val ja =
-            if (shaA == shaB) 1.0 // identical bytes+caption
-            else Sig.jaccard(shingles(capA), shingles(capB))
-          val la = capA.toLowerCase
-          val lb = capB.toLowerCase
-          val substr =
-            (la.length >= cfg.substrMinChars && lb.contains(la) && la != lb) ||
-            (lb.length >= cfg.substrMinChars && la.contains(lb) && la != lb)
-          val verdict =
-            if (shaA == shaB) "exact"
-            else if (ja >= cfg.jaccardMin) "caption"
-            else if (substr) "substr"
-            else if (pixA == pixB) "pixel" // identical decoded pixels: PSNR = inf
-            else ""
-          // pixel evidence is computed for EVERY hamming-close pair
-          // with distinct pixels — including caption/substr-verdict
-          // pairs — so downstream content dedup (RestoreOps) can rely
-          // on psnr regardless of which cheaper predicate fired first
-          // (a lossy re-encode with an identical caption settles as
-          // "caption" but still needs its PSNR for the store).
-          val needPixel = ham <= cfg.hammingMax &&
-            verdict != "exact" && verdict != "pixel"
-          Mid(id1, id2, src, ja, ham, verdict, needPixel)
-        }
-      }
-      // two consumers (settled + pixel side-join) in ONE downstream job
-      // — persist AND materialize eagerly, otherwise the union's
-      // subplans race and each computes the caption joins
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // eager materialization (see above) with the total and needPixel
-    // counts riding the same job — they drive the broadcast decision
-    // below and the CC partitioner hint for free
-    val countsRow = mid.toDF().agg(
-      count(lit(1)), sum(when(col("needPixel"), 1L).otherwise(0L)))
-      .first()
-    val midCount = countsRow.getLong(0)
-    val needCount = countsRow.getAs[Any](1) match { case null => 0L; case n: Long => n }
-
-    val settled = mid.filter(m => m.verdict.nonEmpty && !m.needPixel).map(m =>
-      VerifiedPair(m.id1, m.id2, m.src, m.jaccard, m.hamming,
-        if (m.verdict == "exact" || m.verdict == "pixel") 1e9 else 0.0, m.verdict))
-
-    // signature-only simulation (destor src/destor.h:55-59): the pixel
-    // side-join is the ONLY stage that reads `bytes` — skip it entirely.
-    // Pairs that would have been PSNR-checked settle on phash evidence
-    // alone (hamming <= hammingMax by needPixel's definition) with
-    // psnr = -1 ("not computed"); pairs that already hold a cheaper
-    // verdict keep it, likewise without a recorded psnr. Precision of
-    // the phash-only verdicts is the documented simulation tradeoff —
-    // exactly the fidelity destor gives up when a simulated store skips
-    // chunk data.
-    if (cfg.signatureOnly) {
-      val simSettled = mid.filter(_.needPixel).map(m =>
-        VerifiedPair(m.id1, m.id2, m.src, m.jaccard, m.hamming, -1.0,
-          if (m.verdict.nonEmpty) m.verdict else "phash"))
-      return (settled.union(simSettled),
-        () => { mid.unpersist(blocking = false); () },
-        midCount)
+  /** Verify the sorted, pair-grouped side rows of one partition. */
+  private def verifyGroups(rows: Iterator[PairSide], cfg: DedupConfig): Iterator[VerifiedPair] = {
+    val it = rows.buffered
+    // per-partition memo: pairs arrive sorted by id1, so each caption's
+    // shingle set is computed ~once, not per pair; identical boilerplate
+    // captions (hot clusters) also dedupe here
+    val memo = new java.util.HashMap[String, Array[Long]]()
+    def shingles(cap: String): Array[Long] = {
+      if (memo.size > 100000) memo.clear()
+      var r = memo.get(cap)
+      if (r == null) { r = Sig.shingleHashes(cap, cfg.shingleSize); memo.put(cap, r) }
+      r
     }
+    def sameGroup(a: PairSide, b: PairSide) = a.id1 == b.id1 && a.id2 == b.id2 && a.src == b.src
+    Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+      val head = it.head
+      val group = scala.collection.mutable.ArrayBuffer.empty[PairSide]
+      while (it.hasNext && sameGroup(it.head, head)) group += it.next()
+      val (sigRows, pixRows) = group.partition(_.sha != null)
+      val pixOf = pixRows.iterator.map(p => p.image_id -> p).toMap
+      for (a <- sigRows.iterator if a.side == 0; b <- sigRows.iterator if b.side == 1 && a.image_id != b.image_id;
+           v <- verifyPair(if (a.image_id > b.image_id) (b, a) else (a, b), pixOf, shingles, cfg))
+        yield v
+    }
+  }
 
-    // pixel-verify side-join: only hamming-close, otherwise-unverified
-    // pairs. The `bytes` column is scanned ONCE — a semi-join prunes
-    // the image scan to the ids any pending pair touches, and the
-    // (small) pruned set is materialized so the two per-side joins
-    // don't each re-scan and re-decompress the full corpus bytes
-    // column (the pipeline's widest column; round 1 scanned it twice).
-    val needPix = mid.filter(_.needPixel).toDF()
-    val needIdsRaw = needPix.select(col("id1").as("image_id"))
-      .union(needPix.select(col("id2").as("image_id"))).distinct()
-    // broadcast the pruning ids when bounded: a shuffled semi-join here
-    // hash-exchanges the ENTIRE corpus `bytes` column just to match ids
-    // (measured 25 s of a 59 s pipeline at 400k images — the single
-    // largest verify job). With the id list broadcast, `bytes` rows
-    // stream scan→filter→cache and never hit a shuffle. Above the
-    // threshold (pathological corpus where most pairs need pixel
-    // verification) the shuffled join is the correct plan and AQE
-    // handles it.
-    val needIds =
-      if (needCount * 2 <= 4000000L) broadcast(needIdsRaw) else needIdsRaw
-    val pix = images.select(col("image_id"), col("bytes"), col("fmt"))
-      .join(needIds, "image_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    pix.count() // eager: two consumers below; without this both race to compute it
-    val pixVerified = needPix
-      .join(pix.select(col("image_id").as("id1"), col("bytes").as("bytes_1"), col("fmt").as("fmt_1")), "id1")
-      .join(pix.select(col("image_id").as("id2"), col("bytes").as("bytes_2"), col("fmt").as("fmt_2")), "id2")
-      .select("id1", "id2", "src", "jaccard", "hamming", "verdict", "bytes_1", "fmt_1", "bytes_2", "fmt_2")
-      .as[(String, String, String, Double, Int, String, Array[Byte], String, Array[Byte], String)]
-      .map { case (id1, id2, src, ja, ham, v0, b1, f1, b2, f2) =>
-        val pa = Codec.decode(b1, f1)
-        val pb = Codec.decode(b2, f2)
-        val p = if (pa.length == pb.length) Codec.psnr(pa, pb) else 0.0
-        // an earlier (cheaper) verdict survives with its psnr recorded;
-        // an otherwise-unverified pair is a dup only past the PSNR gate
-        val verdict = if (v0.nonEmpty) v0 else if (p >= cfg.psnrMin) "pixel" else ""
-        VerifiedPair(id1, id2, src, ja, ham, p, verdict)
-      }
-      .filter(_.verdict.nonEmpty)
+  /** The verdict of one (image, image) combination of a pair, its
+    * sides in canonical (lexicographic image_id) order. */
+  private def verifyPair(ab: (PairSide, PairSide), pixOf: Map[String, PairSide],
+      shingles: String => Array[Long], cfg: DedupConfig): Option[VerifiedPair] = {
+    val (a, b) = ab
+    val ham = Sig.hamming(a.phash, b.phash)
+    val ja =
+      if (a.sha == b.sha) 1.0 // identical bytes+caption
+      else Sig.jaccard(shingles(a.caption), shingles(b.caption))
+    val la = a.caption.toLowerCase
+    val lb = b.caption.toLowerCase
+    val substr =
+      (la.length >= cfg.substrMinChars && lb.contains(la) && la != lb) ||
+      (lb.length >= cfg.substrMinChars && la.contains(lb) && la != lb)
+    val verdict =
+      if (a.sha == b.sha) "exact"
+      else if (ja >= cfg.jaccardMin) "caption"
+      else if (substr) "substr"
+      else if (a.pixsha == b.pixsha) "pixel" // identical decoded pixels: PSNR = inf
+      else ""
+    def pair(psnr: Double, v: String) = VerifiedPair(a.image_id, b.image_id, a.src, ja, ham, psnr, v)
+    // pixel evidence is computed for EVERY hamming-close pair with
+    // distinct pixels — including caption/substr-verdict pairs — so
+    // downstream content dedup (RestoreOps) can rely on psnr regardless
+    // of which cheaper predicate fired first (a lossy re-encode with an
+    // identical caption settles as "caption" but still needs its PSNR
+    // for the store).
+    val needPixel = ham <= cfg.hammingMax && verdict != "exact" && verdict != "pixel"
+    if (!needPixel)
+      Option.when(verdict.nonEmpty)(pair(if (verdict == "exact" || verdict == "pixel") 1e9 else 0.0, verdict))
+    // signature-only: the phash evidence settles the pair (hamming <=
+    // hammingMax by needPixel's definition) with psnr = -1 ("not
+    // computed"); a cheaper verdict is kept, likewise without a psnr.
+    // Precision of the phash-only verdicts is the documented simulation
+    // tradeoff — exactly the fidelity destor gives up when a simulated
+    // store skips chunk data.
+    else if (cfg.signatureOnly) Some(pair(-1.0, if (verdict.nonEmpty) verdict else "phash"))
+    else for (pa <- pixOf.get(a.image_id); pb <- pixOf.get(b.image_id);
+              p = psnrOf(pa, pb);
+              // an earlier (cheaper) verdict survives with its psnr
+              // recorded; an otherwise-unverified pair is a dup only past
+              // the PSNR gate
+              v = if (verdict.nonEmpty) verdict else if (p >= cfg.psnrMin) "pixel" else ""
+              if v.nonEmpty) yield pair(p, v)
+  }
 
-    (settled.union(pixVerified),
-      () => { mid.unpersist(blocking = false); pix.unpersist(blocking = false); () },
-      midCount)
+  private def psnrOf(a: PairSide, b: PairSide): Double = {
+    val pa = Codec.decode(a.bytes, a.fmt)
+    val pb = Codec.decode(b.bytes, b.fmt)
+    if (pa.length == pb.length) Codec.psnr(pa, pb) else 0.0
   }
 
   /** Stage 5 — connected components + deterministic representative.
@@ -538,11 +509,13 @@ object DedupPipeline extends Serializable {
         (col("id") === col("component")).as("representative"))
 
   /** Signatures → postings → lean candidates → verify, in memory: the
-    * verified pairs, the candidate-pair count (CC partitioner hint) and
-    * a cleanup to call once the pairs are materialized. Signatures are
-    * persisted: three consumers (bucket postings, both verify sides)
-    * would otherwise recompute the most expensive narrow stage;
-    * spill-safe via MEMORY_AND_DISK_SER. */
+    * verified pairs, the candidate-pair count (verify's broadcast gate
+    * and the CC edge-count hint) and a cleanup to call once the pairs
+    * are materialized. Signatures are persisted (two consumers: bucket
+    * postings and verify) and so are the candidates (verify reads them
+    * twice: the pair sides and the broadcast nid prune), both
+    * spill-safe via MEMORY_AND_DISK_SER; the candidates' one count job
+    * materializes both. */
   private[graft] def verifiedPairs(
       images: Dataset[ImageRow],
       cfg: DedupConfig): (Dataset[VerifiedPair], Long, () => Unit) = {
@@ -551,19 +524,19 @@ object DedupPipeline extends Serializable {
     val bk = buckets(sigs, cfg)
     // LEAN candidate path for the one-shot run: static CAP cap
     // (destor's rewrite_capping_level is equally a static per-run knob,
-    // destor.config:140), pairs streaming straight out of the single
-    // posting sort-shuffle into the verify joins in ONE query — no
-    // persisted copy of the exchange, no bucket-size histogram job.
-    // Star-pairing above the cap preserves bucket connectivity, so
-    // cluster output is cap-invariant wherever verification passes.
-    // The ADAPTIVE controllers (CBR quantile cap, HAR hot-bucket
-    // inheritance) live on the cross-run ingest flow — see
-    // candidatesSkewAware / IncrementalDedup — where destor's own
-    // feedback loops operate (cbr_rewrite.c keeps a cross-job utility
-    // history; har_rewrite.c loads the previous job's sparse list).
-    val cand = candidates(bk, cfg)
-    val (ver, cleanupMid, pairCount) = verifyWithCleanup(cand, sigs, images.toDF(), cfg)
-    (ver, pairCount, () => { sigs.unpersist(blocking = false); cleanupMid() })
+    // destor.config:140), pairs straight out of the single posting
+    // sort-shuffle, no bucket-size histogram job. Star-pairing above
+    // the cap preserves bucket connectivity, so cluster output is
+    // cap-invariant wherever verification passes. The ADAPTIVE
+    // controllers (CBR quantile cap, HAR hot-bucket inheritance) live on
+    // the cross-run ingest flow — see candidatesSkewAware /
+    // IncrementalDedup — where destor's own feedback loops operate
+    // (cbr_rewrite.c keeps a cross-job utility history; har_rewrite.c
+    // loads the previous job's sparse list).
+    val cand = candidates(bk, cfg).persist(lvl)
+    val nCand = cand.count()
+    (verifyPairs(cand, nCand, sigs, images.toDF(), cfg), nCand,
+      () => { cand.unpersist(blocking = false); sigs.unpersist(blocking = false); () })
   }
 
   /** Whole pipeline in one call, in memory. The stored, resumable form
@@ -574,8 +547,8 @@ object DedupPipeline extends Serializable {
     * returning — repeated invocations in one session leak nothing. */
   def run(images: Dataset[ImageRow], cfg: DedupConfig): Dataset[ClusterRow] = {
     val (ver, pairCount, cleanup) = verifiedPairs(images, cfg)
-    // pairCount (resolved candidate pairs) bounds the verified edges
-    // from above: the edgeCountHint contract
+    // pairCount (candidate pairs) bounds the verified edges from above:
+    // the edgeCountHint contract
     val out = clusters(images.toDF(), ver, Some(pairCount)).localCheckpoint() // eager
     cleanup()
     out

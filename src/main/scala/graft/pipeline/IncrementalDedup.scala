@@ -21,8 +21,9 @@ import org.json4s.jackson.Serialization
   * invisible):
   *
   *   images_store    one batch-dir per ingest — the raw rows (container
-  *                   store analog; `bytes` is only ever read back for
-  *                   pixel-verify side-joins, column-pruned otherwise)
+  *                   store analog; `bytes` is only ever read back by
+  *                   verify, for candidate-touched images, and is
+  *                   column-pruned otherwise)
   *   sig_store       per-image signature bundles (recipe/feature analog)
   *   postings_store  (key, nid, payload, ingest_seq) on the packed
   *                   posting key — THE probe index (kv store analog)
@@ -193,25 +194,21 @@ final class IncrementalDedup(
     }
 
     // 3. verify — old sides resolved from the STORES (no recompute).
-    //    The signature side is PRUNED to the candidate ids first:
-    //    verify's shuffle_hash joins exchange their full inputs, so
-    //    feeding them the whole store would cost O(|store|) per ingest
-    //    even though the probe side is beautifully bounded (destor's
-    //    probe equally touches only hit keys, src/index/index.c:181-204).
-    //    The image side needs no prune here: verify reads `bytes` only
-    //    through its pixel side-join, which already keeps just the ids
-    //    its pending pairs touch.
+    //    Verify prunes its signature and image inputs to the candidate
+    //    ids (a broadcast semi-join while the staged candidates' footer
+    //    count keeps the id list small) before its one exchange, so it
+    //    costs O(batch + touched) in shuffle, never O(store) (destor's
+    //    probe equally touches only hit keys,
+    //    src/index/index.c:181-204); the store scans themselves still
+    //    read every stored batch.
     def withStore(staged: DataFrame, store: String): DataFrame =
       if (io.hasBatches(store)) staged.unionByName(io.readBatches(store)) else staged
     val allImages =
       if (cfg.signatureOnly) withStore(images, ImagesStore).select(metaCols: _*)
       else withStore(images, ImagesStore)
-    val newEdges = stage("verified_pairs", EdgeStore) {
-      val verSigs = pruneToCandidates(cand, stagedRows("candidate_pairs"),
-        withStore(sigs.toDF(), SigStore).as[SignatureRow])
-      val (ver, cleanupMid, _) = DedupPipeline.verifyWithCleanup(cand, verSigs, allImages, cfg)
-      Staged(ver.toDF(), () => { cleanupMid(); Map.empty })
-    }
+    val newEdges = stage("verified_pairs", EdgeStore)(Staged(DedupPipeline.verifyPairs(cand,
+      stagedRows("candidate_pairs"), withStore(sigs.toDF(), SigStore).as[SignatureRow], allImages,
+      cfg).toDF()))
 
     // 4. cluster maintenance: previous assignments as star edges + this
     //    batch's verified pairs. The published assignment is trusted
@@ -361,28 +358,7 @@ object IncrementalDedup {
     }
   }
 
-  /** Ids (pairs * 2) at or below which the candidate id list
-    * broadcasts — the same order as verify's pixel needIds threshold; a
-    * long id is 8 bytes, so 4M ids is a ~32 MB build side. */
-  private[pipeline] val BroadcastIdLimit = 4000000L
-
   /** Rows of every committed batch of `store`, from parquet footers. */
   private[pipeline] def storeRowCount(io: TableBackend, store: String): Long =
     io.batches(store).map(io.batchRowCount(store, _)).sum
-
-  /** Prune the verify-stage signature side to the ids in the candidate
-    * pairs, so verify costs O(batch + touched), never O(store): a lazy
-    * semi-join, nothing cached. The id list broadcasts while
-    * `candPairs` (the staged candidates' footer count) keeps it small;
-    * above that (pathological, corpus-sized candidate sets) the
-    * shuffled semi-join is the correct plan and AQE handles it. */
-  private[graft] def pruneToCandidates(
-      cand: DataFrame,
-      candPairs: Long,
-      allSigs: Dataset[SignatureRow]): Dataset[SignatureRow] = {
-    import allSigs.sparkSession.implicits._
-    val candIds = cand.select(col("id1").as("nid")).union(cand.select(col("id2").as("nid")))
-    allSigs.join(if (candPairs * 2 <= BroadcastIdLimit) broadcast(candIds) else candIds,
-      Seq("nid"), "left_semi").as[SignatureRow]
-  }
 }

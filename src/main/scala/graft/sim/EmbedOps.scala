@@ -106,8 +106,8 @@ object EmbedOps {
     * ~L * n * bucket << n^2. Candidates are deduped across tables
     * before the (expensive) exact re-rank.
     *
-    * Re-rank plan is SIZE-GATED on the corpus row count (the verify
-    * `needIds` pattern): at or below `maxBroadcastVectors` the vector
+    * Re-rank plan is SIZE-GATED on the corpus row count (the pattern
+    * of verify's broadcast candidate-nid prune): at or below `maxBroadcastVectors` the vector
     * table broadcasts and the dedup+re-rank+top-k runs in ONE shuffle
     * of id-only pairs; above it the vectors are resolved by
     * CO-PARTITIONED shuffle-hash joins on vec_id/neighbor_id — shuffle
@@ -269,10 +269,10 @@ object EmbedOps {
     * stream (vec_id, neighbor_id; duplicates allowed) — the back half
     * of BOTH ANN paths (hyperplane-LSH and IVF), so the two candidate
     * generators produce rank-identical results for identical candidate
-    * sets. Plan is SIZE-GATED on the corpus row count (the verify
-    * `needIds` pattern): broadcast below the threshold, co-partitioned
-    * shuffle-hash joins above it (no driver collect, no memory
-    * ceiling). `e` must be (vec_id, v: array<double>).
+    * sets. Plan is SIZE-GATED on the corpus row count (the pattern of
+    * verify's broadcast candidate-nid prune): broadcast below the
+    * threshold, co-partitioned shuffle-hash joins above it (no driver
+    * collect, no memory ceiling). `e` must be (vec_id, v: array<double>).
     */
   private def rerankTopK(spark: SparkSession, e: DataFrame,
       rawPairs: DataFrame, k: Int, maxBroadcastVectors: Long,
@@ -372,16 +372,23 @@ object EmbedOps {
     * oracle SQL is a pure constant at any sf. */
   def annGate(spark: SparkSession, dir: String, k: Int = 5,
       recallMin: Double = 0.85): DataFrame = {
-    import spark.implicits._
     val bf = cosineTopK(spark, dir, k).select("vec_id", "neighbor_id")
     val ann = annTopK(spark, dir, k).select("vec_id", "neighbor_id")
-    val total = bf.count()
-    val hits = bf.join(ann, Seq("vec_id", "neighbor_id"), "left_semi").count()
-    Seq((
-      if (total > 0) 1 else 0,
-      if (total > 0 && hits >= recallMin * total) 1 else 0))
-      .toDF("pairs_found", "recall_ok")
+    recallVerdict(recallCounts(bf, ann), recallMin)
   }
+
+  /** One row (total, hits): the `truth` rows, and those of them that
+    * `found` holds too — both counts in one aggregate, no driver
+    * action. */
+  private def recallCounts(truth: DataFrame, found: DataFrame): DataFrame =
+    truth.join(found.distinct().withColumn("hit", lit(1)), Seq("vec_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("total"), count(col("hit")).as("hits"))
+
+  /** The constant-shaped recall verdict row of a (total, hits) row. */
+  private def recallVerdict(counts: DataFrame, recallMin: Double): DataFrame =
+    counts.select(
+      when(col("total") > 0, 1).otherwise(0).as("pairs_found"),
+      when(col("total") > 0 && col("hits") >= col("total") * recallMin, 1).otherwise(0).as("recall_ok"))
 
   /** Bench-scale ANN recall gate: recall@k of the LSH ANN against
     * EXACT ground truth for a deterministic hash-sample of query
@@ -398,28 +405,23 @@ object EmbedOps {
     * measured 0.87-0.91 band minus honest margin on a near-random
     * corpus, raised per the round-4 review. */
   def annScaleGate(spark: SparkSession, dir: String, k: Int = 5,
-      sampleMod: Int = 10, recallMin: Double = 0.85): DataFrame = {
-    import spark.implicits._
-    val (total, hits) = sampledRecallCounts(spark, dir, k, sampleMod)
-    Seq((
-      if (total > 0) 1 else 0,
-      if (total > 0 && hits >= recallMin * total) 1 else 0))
-      .toDF("pairs_found", "recall_ok")
-  }
+      sampleMod: Int = 10, recallMin: Double = 0.85): DataFrame =
+    recallVerdict(sampledRecallCounts(spark, dir, k, sampleMod), recallMin)
 
   /** Measured micro recall@k of [[annTopK]] vs the sampled exact
     * ground truth (the number [[annScaleGate]] thresholds) — for bench
     * reporting. */
   def annScaleRecall(spark: SparkSession, dir: String, k: Int = 5,
       sampleMod: Int = 10): Double = {
-    val (total, hits) = sampledRecallCounts(spark, dir, k, sampleMod)
+    val r = sampledRecallCounts(spark, dir, k, sampleMod).head()
+    val (total, hits) = (r.getLong(0), r.getLong(1))
     if (total == 0) 0.0 else hits.toDouble / total
   }
 
-  /** (exact ground-truth pairs, ANN hits) over the hash-sampled query
-    * set — the shared body of the scale gate and its reporter. */
+  /** One (exact ground-truth pairs, ANN hits) row over the hash-sampled
+    * query set — the shared body of the scale gate and its reporter. */
   private def sampledRecallCounts(spark: SparkSession, dir: String,
-      k: Int, sampleMod: Int): (Long, Long) = {
+      k: Int, sampleMod: Int): DataFrame = {
     val e = emb(spark, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     val q = e.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
@@ -437,9 +439,7 @@ object EmbedOps {
       .select(col("qid").as("vec_id"), col("neighbor_id"))
     val ann = annTopK(spark, dir, k).select("vec_id", "neighbor_id")
       .join(q.select(col("qid").as("vec_id")), Seq("vec_id"), "left_semi")
-    val total = exact.count()
-    val hits = exact.join(ann, Seq("vec_id", "neighbor_id"), "left_semi").count()
-    (total, hits)
+    recallCounts(exact, ann)
   }
 
   /** Driver-visible IVF exactness gate: with nprobe == nC the probe
@@ -448,16 +448,16 @@ object EmbedOps {
     * hash-checked driver signal). Emitted as the constant verdict
     * row — any broken rank anywhere hash-mismatches. */
   def ivfGate(spark: SparkSession, dir: String, k: Int = 5, nC: Int = 16): DataFrame = {
-    import spark.implicits._
     val brute = cosineTopK(spark, dir, k).select("vec_id", "rk", "neighbor_id")
     val ivf = ivfTopK(spark, dir, k, nC = nC, nprobe = nC).select("vec_id", "rk", "neighbor_id")
-    val n = brute.count()
-    val agree = brute.join(ivf, Seq("vec_id", "rk", "neighbor_id"), "left_semi").count()
-    val nIvf = ivf.count()
-    Seq((
-      if (n > 0) 1 else 0,
-      if (agree == n && nIvf == n) 1 else 0))
-      .toDF("pairs_found", "exact_match")
+    // (n, agree) and nIvf: two aggregates of one row each, crossed into
+    // the verdict row — no driver action
+    brute.join(ivf.distinct().withColumn("hit", lit(1)), Seq("vec_id", "rk", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n"), count(col("hit")).as("agree"))
+      .crossJoin(ivf.agg(count(lit(1)).as("n_ivf")))
+      .select(
+        when(col("n") > 0, 1).otherwise(0).as("pairs_found"),
+        when(col("agree") === col("n") && col("n_ivf") === col("n"), 1).otherwise(0).as("exact_match"))
   }
 
   /** Label-centroid assignment: mean vector per label, then each

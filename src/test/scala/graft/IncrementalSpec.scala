@@ -135,40 +135,71 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("verify-side store inputs are bounded by the candidate ids (broadcast prune, O(cand) not O(store))") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val corpus = CorpusGen.generate(spark, 6).cache()
     val sigs = DedupPipeline.signatures(corpus, cfg).cache()
-    val nStore = sigs.count()
-    val ids = sigs.collect().map(_.nid).distinct.sorted.take(4)
-    val cand = Seq((ids(0), ids(1), 3, "exact"), (ids(2), ids(3), 2, "minhash"))
-      .toDF("id1", "id2", "srcmask", "src")
-    val vs = IncrementalDedup.pruneToCandidates(cand, 2L, sigs)
-    // the signature side verify sees is exactly the candidate-touched
-    // rows — a 6-group store contributes 4 rows, not nStore
-    assert(nStore > 4)
-    assert(vs.count() == 4)
-    assert(vs.collect().map(_.nid).toSet == ids.toSet)
-    // the image side is bounded by verify's own pixel side-join: the
-    // `bytes` rows it caches are only ids of pairs pending a pixel
-    // check, selected by a join with a BROADCAST of those ids — the
-    // image store is never hash-exchanged
-    val real = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg).cache()
-    val (ver, cleanup, _) = DedupPipeline.verifyWithCleanup(real,
-      IncrementalDedup.pruneToCandidates(real, real.count(), sigs), corpus.toDF(), cfg)
-    ver.count()
-    val pix = ver.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
-        if r.output.exists(_.name.startsWith("bytes")) => r.cacheBuilder.cachedPlan
-    }
-    assert(pix.nonEmpty, "no cached pixel side")
-    val plan = pix.head.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast prune, got:\n$plan")
-    val pixIds = pix.head.execute().map(_.getUTF8String(0).toString).collect().toSet
+    val nStore = corpus.count()
     val imageOf = sigs.collect().map(s => s.nid -> s.image_id).toMap
+    /** The (signature, image) ids of the rows that reach verify's
+      * exchanges from the store scans; fails unless every store row
+      * reaches them through a BroadcastHashJoin semi-join on the
+      * candidate nids. */
+    def exchangeInputs(cand: org.apache.spark.sql.DataFrame, nCand: Long): (Set[String], Set[String]) = {
+      val ver = DedupPipeline.verifyPairs(cand, nCand, sigs, corpus.toDF(), cfg)
+      ver.collect() // settles the adaptive plan
+      def stages(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => stages(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: stages(q.plan)
+        case other => other +: other.children.flatMap(stages)
+      }
+      // the nodes of one stage: a cached-table stage belongs to the
+      // stage that reads it
+      def ownStage(p: SparkPlan): Seq[SparkPlan] = p match {
+        case t: org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec => t +: ownStage(t.plan)
+        case _: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(p)
+        case other => other +: other.children.flatMap(ownStage)
+      }
+      // the scans of the cached store tables in a stage
+      def storeScans(p: SparkPlan): Seq[SparkPlan] = ownStage(p).collect {
+        case s: InMemoryTableScanExec if s.output.exists(a => a.name == "bytes" || a.name == "sha") => s
+      }
+      val fed = stages(ver.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec if storeScans(e.child).nonEmpty => e
+      }
+      assert(fed.nonEmpty, "no exchange reads the store")
+      for (e <- fed; scan <- storeScans(e.child)) {
+        val gates = ownStage(e.child).collect {
+          case j: BroadcastHashJoinExec if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi &&
+            j.right.output.map(_.name) == Seq("nid") && ownStage(j.left).exists(_ eq scan) => j
+        }
+        assert(gates.nonEmpty, s"store rows reach an exchange without the broadcast prune:\n$e")
+      }
+      val rows = fed.flatMap { e =>
+        val out = e.child.output.map(_.name)
+        val (id, sha, bytes) = (out.indexOf("image_id"), out.indexOf("sha"), out.indexOf("bytes"))
+        e.child.execute().map(r => (r.getUTF8String(id).toString, !r.isNullAt(sha), !r.isNullAt(bytes)))
+          .collect()
+      }
+      (rows.collect { case (i, true, _) => i }.toSet, rows.collect { case (i, _, true) => i }.toSet)
+    }
+    // two fabricated pairs: a 6-group store contributes 4 rows to each
+    // side of verify's join, not nStore
+    val ids = imageOf.keys.toSeq.sorted.take(4)
+    val (sigIds, pixIds) = exchangeInputs(
+      Seq((ids(0), ids(1), "exact"), (ids(2), ids(3), "minhash")).toDF("id1", "id2", "src"), 2L)
+    assert(sigIds == ids.map(imageOf).toSet && pixIds == sigIds, s"sig rows $sigIds, image rows $pixIds")
+    // the real candidates: the image rows are candidate-touched ids only,
+    // fewer than the store holds
+    val real = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg).cache()
     val touched = real.select("id1", "id2").as[(Long, Long)].collect()
       .flatMap { case (a, b) => Seq(imageOf(a), imageOf(b)) }.toSet
-    assert(pixIds.nonEmpty && pixIds.subsetOf(touched) && pixIds.size < nStore,
-      s"pixel side holds ${pixIds.size} of $nStore images")
-    cleanup()
+    val (realSigIds, realPixIds) = exchangeInputs(real, real.count())
+    assert(realSigIds == touched)
+    assert(realPixIds.nonEmpty && realPixIds.subsetOf(touched) && realPixIds.size < nStore,
+      s"image side holds ${realPixIds.size} of $nStore images")
     real.unpersist(); corpus.unpersist(); sigs.unpersist()
   }
 

@@ -40,7 +40,10 @@ class RestoreSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     val rep =
       try RestoreOps.roundtripReport(images, restored, cfg).collect()
-      finally { Thread.sleep(1500); spark.sparkContext.removeSparkListener(l) }
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(l)
+      }
     assert(rep.length == 1)
     assert(rep(0).getLong(0) == 0 && rep(0).getLong(1) == 0 && rep(0).getLong(2) == 1)
     // round-2 ran images.count + restored.distinct.count + a violations

@@ -160,7 +160,7 @@ class RetentionSpec extends AnyFunSuite {
     val reclaimed =
       try ret.compactEdges(dropIds, "gcT")
       finally {
-        Thread.sleep(1500) // listener bus drains asynchronously
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
       }
     // e3 loses its rows containing img_3_1 or img_3_11: rows (1,11)

@@ -191,11 +191,10 @@ class SkewSpec extends AnyFunSuite {
     val someBuckets = bk.toDF().groupBy("key")
       .count().withColumnRenamed("count", "n").limit(20).as[HotKey].collect().toSeq
     val sk = DedupPipeline.candidatesSkewAware(bk, cfg, someBuckets)
-    val (ver, cleanup, _) = DedupPipeline.verifyWithCleanup(finished(sk), sigs, corpus.toDF(), cfg)
+    val ver = DedupPipeline.verify(finished(sk), sigs, corpus, cfg)
     val got = DedupPipeline.clusters(corpus.toDF(), ver)
       .collect().map(r => (r.image_id, r.cluster_id)).sorted.toSeq
     assert(got == direct)
-    cleanup()
     sigs.unpersist(); corpus.unpersist()
   }
 }
