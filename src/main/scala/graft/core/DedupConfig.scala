@@ -89,8 +89,8 @@ final case class DedupConfig(
     //     runs that skip data movement, used for cheap index/dedup-ratio
     //     audits over huge traces). signatureOnly=true is the graft
     //     analog: the pipeline never reads or writes the `bytes` column —
-    //     signatures come from caption+phash metadata, the pixel-verify
-    //     side-join is skipped (hamming-close pairs settle on phash
+    //     signatures come from caption+phash metadata, verify reads no
+    //     image rows (hamming-close pairs settle on phash
     //     evidence with psnr = -1), exact identity degrades to
     //     metadata equality (caption+phash), pixel-identity keys are
     //     per-image unique (never fire), and restore is unavailable.

@@ -326,7 +326,7 @@ object DedupPipeline extends Serializable {
     * long id is 8 bytes, so 4M ids is a ~32 MB build side. Above it
     * (pathological, corpus-sized candidate sets) the shuffled semi-join
     * is the correct plan and AQE handles it. */
-  private[graft] val BroadcastIdLimit = 4000000L
+  private val BroadcastIdLimit = 4000000L
 
   /** The nid of an image id (Sig.hash64), for the image rows verify
     * resolves by nid. */
@@ -425,9 +425,11 @@ object DedupPipeline extends Serializable {
       while (it.hasNext && sameGroup(it.head, head)) group += it.next()
       val (sigRows, pixRows) = group.partition(_.sha != null)
       val pixOf = pixRows.iterator.map(p => p.image_id -> p).toMap
-      for (a <- sigRows.iterator if a.side == 0; b <- sigRows.iterator if b.side == 1 && a.image_id != b.image_id;
-           v <- verifyPair(if (a.image_id > b.image_id) (b, a) else (a, b), pixOf, shingles, cfg))
-        yield v
+      for {
+        a <- sigRows.iterator if a.side == 0
+        b <- sigRows.iterator if b.side == 1 && a.image_id != b.image_id
+        v <- verifyPair(if (a.image_id > b.image_id) (b, a) else (a, b), pixOf, shingles, cfg)
+      } yield v
     }
   }
 
@@ -468,19 +470,17 @@ object DedupPipeline extends Serializable {
     // tradeoff — exactly the fidelity destor gives up when a simulated
     // store skips chunk data.
     else if (cfg.signatureOnly) Some(pair(-1.0, if (verdict.nonEmpty) verdict else "phash"))
-    else for (pa <- pixOf.get(a.image_id); pb <- pixOf.get(b.image_id);
-              p = psnrOf(pa, pb);
-              // an earlier (cheaper) verdict survives with its psnr
-              // recorded; an otherwise-unverified pair is a dup only past
-              // the PSNR gate
-              v = if (verdict.nonEmpty) verdict else if (p >= cfg.psnrMin) "pixel" else ""
-              if v.nonEmpty) yield pair(p, v)
-  }
-
-  private def psnrOf(a: PairSide, b: PairSide): Double = {
-    val pa = Codec.decode(a.bytes, a.fmt)
-    val pb = Codec.decode(b.bytes, b.fmt)
-    if (pa.length == pb.length) Codec.psnr(pa, pb) else 0.0
+    else (pixOf.get(a.image_id), pixOf.get(b.image_id)) match {
+      case (Some(pa), Some(pb)) =>
+        val da = Codec.decode(pa.bytes, pa.fmt)
+        val db = Codec.decode(pb.bytes, pb.fmt)
+        val p = if (da.length == db.length) Codec.psnr(da, db) else 0.0
+        // an earlier (cheaper) verdict survives with its psnr recorded;
+        // an otherwise-unverified pair is a dup only past the PSNR gate
+        val v = if (verdict.nonEmpty) verdict else if (p >= cfg.psnrMin) "pixel" else ""
+        Option.when(v.nonEmpty)(pair(p, v))
+      case _ => None // an image without its row holds no pixel evidence
+    }
   }
 
   /** Stage 5 — connected components + deterministic representative.
