@@ -206,9 +206,9 @@ final class IncrementalDedup(
     val allImages =
       if (cfg.signatureOnly) withStore(images, ImagesStore).select(metaCols: _*)
       else withStore(images, ImagesStore)
-    val newEdges = stage("verified_pairs", EdgeStore)(Staged(DedupPipeline.verifyPairs(cand,
-      stagedRows("candidate_pairs"), withStore(sigs.toDF(), SigStore).as[SignatureRow], allImages,
-      cfg).toDF()))
+    val newEdges = stage("verified_pairs", EdgeStore)(Staged(DedupPipeline.verifyPairs(
+      cand, stagedRows("candidate_pairs"), withStore(sigs.toDF(), SigStore).as[SignatureRow],
+      allImages, cfg).toDF()))
 
     // 4. cluster maintenance: previous assignments as star edges + this
     //    batch's verified pairs. The published assignment is trusted

@@ -107,8 +107,9 @@ object EmbedOps {
     * before the (expensive) exact re-rank.
     *
     * Re-rank plan is SIZE-GATED on the corpus row count (the pattern
-    * of verify's broadcast candidate-nid prune): at or below `maxBroadcastVectors` the vector
-    * table broadcasts and the dedup+re-rank+top-k runs in ONE shuffle
+    * of verify's broadcast candidate-nid prune): at or below
+    * `maxBroadcastVectors` the vector table broadcasts and the
+    * dedup+re-rank+top-k runs in ONE shuffle
     * of id-only pairs; above it the vectors are resolved by
     * CO-PARTITIONED shuffle-hash joins on vec_id/neighbor_id — shuffle
     * bytes grow by the vector payload, but nothing ever collects to
