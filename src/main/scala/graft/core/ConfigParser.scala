@@ -30,12 +30,12 @@ object ConfigParser {
   /** Known keys, each with a one-copy setter applied at the end. */
   private val keys: Set[String] = Set(
     "shingle-size", "minhash-k", "minhash-seed1", "minhash-seed2",
-    "bands", "rows-per-band", "simhash-bits", "hamming-max",
+    "bands", "rows-per-band", "hamming-max",
     "phash-blocks", "phash-combo", "jaccard-min", "psnr-min",
     "substr-gram", "substr-window", "substr-df-cap", "sa-shard-max-chars",
     "bucket-cap", "skew-quantile", "index-value-length", "bloom-fpp",
     "container-bytes", "cfl-usage-threshold", "cfl-require",
-    "signature-only", "seed")
+    "signature-only")
 
   private def toLong(v: String, key: String, ln: Int): Long =
     try {
@@ -109,7 +109,6 @@ object ConfigParser {
       minhashSeed2 = l("minhash-seed2", base.minhashSeed2),
       bands = i("bands", base.bands),
       rowsPerBand = i("rows-per-band", base.rowsPerBand),
-      simhashBits = i("simhash-bits", base.simhashBits),
       hammingMax = i("hamming-max", base.hammingMax),
       phashBlocks = i("phash-blocks", base.phashBlocks),
       phashCombo = i("phash-combo", base.phashCombo),
@@ -126,8 +125,7 @@ object ConfigParser {
       containerBytes = l("container-bytes", base.containerBytes),
       cflUsageThreshold = d("cfl-usage-threshold", base.cflUsageThreshold),
       cflRequire = d("cfl-require", base.cflRequire),
-      signatureOnly = b("signature-only", base.signatureOnly),
-      seed = l("seed", base.seed))
+      signatureOnly = b("signature-only", base.signatureOnly))
   }
 
   def parseFile(path: String): DedupConfig =
@@ -146,7 +144,6 @@ object ConfigParser {
     put("minhash-seed2", "0x" + java.lang.Long.toHexString(cfg.minhashSeed2))
     put("bands", cfg.bands)
     put("rows-per-band", cfg.rowsPerBand)
-    put("simhash-bits", cfg.simhashBits)
     put("hamming-max", cfg.hammingMax)
     put("phash-blocks", cfg.phashBlocks)
     put("phash-combo", cfg.phashCombo)
@@ -164,7 +161,6 @@ object ConfigParser {
     put("cfl-usage-threshold", cfg.cflUsageThreshold)
     put("cfl-require", cfg.cflRequire)
     put("signature-only", cfg.signatureOnly)
-    put("seed", cfg.seed)
     sb.result()
   }
 }

@@ -28,8 +28,7 @@ final case class DedupConfig(
     // the pipeline's largest shuffle, the binding resource at scale.
     bands: Int = 20, // b bands ...
     rowsPerBand: Int = 4, // ... of r rows each; b*r == minhashK
-    // --- SimHash / phash hamming (pixel-side signature) ---
-    simhashBits: Int = 64,
+    // --- phash hamming (pixel-side signature) ---
     hammingMax: Int = 6, // max hamming distance for a phash dup
     // block-combination hamming LSH (Sig.hammingComboKeys): guarantees
     // candidates for hamming <= phashBlocks - phashCombo (= hammingMax).
@@ -96,9 +95,7 @@ final case class DedupConfig(
     //     per-image unique (never fire), and restore is unavailable.
     //     Like destor's simulation stores, a simulation workDir and a
     //     full workDir must not mix. ---
-    signatureOnly: Boolean = false,
-    // --- misc ---
-    seed: Long = 42L
+    signatureOnly: Boolean = false
 ) {
   // --- cross-knob validation (the analog of destor's init_index combo
   //     normalization, reference src/index/index.c:34-109, which forces
@@ -123,7 +120,6 @@ final case class DedupConfig(
   require(phashBlocks - phashCombo >= hammingMax,
     s"phashBlocks - phashCombo (${phashBlocks - phashCombo}) must be >= hammingMax " +
       s"($hammingMax): the combo-key pigeonhole guarantee must cover the verify gate")
-  require(simhashBits >= 1 && simhashBits <= 64, "simhashBits must be in [1,64]")
   require(jaccardMin > 0 && jaccardMin <= 1, "jaccardMin must be in (0,1]")
   require(psnrMin > 0, "psnrMin must be > 0")
   require(substrGram >= 2 && substrWindow >= 1,

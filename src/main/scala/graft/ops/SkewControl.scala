@@ -26,8 +26,12 @@ import org.apache.spark.sql.functions._
   *    har_rewrite.c:28-54; the next run routes postings of inherited keys
   *    through a broadcast min-join star-pairing path that never enters
   *    the big posting sort — the known-skewed keys are split out BEFORE
-  *    the shuffle instead of being discovered inside it
-  *    (DedupPipeline.candidatesSkewAware).
+  *    the shuffle instead of being discovered inside it.
+  *
+  * Both live in the one candidate stage, DedupPipeline.candidatesSkewAware,
+  * that every run goes through: a one-shot run (DedupPipeline.candidates)
+  * derives its cap from its own bucket sizes exactly as an ingest does,
+  * but has no previous list to inherit and does not read its own.
   *
   * Cost model: the pipeline takes bucket sizes as the run lengths of
   * its one posting sort (PairGen.runHistogram, per partition, merged on

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *    touched images (column pruning keeps it out of all other scans).
   *  - candidate generation shuffles on the packed posting key — the
   *    only O(data) shuffle; bucket sizes are bounded by the CAP-analog
-  *    skew stage (star pairing for buckets > bucketCap) so no O(n^2)
-  *    explosion.
+  *    skew stage (star pairing for buckets above the CBR effective cap)
+  *    so no O(n^2) explosion.
   *  - all joins are equi-joins; AQE splits residual skew.
   */
 /** One side of a candidate pair in verify, resolved to a signature row
@@ -194,19 +194,12 @@ object DedupPipeline extends Serializable {
     }
   }
 
-  /** Stage 3 — candidate pair generation with explicit skew handling.
-    * ONE shuffle groups postings per packed posting key; pairs are
-    * expanded locally by PairGen's run-length expander — all-pairs for
-    * buckets <= bucketCap, star pairing to the min image_id above it
-    * (destor's CAP capping, src/cap_rewrite.c:44-107: bounded fan-in per
-    * bucket, connectivity preserved for clustering). Pair dedup across
-    * bands is the second shuffle. (The earlier sizes-join + self-join
-    * formulation computed the posting subtree twice and shuffled each
-    * pair row three times.)
-    */
+  /** Stage 3 — the finished candidate pairs (id1, id2, srcmask, src) of
+    * one posting table: [[candidatesSkewAware]] with no inherited hot
+    * list, then [[finishCandidates]]. The HAR hot list is never read
+    * here, so its over-cap scan never runs. */
   def candidates(bk: Dataset[BucketRow], cfg: DedupConfig): DataFrame =
-    finishCandidates(PairGen.expandPairs(
-      PairGen.sortByKey(bk.toDF()), cfg.bucketCap, cfg.hammingMax))
+    finishCandidates(candidatesSkewAware(bk, cfg).pairs)
 
   /** Cross-band pair dedup + provenance: bit-OR the source bits of every
     * band a pair was seen in, label with the strongest evidence class.
@@ -229,12 +222,22 @@ object DedupPipeline extends Serializable {
   /** Skew-aware candidate generation result: the raw (id1, id2, srcbit)
     * pairs (a plain lazy query — nothing is cached — that the caller
     * finishes with [[finishCandidates]], together with any other pairs
-    * of the batch), this run's HAR hot list as a driver-side (key, n)
-    * list on the packed posting key (the NEXT run's inherited list), and
-    * the CBR-derived effective cap. */
-  final case class SkewAwareCandidates(pairs: DataFrame, hotList: Seq[HotKey], capUsed: Int)
+    * of the batch), the CBR-derived effective cap, and this run's HAR
+    * hot list as a driver-side (key, n) list on the packed posting key
+    * (the NEXT run's inherited list). The list is computed on its first
+    * read: the over-cap scan it may need runs only for a caller that
+    * hands the list on (ingest). */
+  final class SkewAwareCandidates(val pairs: DataFrame, hot: => Seq[HotKey], val capUsed: Int) {
+    lazy val hotList: Seq[HotKey] = hot
+  }
 
-  /** Stage 3 with BOTH adaptive skew controllers live (see SkewControl):
+  /** Stage 3's pair generation, the one candidate path every caller
+    * runs. ONE shuffle groups postings per packed posting key; pairs are
+    * expanded locally by PairGen's run-length expander — all-pairs for
+    * runs up to the effective cap, star pairing to the min member above
+    * it (destor's CAP capping, src/cap_rewrite.c:44-107: bounded fan-in
+    * per bucket, connectivity preserved for clustering). Both adaptive
+    * skew controllers are live (see SkewControl):
     *  - CBR: effective cap = skewQuantile-quantile of this run's bucket
     *    sizes, floored at cfg.bucketCap — a shifted bucket-size
     *    distribution re-derives the cap instead of star-pairing the
@@ -247,9 +250,9 @@ object DedupPipeline extends Serializable {
     * keyed on the packed key on every path, so the cap and the pair SET
     * are the non-HAR path's (star pairs to the same per-key min member),
     * colliding keys included; only the physical plan for hot keys
-    * changes. Driver actions: the size histogram, the inherited keys'
-    * (min, size) rows, and an over-cap scan only when the histogram
-    * shows an over-cap run.
+    * changes. Driver actions: the size histogram and the inherited
+    * keys' (min, size) rows here; the over-cap scan on the first read of
+    * `hotList`, and only when the histogram shows an over-cap run.
     */
   def candidatesSkewAware(
       bk: Dataset[BucketRow],
@@ -300,10 +303,12 @@ object DedupPipeline extends Serializable {
     // of the sort (scanned only when the histogram saw one — rare by
     // construction: cap is the skewQuantile tail) plus the still-hot
     // inherited keys
-    val coldHot =
-      if (coldHist.exists(_._1 > cap)) sorted.mapPartitions(PairGen.hotRuns(_, cap)).collect()
-      else Array.empty[(Long, Long)]
-    val hotList = (coldHot ++ stillHot.map(m => (m._1, m._4))).map { case (k, n) => HotKey(k, n) }
+    def hotList = {
+      val coldHot =
+        if (coldHist.exists(_._1 > cap)) sorted.mapPartitions(PairGen.hotRuns(_, cap)).collect()
+        else Array.empty[(Long, Long)]
+      (coldHot ++ stillHot.map(m => (m._1, m._4))).map { case (k, n) => HotKey(k, n) }.toSeq
+    }
 
     val cls = col("key").bitwiseAND(3L)
     // still-hot inherited keys: star pairs via broadcast min-join
@@ -318,7 +323,7 @@ object DedupPipeline extends Serializable {
     val backPairs = for (hp <- hotPosts if shrunk.nonEmpty) yield PairGen.expandPairs(
       PairGen.sortByKey(hp.join(broadcast(shrunk.map(_._1).toSeq.toDF("key")), Seq("key"), "left_semi")),
       cap, cfg.hammingMax)
-    SkewAwareCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _), hotList.toSeq, cap)
+    new SkewAwareCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _), hotList, cap)
   }
 
   /** Candidate ids (pairs * 2) at or below which verify broadcasts the
@@ -508,7 +513,7 @@ object DedupPipeline extends Serializable {
       .select(col("id").as("image_id"), col("component").as("cluster_id"),
         (col("id") === col("component")).as("representative"))
 
-  /** Signatures → postings → lean candidates → verify, in memory: the
+  /** Signatures → postings → candidates → verify, in memory: the
     * verified pairs, the candidate-pair count (verify's broadcast gate
     * and the CC edge-count hint) and a cleanup to call once the pairs
     * are materialized. Signatures are persisted (two consumers: bucket
@@ -521,19 +526,7 @@ object DedupPipeline extends Serializable {
       cfg: DedupConfig): (Dataset[VerifiedPair], Long, () => Unit) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val sigs = signatures(images, cfg).persist(lvl)
-    val bk = buckets(sigs, cfg)
-    // LEAN candidate path for the one-shot run: static CAP cap
-    // (destor's rewrite_capping_level is equally a static per-run knob,
-    // destor.config:140), pairs straight out of the single posting
-    // sort-shuffle, no bucket-size histogram job. Star-pairing above
-    // the cap preserves bucket connectivity, so cluster output is
-    // cap-invariant wherever verification passes. The ADAPTIVE
-    // controllers (CBR quantile cap, HAR hot-bucket inheritance) live on
-    // the cross-run ingest flow — see candidatesSkewAware /
-    // IncrementalDedup — where destor's own feedback loops operate
-    // (cbr_rewrite.c keeps a cross-job utility history; har_rewrite.c
-    // loads the previous job's sparse list).
-    val cand = candidates(bk, cfg).persist(lvl)
+    val cand = candidates(buckets(sigs, cfg), cfg).persist(lvl)
     val nCand = cand.count()
     (verifyPairs(cand, nCand, sigs, images.toDF(), cfg), nCand,
       () => { cand.unpersist(blocking = false); sigs.unpersist(blocking = false); () })

@@ -45,6 +45,11 @@ class ConfigParserSpec extends AnyFunSuite {
   test("errors carry line numbers: unknown key, unknown preset, bad value, late preset") {
     val e1 = intercept[IllegalArgumentException](ConfigParser.parse("bands 20\nnope 3\n"))
     assert(e1.getMessage.contains("line 2") && e1.getMessage.contains("nope"))
+    // knobs no stage reads are not keys
+    for (dead <- Seq("seed 7", "simhash-bits 32")) {
+      val e = intercept[IllegalArgumentException](ConfigParser.parse(dead + "\n"))
+      assert(e.getMessage.contains("unknown key"), dead)
+    }
     val e2 = intercept[IllegalArgumentException](ConfigParser.parse("preset fancy\n"))
     assert(e2.getMessage.contains("unknown preset"))
     val e3 = intercept[IllegalArgumentException](ConfigParser.parse("minhash-k many\n"))
@@ -56,9 +61,9 @@ class ConfigParserSpec extends AnyFunSuite {
 
   test("parseFile reads from disk") {
     val p = java.nio.file.Files.createTempFile("graft-conf", ".conf")
-    java.nio.file.Files.writeString(p, "preset exact-physical\nseed 7\n")
+    java.nio.file.Files.writeString(p, "preset exact-physical\nbucket-cap 32\n")
     val cfg = ConfigParser.parseFile(p.toString)
-    assert(cfg.bloomFpp == 0.01 && cfg.indexValueLength == 256 && cfg.seed == 7L)
+    assert(cfg.bloomFpp == 0.01 && cfg.indexValueLength == 256 && cfg.bucketCap == 32)
     java.nio.file.Files.delete(p)
   }
 }

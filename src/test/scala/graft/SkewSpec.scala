@@ -4,6 +4,7 @@ import graft.core.{BucketRow, DedupConfig, HotKey}
 import graft.ops.{PairGen, SkewControl}
 import graft.pipeline.DedupPipeline
 import graft.synth.CorpusGen
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +31,19 @@ class SkewSpec extends AnyFunSuite {
   private def finished(sk: DedupPipeline.SkewAwareCandidates) =
     DedupPipeline.finishCandidates(sk.pairs)
 
+  /** `f` run with `listener` registered; every event `f` caused has
+    * reached it when this returns. */
+  private def listening[T](listener: SparkListener)(f: => T): T = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("CBR: shifted bucket-size distribution re-derives the cap (knob not dead)") {
     // a corpus whose TYPICAL bucket has 100 members — above the static
     // floor of 64 — plus one mega-bucket outlier
@@ -54,6 +68,63 @@ class SkewSpec extends AnyFunSuite {
     // and it is reported as hot for the next run (HAR handoff)
     val hot = sk.hotList
     assert(hot.length == 1 && hot.head.n == 5000)
+  }
+
+  test("CBR: one-shot candidates all-pair a bucket under the re-derived cap") {
+    // the shifted distribution above: a 100-member bucket is within the
+    // 0.99-quantile cap, so `candidates` (run, roundTrip) all-pairs it
+    // instead of star-pairing it to 99 pairs under the static floor
+    val bk = spark.createDataset(postings(Seq.fill(200)(100) :+ 5000))
+    val one = DedupPipeline.candidates(bk, cfg).filter("id1 < 100000").count()
+    assert(one == 100L * 99 / 2, s"bucket0 pairs=$one")
+  }
+
+  test("HAR: the over-cap scan runs only when the hot list is read") {
+    val dist = Seq.fill(200)(8) :+ 500 // one bucket over the static floor of 64
+    val bk = spark.createDataset(postings(dist))
+    /** Jobs started while `f` runs. */
+    def jobs[T](f: => T): (T, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val out = listening(new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      })(f)
+      (out, n.get)
+    }
+    def pairsOnly(c: DedupConfig) = {
+      val sk = DedupPipeline.candidatesSkewAware(bk, c)
+      finished(sk).collect()
+      sk
+    }
+    // building and consuming the pairs takes the jobs of the same plan
+    // with no over-cap run (where no version scans)
+    val (sk, built) = jobs(pairsOnly(cfg))
+    val (_, builtNoHot) = jobs(pairsOnly(cfg.copy(bucketCap = 1000)))
+    assert(built == builtNoHot, s"jobs $built vs $builtNoHot without an over-cap run")
+    // the first read runs the scan, once
+    val (hot, read) = jobs(sk.hotList)
+    assert(read == 1)
+    assert(jobs(sk.hotList)._2 == 0)
+    // the list is the one an eager scan of the posting sort returns
+    val cap = sk.capUsed
+    val eager = PairGen.sortByKey(bk.toDF()).queryExecution.toRdd
+      .mapPartitions(PairGen.hotRuns(_, cap)).collect()
+      .map { case (k, n) => HotKey(k, n) }.toSeq
+    assert(eager.map(_.n) == Seq(500L))
+    assert(hot == eager)
+  }
+
+  test("candidates equal the static-cap expander on the sf-tiny corpus") {
+    // the golden corpus's 0.99-quantile bucket size is under the floor,
+    // so the one candidate path gives the old static-cap pair set
+    val corpus = CorpusGen.generate(spark, 15)
+    val bk = DedupPipeline.buckets(DedupPipeline.signatures(corpus, cfg), cfg)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id1", "id2", "srcmask", "src").as[(Long, Long, Int, String)].collect().toSet
+    val static = DedupPipeline.finishCandidates(
+      PairGen.expandPairs(PairGen.sortByKey(bk.toDF()), cfg.bucketCap, cfg.hammingMax))
+    val want = rows(static)
+    assert(want.nonEmpty)
+    assert(rows(DedupPipeline.candidates(bk, cfg)) == want)
   }
 
   test("HAR: inherited hot buckets take the broadcast min-join path with an identical pair set") {
@@ -133,17 +204,11 @@ class SkewSpec extends AnyFunSuite {
     /** Shuffle records written per completed stage while `f` runs. */
     def stageWrites[T](f: => T): (T, Seq[Long]) = {
       val recs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+      val out = listening(new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
           recs.add(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      try {
-        val out = f
-        org.apache.spark.ListenerBusDrain(sc)
-        (out, recs.toArray.toSeq.map(_.asInstanceOf[Long]).filter(_ > 0))
-      } finally sc.removeSparkListener(listener)
+      })(f)
+      (out, recs.toArray.toSeq.map(_.asInstanceOf[Long]).filter(_ > 0))
     }
     // suites share one session: drop what earlier suites left cached,
     // so anything cached from here on was cached by this test
