@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{ConfigParser, DedupConfig, ImageRow, Sessions, VerifiedPair}
+import graft.core.{ConfigParser, DedupConfig, ImageRow, Sessions}
 import graft.pipeline.{IncrementalDedup, RestoreOps, Retention, TableIO}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -140,33 +140,8 @@ object Cli {
         (summary +: stageLines(inc.record(runId))).mkString("\n")
 
       case Seq("restore", storeDir, runId, outDir) =>
-        val io = new TableIO(spark, storeDir)
-        val have = io.batches(IncrementalDedup.SigStore)
-        require(runId == "all" || have.contains(runId),
-          s"unknown batch '$runId' (store has: ${have.mkString(", ")})")
-        val imagesDf = io.readBatches(IncrementalDedup.ImagesStore)
-        require(imagesDf.columns.contains("bytes"),
-          "store was ingested signature-only (simulation); restore needs pixel data")
-        val images = imagesDf.as[ImageRow]
-        // content clusters from the published assignment (cluster_id is
-        // the component min = the representative's id), fidelity-repaired
-        // exactly like the one-shot round trip — the stored verified
-        // edges supply the measured-PSNR skip set
-        val cc0 = io.read(IncrementalDedup.ClustersTable)
-          .select(col("image_id"), col("cluster_id").as("content_id"))
-        val edges = RestoreOps.pixelEvidence(
-          io.readBatches(IncrementalDedup.EdgeStore).as[VerifiedPair], cfg)
-        val cc = RestoreOps.fidelityRepair(images, cc0, cfg, Some(edges))
-        val restoredAll = RestoreOps.restore(
-          RestoreOps.recipes(images, cc), RestoreOps.contentStore(images, cc))
-        val want =
-          if (runId == "all") images
-          else io.readBatch(IncrementalDedup.ImagesStore, runId).as[ImageRow]
-        restoredAll.join(want.select("image_id"), "image_id")
-          .write.mode("overwrite").parquet(outDir)
-        val rep = RestoreOps.roundtripReport(want, spark.read.parquet(outDir), cfg).head()
-        s"restore $runId -> $outDir: psnr_violations=${rep.getLong(0)} " +
-          s"caption_violations=${rep.getLong(1)} all_restored=${rep.getLong(2)}"
+        val (pv, cv, all) = RestoreOps.restoreStore(spark, storeDir, runId, outDir, cfg)
+        s"restore $runId -> $outDir: psnr_violations=$pv caption_violations=$cv all_restored=$all"
 
       case Seq("delete", storeDir, runIds) =>
         val ids = runIds.split(",").toSeq

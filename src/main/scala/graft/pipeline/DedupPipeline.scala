@@ -326,12 +326,15 @@ object DedupPipeline extends Serializable {
     new SkewAwareCandidates((Seq(coldPairs) ++ starred ++ backPairs).reduce(_ union _), hotList, cap)
   }
 
-  /** Candidate ids (pairs * 2) at or below which verify broadcasts the
-    * candidate nid list that prunes its signature and image inputs; a
-    * long id is 8 bytes, so 4M ids is a ~32 MB build side. Above it
-    * (pathological, corpus-sized candidate sets) the shuffled semi-join
-    * is the correct plan and AQE handles it. */
+  /** Candidate ids (pairs * 2) at or below which verify collects and
+    * broadcasts the candidate nid list that prunes its signature and
+    * image inputs; a long id is 8 bytes, so 4M ids is a ~32 MB array.
+    * Above it (pathological, corpus-sized candidate sets) the shuffled
+    * semi-join is the correct plan and AQE handles it. */
   private val BroadcastIdLimit = 4000000L
+
+  /** The name of verify's broadcast candidate-nid predicate in a plan. */
+  private[graft] val CandidateNidFilter = "candidate_nid"
 
   /** The nid of an image id (Sig.hash64), for the image rows verify
     * resolves by nid. */
@@ -344,7 +347,7 @@ object DedupPipeline extends Serializable {
     * (src/index/index.c:140-217). `cand` is a set of (id1, id2, src)
     * nid pairs; the candidate-pair bound that picks the broadcast prune
     * is the plan's row count when Catalyst knows it (a materialized
-    * cache), else one count. One lazy query: see [[verifyPairs]]. */
+    * cache), else one count. See [[verifyPairs]]. */
   def verify(
       cand: DataFrame,
       sigs: Dataset[SignatureRow],
@@ -354,13 +357,13 @@ object DedupPipeline extends Serializable {
       sigs, images.toDF(), cfg)
 
   /** [[verify]] with the caller's upper bound `candPairs` of the
-    * candidate pairs, as ONE lazy query — nothing persisted, no driver
-    * action:
+    * candidate pairs, as ONE lazy query after one driver action (the
+    * candidate-nid collect below) — nothing persisted:
     *  - each candidate pair explodes into its two sides, (id1, id2, src,
     *    side, nid);
     *  - one shuffle-hash join on `nid` resolves every side against the
     *    signature rows and the (image_id, bytes, fmt) rows of one images
-    *    scan, both pruned to the candidate nids by a semi-join with a
+    *    scan, both pruned to the candidate nids by a filter on one
     *    broadcast of those nids while `candPairs` keeps it small — so
     *    verify's exchanges carry O(touched) rows, never O(corpus or
     *    store), and the image store is never hash-exchanged whole;
@@ -383,8 +386,22 @@ object DedupPipeline extends Serializable {
     val spark = cand.sparkSession
     import spark.implicits._
     val candNids = cand.select(col("id1").as("nid")).union(cand.select(col("id2").as("nid")))
-    val touched = if (candPairs * 2 <= BroadcastIdLimit) broadcast(candNids) else candNids
-    def pruned(rows: DataFrame) = rows.join(touched, Seq("nid"), "left_semi")
+    // below the limit ONE job collects the candidate nids into a
+    // broadcast variable that both prunes read: a broadcast semi-join per
+    // input plans one broadcast exchange each (Spark reuses no exchange
+    // over a cached relation, and the candidates are cached in `run`),
+    // and one semi-join over the union of both inputs is pushed back into
+    // each branch by Catalyst
+    val pruned: DataFrame => DataFrame =
+      if (candPairs * 2 > BroadcastIdLimit) _.join(candNids, Seq("nid"), "left_semi")
+      else {
+        val ids = candNids.as[Long].collect()
+        java.util.Arrays.sort(ids)
+        val bc = spark.sparkContext.broadcast(ids)
+        val touched = udf((nid: Long) => java.util.Arrays.binarySearch(bc.value, nid) >= 0)
+          .withName(CandidateNidFilter)
+        _.filter(touched(col("nid")))
+      }
     val str = lit(null).cast("string")
     val sigRows = pruned(sigs.select(col("nid"), col("image_id"), col("sha"), col("pixsha"),
       col("phash"), col("caption"), lit(null).cast("binary").as("bytes"), str.as("fmt")))

@@ -195,7 +195,7 @@ final class IncrementalDedup(
 
     // 3. verify — old sides resolved from the STORES (no recompute).
     //    Verify prunes its signature and image inputs to the candidate
-    //    ids (a broadcast semi-join while the staged candidates' footer
+    //    ids (a broadcast nid filter while the staged candidates' footer
     //    count keeps the id list small) before its one exchange, so it
     //    costs O(batch + touched) in shuffle, never O(store) (destor's
     //    probe equally touches only hit keys,

@@ -2,8 +2,7 @@ package graft.pipeline
 
 import graft.core._
 import graft.signatures.Codec
-import graft.cluster.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Restore — the inverse query: reconstruct every input row from the
@@ -11,13 +10,19 @@ import org.apache.spark.sql.functions._
   * reference's own definition of correctness: a backup is correct iff
   * restore reproduces the original bytes (reference: do_restore's
   * recipe scan src/do_restore.c:68-111, chunk fetch :11-66, writer
-  * write_restore_data :113-189). Recast:
+  * write_restore_data :113-189). Recast as ONE chain, which both
+  * callers run — the in-memory [[roundTrip]] over the pixel edges of
+  * its own verify, and [[restoreStore]] (CLI `restore`) over
+  * `edges_store`:
   *
-  *   - content clusters: connected components over pairs whose verified
-  *     evidence is PIXEL-level (verdict "exact" or "pixel", each edge
-  *     individually PSNR >= psnrMin or byte-identical). Caption-only
-  *     dup pairs deliberately do NOT merge content — restoring a row's
-  *     pixels from a caption-dup would break the PSNR invariant.
+  *   - content clusters ([[contentClusters]]), the one definition:
+  *     connected components (DedupPipeline.assign, the projection
+  *     ingest and retention publish) over pairs whose verified evidence
+  *     is PIXEL-level (verdict "exact" or "pixel", or a measured
+  *     PSNR >= psnrMin), then [[fidelityRepair]] with those same edges
+  *     as its skip set. Caption-only dup pairs deliberately do NOT
+  *     merge content — restoring a row's pixels from a caption-dup
+  *     would break the PSNR invariant.
   *   - content store (container-store analog): the representative's
   *     bytes per content cluster — the only place pixel bytes are kept.
   *   - recipes (recipe-store analog): per image_id the content pointer
@@ -25,7 +30,8 @@ import org.apache.spark.sql.functions._
   *     recipes carrying path/meta while data lives in containers.
   *   - restore: recipes ⋈ content store (the shuffle replaces destor's
   *     restore container cache, T2/T3).
-  *   - round-trip verify: restored ⋈ originals, then per-row
+  *   - round-trip verify ([[roundtripViolations]], aggregated by
+  *     [[roundtripReport]]): restored ⋈ originals, then per-row
   *     decoded-pixel PSNR >= psnrMin + caption equality — BASELINE.md's
   *     per-row fidelity gate.
   *
@@ -35,31 +41,30 @@ import org.apache.spark.sql.functions._
   */
 object RestoreOps {
 
-  /** (image_id, content_id): pixel-evidence connected components;
-    * content_id = min image_id of the component (deterministic).
-    * An edge is pixel evidence iff byte/pixel-identical (verdict
-    * exact/pixel with psnr=inf) OR its measured PSNR passes the gate —
-    * the verify stage records psnr for every hamming-close pair even
-    * when a cheaper predicate (caption/substr) settled the verdict. */
+  /** (image_id, content_id) for every image: the connected components
+    * of `pixelEdges` (see [[pixelEvidence]]; content_id = the
+    * component's min image_id, deterministic), fidelity-repaired with
+    * the same edges as the measured skip set. `edgeCountHint` must be
+    * an upper bound of the edges (DedupPipeline.assign's contract). */
   def contentClusters(
       images: Dataset[ImageRow],
-      verified: Dataset[VerifiedPair],
-      cfg: DedupConfig = DedupConfig.default,
-      edgeCountHint: Option[Long] = None): DataFrame =
-    contentClustersFromEdges(images, pixelEvidence(verified, cfg), edgeCountHint)
+      pixelEdges: DataFrame,
+      cfg: DedupConfig,
+      edgeCountHint: Option[Long] = None): DataFrame = {
+    val cc = DedupPipeline.assign(images.toDF(), pixelEdges, edgeCountHint)
+      .select(col("image_id"), col("cluster_id").as("content_id"))
+    fidelityRepair(images, cc, cfg, Some(pixelEdges))
+  }
 
-  /** [[contentClusters]] over an already-derived (and ideally
-    * persisted) pixel-evidence edge set — callers that also feed the
-    * same edges to [[fidelityRepair]] derive them ONCE so the verify
-    * stage's pair-decode pass doesn't re-execute per consumer. */
-  def contentClustersFromEdges(
+  /** Every image row rebuilt from the content store of
+    * [[contentClusters]]: (image_id, bytes, fmt, caption). */
+  def restoreAll(
       images: Dataset[ImageRow],
       pixelEdges: DataFrame,
+      cfg: DedupConfig,
       edgeCountHint: Option[Long] = None): DataFrame = {
-    val spark = images.sparkSession
-    ConnectedComponents.run(spark, images.select(col("image_id").as("id")),
-      pixelEdges, edgeCountHint = edgeCountHint)
-      .select(col("id").as("image_id"), col("component").as("content_id"))
+    val cc = contentClusters(images, pixelEdges, cfg, edgeCountHint)
+    restore(recipes(images, cc), contentStore(images, cc))
   }
 
   /** Pixel-evidence edges from the verify stage: byte/pixel-identical
@@ -165,10 +170,14 @@ object RestoreOps {
       .select(col("image_id"), col("stored_bytes").as("bytes"),
         col("stored_fmt").as("fmt"), col("caption"))
 
-  /** Per-row round-trip violations: rows whose restored pixels decode
-    * below the PSNR gate or whose caption changed. Returns the detail
-    * rows (empty on a correct corpus); aggregate with
-    * [[roundtripReport]] for the one-row summary. */
+  /** Per-row round-trip violations, from ONE decode-and-compare pass
+    * over a FULL OUTER join of originals and restored rows:
+    * (image_id, psnr, psnr_ok, caption_ok, restored). A row restored
+    * below the PSNR gate or with a changed caption carries its psnr and
+    * both checks; a MISSING restored row (null right side) and a
+    * PHANTOM one (an id the originals never had — a stale or corrupt
+    * restore output; null left side) carry restored = false and null
+    * checks. Empty on a correct store. */
   def roundtripViolations(
       images: Dataset[ImageRow],
       restored: DataFrame,
@@ -178,91 +187,89 @@ object RestoreOps {
     images.select(col("image_id"), col("bytes").as("o_bytes"), col("fmt").as("o_fmt"),
         col("caption").as("o_caption"))
       .join(restored.select(col("image_id"), col("bytes").as("r_bytes"),
-        col("fmt").as("r_fmt"), col("caption").as("r_caption")), "image_id")
+        col("fmt").as("r_fmt"), col("caption").as("r_caption")), Seq("image_id"), "full")
       .select("image_id", "o_bytes", "o_fmt", "o_caption", "r_bytes", "r_fmt", "r_caption")
       .as[(String, Array[Byte], String, String, Array[Byte], String, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, ob, of, oc, rb, rf, rc) =>
-          val psnr = Codec.psnr(Codec.decode(ob, of), Codec.decode(rb, rf))
-          val psnrOk = psnr >= cfg.psnrMin
-          val capOk = oc == rc
-          if (psnrOk && capOk) Iterator.empty
-          else Iterator((id, psnr, psnrOk, capOk))
+          if (ob == null || rb == null) Iterator((id, None, None, None, false))
+          else {
+            val psnr = Codec.psnr(Codec.decode(ob, of), Codec.decode(rb, rf))
+            val psnrOk = psnr >= cfg.psnrMin
+            val capOk = oc == rc
+            if (psnrOk && capOk) Iterator.empty
+            else Iterator((id, Some(psnr), Some(psnrOk), Some(capOk), true))
+          }
         }
       }
-      .toDF("image_id", "psnr", "psnr_ok", "caption_ok")
+      .toDF("image_id", "psnr", "psnr_ok", "caption_ok", "restored")
   }
 
   /** One-row fidelity report: restore coverage + violation counts —
     * the analog of destor's restore.log line (src/do_restore.c:267-283).
     * On a correct store: all_restored=1, psnr_violations=0,
-    * caption_violations=0 at ANY corpus size.
-    *
-    * ONE job: a FULL OUTER join between originals and restored rows
-    * feeds a single decode+verify pass that also counts coverage both
-    * ways — a missing restored row is a null right side, a PHANTOM
-    * restored row (an id the original table never had — a stale or
-    * corrupt restore output) is a null left side and fails
-    * all_restored just like a missing one. Replaces the round-2 shape
-    * of two standalone count actions + a separate violations
-    * aggregation (three jobs, two of them re-reading `restored`). */
+    * caption_violations=0 at ANY corpus size. The aggregate of
+    * [[roundtripViolations]]: one query, so the one comparison pass
+    * also counts coverage both ways (a missing or phantom restored row
+    * fails all_restored). */
   def roundtripReport(
       images: Dataset[ImageRow],
       restored: DataFrame,
-      cfg: DedupConfig): DataFrame = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select(col("image_id"), col("bytes").as("o_bytes"), col("fmt").as("o_fmt"),
-        col("caption").as("o_caption"))
-      .join(restored.select(col("image_id"), col("bytes").as("r_bytes"),
-        col("fmt").as("r_fmt"), col("caption").as("r_caption")), Seq("image_id"), "full")
-      .select("o_bytes", "o_fmt", "o_caption", "r_bytes", "r_fmt", "r_caption")
-      .as[(Array[Byte], String, String, Array[Byte], String, String)]
-      .mapPartitions { it =>
-        var pv = 0L; var cv = 0L; var missing = 0L
-        it.foreach { case (ob, of, oc, rb, rf, rc) =>
-          if (rb == null || ob == null) missing += 1
-          else {
-            if (Codec.psnr(Codec.decode(ob, of), Codec.decode(rb, rf)) < cfg.psnrMin) pv += 1
-            if (oc != rc) cv += 1
-          }
-        }
-        Iterator((pv, cv, missing))
-      }
-      .toDF("pv", "cv", "missing")
-      .agg(sum("pv").as("pv"), sum("cv").as("cv"), sum("missing").as("m"))
-      .select(
-        coalesce(col("pv"), lit(0L)).as("psnr_violations"),
-        coalesce(col("cv"), lit(0L)).as("caption_violations"),
-        when(coalesce(col("m"), lit(0L)) === 0L, 1L).otherwise(0L).as("all_restored"))
-  }
+      cfg: DedupConfig): DataFrame =
+    roundtripViolations(images, restored, cfg)
+      .agg(count(when(!col("psnr_ok"), 1)).as("psnr_violations"),
+        count(when(!col("caption_ok"), 1)).as("caption_violations"),
+        when(count(when(!col("restored"), 1)) === 0L, 1L).otherwise(0L).as("all_restored"))
 
-  /** Whole restore + verify round trip on top of a finished pipeline
-    * run — builds the content store from verified pairs, restores every
-    * row, and returns the one-row fidelity report. */
+  /** Whole restore + verify round trip on top of an in-memory pipeline
+    * run: the [[restoreAll]] chain over the pixel edges of this run's
+    * verify, and the one-row fidelity report. */
   def roundTrip(images: Dataset[ImageRow], cfg: DedupConfig): DataFrame = {
     // restore IS the data-movement stage a metadata-only simulation
     // skips (destor's simulation levels equally cannot restore from a
     // simulated store, src/destor.h:55-59)
     require(!cfg.signatureOnly,
       "restore/round-trip requires pixel data; signatureOnly simulation skips it")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val (ver, pairCount, cleanupVerify) = DedupPipeline.verifiedPairs(images, cfg)
     // the edge set is consumed by BOTH the clustering and the repair's
     // skip anti-join: persist it so the verify stage's pair-decode map
-    // executes exactly once (it is narrow — two id columns)
+    // executes exactly once (it is narrow — two id columns). pairCount
+    // (resolved candidate pairs) bounds these edges, a subset of the
+    // verified pairs, from above: the edgeCountHint contract
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val edges = pixelEvidence(ver, cfg).persist(lvl)
-    // pairCount (resolved candidate pairs) bounds the pixel-evidence
-    // edges, a subset of the verified pairs, from above: the
-    // edgeCountHint contract
-    val cc0 = contentClustersFromEdges(images, edges, Some(pairCount))
-    val cc = fidelityRepair(images, cc0, cfg, Some(edges)).persist(lvl)
-    cc.count()
+    val report = roundtripReport(images,
+      restoreAll(images, edges, cfg, Some(pairCount)), cfg).localCheckpoint()
     cleanupVerify()
     edges.unpersist(blocking = false)
-    val restored = restore(recipes(images, cc), contentStore(images, cc))
-    val report = roundtripReport(images, restored, cfg).localCheckpoint()
-    cc.unpersist(blocking = false)
     report
+  }
+
+  /** CLI `restore`: rebuild batch `runId` (or every batch, "all") of the
+    * incremental store under `storeDir` into parquet at `outDir` by the
+    * [[restoreAll]] chain over `edges_store`'s pixel edges, then verify
+    * what was written. Returns the report's (psnr_violations,
+    * caption_violations, all_restored). */
+  def restoreStore(spark: SparkSession, storeDir: String, runId: String, outDir: String,
+      cfg: DedupConfig): (Long, Long, Long) = {
+    import spark.implicits._
+    import IncrementalDedup.{EdgeStore, ImagesStore, SigStore, storeRowCount}
+    val io = new TableIO(spark, storeDir)
+    val have = io.batches(SigStore)
+    require(runId == "all" || have.contains(runId),
+      s"unknown batch '$runId' (store has: ${have.mkString(", ")})")
+    val imagesDf = io.readBatches(ImagesStore)
+    require(imagesDf.columns.contains("bytes"),
+      "store was ingested signature-only (simulation); restore needs pixel data")
+    val images = imagesDf.as[ImageRow]
+    // the stored edges' footer row count bounds the pixel edges from
+    // above: the edgeCountHint contract, with no counting job
+    val restored = restoreAll(images,
+      pixelEvidence(io.readBatches(EdgeStore).as[VerifiedPair], cfg), cfg,
+      Some(storeRowCount(io, EdgeStore)))
+    val want = if (runId == "all") images else io.readBatch(ImagesStore, runId).as[ImageRow]
+    restored.join(want.select("image_id"), "image_id").write.mode("overwrite").parquet(outDir)
+    val rep = roundtripReport(want, spark.read.parquet(outDir), cfg).head()
+    (rep.getLong(0), rep.getLong(1), rep.getLong(2))
   }
 }

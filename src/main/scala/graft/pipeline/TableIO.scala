@@ -150,6 +150,21 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     finally out.close()
   }
 
+  /** Steps 1-3 of the publish protocol, shared by every table and batch
+    * write: parquet to `baseDir/<tmpName>`, delete `dest`, rename the
+    * tmp dir over it (its parent created if missing). A failed rename
+    * throws `<failure>: <tmp> -> <dest>`. */
+  private def writeOver(df: DataFrame, tmpName: String, dest: Path, failure: String): Unit = {
+    val f = fs
+    val tmp = new Path(baseDir, tmpName)
+    f.delete(tmp, true)
+    df.write.mode("overwrite").parquet(tmp.toString)
+    f.delete(dest, true)
+    f.mkdirs(dest.getParent)
+    if (!f.rename(tmp, dest))
+      throw new java.io.IOException(s"$failure: $tmp -> $dest")
+  }
+
   /** Per-data-file row counts of a published table, from parquet footer
     * metadata only (no Spark job, no data pages read). */
   def fileCounts(table: String): Seq[(String, Long)] =
@@ -158,14 +173,7 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   /** Publish and return the per-file rows written (parquet footers — no
     * re-scan). */
   def publish(df: DataFrame, table: String, configHash: String, runId: String): Seq[(String, Long)] = {
-    val f = fs
-    val tmp = new Path(baseDir, s"$table.tmp-$runId")
-    f.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val dest = tablePath(table)
-    f.delete(dest, true)
-    if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"atomic publish failed: $tmp -> $dest")
+    writeOver(df, s"$table.tmp-$runId", tablePath(table), "atomic publish failed")
     val files = fileCounts(table)
     writeText(manifestPath(table),
       s"""{"table":"$table","rows":${files.map(_._2).sum},"config_hash":"$configHash","run_id":"$runId","ts":${System.currentTimeMillis()}}""")
@@ -228,15 +236,7 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
     * manifest (tmp-write, then rename over any earlier staged copy).
     * Returns the per-file rows written (parquet footers — no re-scan). */
   def stageBatch(df: DataFrame, table: String, runId: String): Seq[(String, Long)] = {
-    val f = fs
-    val tmp = new Path(baseDir, s"$table.tmp-$runId")
-    f.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val dest = batchPath(table, runId)
-    f.delete(dest, true)
-    f.mkdirs(tablePath(table))
-    if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"batch stage failed: $tmp -> $dest")
+    writeOver(df, s"$table.tmp-$runId", batchPath(table, runId), "batch stage failed")
     batchFileCounts(table, runId)
   }
 
@@ -250,15 +250,8 @@ final class TableIO(spark: SparkSession, baseDir: String) extends TableBackend {
   /** Replace one committed batch's data in place (index-entry reclaim:
     * retention rewrites surviving edge batches minus dropped ids). */
   def rewriteBatch(df: DataFrame, table: String, runId: String): Unit = {
-    val f = fs
     require(batches(table).contains(runId), s"batch $runId not in $table")
-    val tmp = new Path(baseDir, s"$table.tmp-rw-$runId")
-    f.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val dest = batchPath(table, runId)
-    f.delete(dest, true)
-    if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"batch rewrite failed: $tmp -> $dest")
+    writeOver(df, s"$table.tmp-rw-$runId", batchPath(table, runId), "batch rewrite failed")
   }
 
   /** Drop one batch: remove it from the manifest FIRST (it becomes

@@ -97,7 +97,7 @@ object StreamingOps {
     * Emission is at-least-once per pair (two docs sharing several bands
     * emit once per shared bucket) — identical to the batch candidate
     * stream before its `.distinct()`; downstream exact verify dedups,
-    * or compare as a SET against `TextOps.bucketPairs` (the spec does).
+    * or compare as a SET against `PairGen.bucketPairsLong` (the spec does).
     * With the default cap this is the streaming twin of the capped
     * batch probe in IncrementalDedup step 3. */
   def streamingCandidatePairs(

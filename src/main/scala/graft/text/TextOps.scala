@@ -3,6 +3,7 @@ package graft.text
 import graft.core.DedupConfig
 import graft.signatures.Sig
 import graft.cluster.ConnectedComponents
+import graft.ops.PairGen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -230,13 +231,6 @@ object TextOps extends Serializable {
     spread(d).select(col("doc_id"), posexplode(mh(col("text"))).as(Seq("band", "bucket")))
   }
 
-  /** Candidate pairs from any (band,bucket,doc_id) posting table —
-    * delegated to the shared streamed run-length expander (one Tungsten
-    * sort shuffle, bounded buffer, CAP star-pairing above `bucketCap`;
-    * see PairGen for why the collect_list formulation was abandoned). */
-  def bucketPairs(postings: DataFrame, bucketCap: Int): DataFrame =
-    graft.ops.PairGen.bucketPairsLong(postings, bucketCap)
-
   /** Join each candidate pair with both documents' texts and verify in
     * a typed mapPartitions with per-partition memoized feature
     * extraction: pairs arrive grouped by join key, so each text's
@@ -266,7 +260,7 @@ object TextOps extends Serializable {
   def minhashDedup(spark: SparkSession, dir: String, cfg: DedupConfig = DedupConfig.default,
       jaccardMin: Double = 0.7): DataFrame = {
     val d = docs(spark, dir)
-    val cand = bucketPairs(minhashBands(d, cfg), cfg.bucketCap)
+    val cand = PairGen.bucketPairsLong(minhashBands(d, cfg), cfg.bucketCap)
     val k = cfg.shingleSize
     val memoScore = memoized((t: String) => Sig.shingleHashes(t, k))(Sig.jaccard)
     val verified = verifyPairsWithTexts(d, cand, memoScore)
@@ -319,7 +313,7 @@ object TextOps extends Serializable {
     val sigs = spread(d).select(col("doc_id"), sim(col("text")).as("simhash"))
     val bandU = udf((s: Long) => Sig.hammingComboKeys(s, blocks, 3))
     val postings = sigs.select(col("doc_id"), posexplode(bandU(col("simhash"))).as(Seq("band", "bucket")))
-    val cand = bucketPairs(postings, 64)
+    val cand = PairGen.bucketPairsLong(postings, 64)
     // simhash is one Long per doc — the compact join needs no arrays
     val s1 = sigs.select(col("doc_id").as("id1"), col("simhash").as("sim1"))
     val s2 = sigs.select(col("doc_id").as("id2"), col("simhash").as("sim2"))
@@ -434,7 +428,7 @@ object TextOps extends Serializable {
     val mhBands = udf((text: String) =>
       Sig.bandKeys(Sig.minhash(sortedGramSet(text, 3), cfg), cfg))
     val postings = spread(d).select(col("doc_id"), posexplode(mhBands(col("text"))).as(Seq("band", "bucket")))
-    val cand = bucketPairs(postings, 64)
+    val cand = PairGen.bucketPairsLong(postings, 64)
     val memoScore = memoized((t: String) => sortedGramSet(t, 3))(Sig.jaccard)
     verifyPairsWithTexts(d, cand, memoScore)
       .withColumn("jaccard3", round(col("score"), 4))
@@ -701,7 +695,7 @@ object TextOps extends Serializable {
     // (~2^-128 per bucket triple) could still star. Long math then
     // clamp: a user cap of Int.MaxValue must stay exact all-pairs,
     // not overflow negative and star everything
-    val cand = graft.ops.PairGen.bucketPairsLong(postings,
+    val cand = PairGen.bucketPairsLong(postings,
       math.min(2L * cfg.substrDfCap, Int.MaxValue.toLong).toInt)
     val t1 = d.select(col("doc_id").as("id1"), col("t").as("tx1"), col("source").as("src1"))
     val t2 = d.select(col("doc_id").as("id2"), col("t").as("tx2"), col("source").as("src2"))

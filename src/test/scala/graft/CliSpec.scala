@@ -87,6 +87,37 @@ class CliSpec extends AnyFunSuite {
     corpus.unpersist()
   }
 
+  test("restore builds content clusters from pixel evidence, not from caption-only pairs") {
+    import spark.implicits._
+    import graft.signatures.Codec
+    // A < B < C share one caption; B and C share a phash and decode
+    // 42.1 dB apart (uniform per-channel offset 2), A's pixels are far
+    // from both. The caption pairs put all three in one published
+    // cluster under A; the one pixel-evidence edge is B-C, so C's
+    // content cluster is B's and C restores from B's bytes.
+    val (w, h) = (8, 8)
+    def img(id: String, base: Int, phash: Long) = graft.core.ImageRow(id,
+      Codec.encodePpm(w, h, Array.fill(w * h * 3)(base.toByte)), w, h, "ppm",
+      "a red bicycle leaning against an old brick wall at dusk", phash)
+    val (a, b, c) = (img("img-a", 20, -1L), img("img-b", 100, 0L), img("img-c", 102, 0L))
+    assert(Codec.psnr(Codec.decode(b.bytes, "ppm"), Codec.decode(c.bytes, "ppm")) >= 40.0)
+    val store = Files.createTempDirectory("graft-cli-abc").toString
+    val data = Files.createTempDirectory("graft-cli-abcdata").toString
+    Seq(a, b).toDS().write.parquet(s"$data/b1.parquet")
+    Seq(c).toDS().write.parquet(s"$data/b2.parquet")
+    Cli.run(Seq("backup", store, s"$data/b1.parquet", "--id", "b1"), spark)
+    val s2 = Cli.run(Seq("backup", store, s"$data/b2.parquet", "--id", "b2"), spark)
+    assert(s2.contains("corpus 3 images in 1 clusters"), s2)
+    val out = Files.createTempDirectory("graft-cli-abcout").toString
+    val r = Cli.run(Seq("restore", store, "all", out), spark)
+    assert(r.endsWith("psnr_violations=0 caption_violations=0 all_restored=1"), r)
+    val got = spark.read.parquet(out).select("image_id", "bytes").as[(String, Array[Byte])]
+      .collect().toMap
+    assert(got.keySet == Set("img-a", "img-b", "img-c"))
+    assert(got("img-a").sameElements(a.bytes) && got("img-b").sameElements(b.bytes))
+    assert(got("img-c").sameElements(b.bytes), "C must restore from B's stored bytes")
+  }
+
   test("-p beats --config across a two-backup loop; restore all refuses the signature-only store") {
     // the last untested config-surface corner (judge r3 #7): BOTH
     // sources together on EVERY job of a multi-backup loop, with the

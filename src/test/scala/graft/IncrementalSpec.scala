@@ -138,15 +138,16 @@ class IncrementalSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.FilterExec
     val corpus = CorpusGen.generate(spark, 6).cache()
     val sigs = DedupPipeline.signatures(corpus, cfg).cache()
     val nStore = corpus.count()
     val imageOf = sigs.collect().map(s => s.nid -> s.image_id).toMap
     /** The (signature, image) ids of the rows that reach verify's
       * exchanges from the store scans; fails unless every store row
-      * reaches them through a BroadcastHashJoin semi-join on the
-      * candidate nids. */
+      * reaches them through a filter by verify's broadcast candidate-nid
+      * predicate. */
     def exchangeInputs(cand: org.apache.spark.sql.DataFrame, nCand: Long): (Set[String], Set[String]) = {
       val ver = DedupPipeline.verifyPairs(cand, nCand, sigs, corpus.toDF(), cfg)
       ver.collect() // settles the adaptive plan
@@ -172,8 +173,10 @@ class IncrementalSpec extends AnyFunSuite {
       assert(fed.nonEmpty, "no exchange reads the store")
       for (e <- fed; scan <- storeScans(e.child)) {
         val gates = ownStage(e.child).collect {
-          case j: BroadcastHashJoinExec if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi &&
-            j.right.output.map(_.name) == Seq("nid") && ownStage(j.left).exists(_ eq scan) => j
+          case f: FilterExec if f.condition.exists {
+              case u: ScalaUDF => u.udfName.contains(DedupPipeline.CandidateNidFilter)
+              case _ => false
+            } && ownStage(f.child).exists(_ eq scan) => f
         }
         assert(gates.nonEmpty, s"store rows reach an exchange without the broadcast prune:\n$e")
       }

@@ -75,7 +75,7 @@ class RestoreSpec extends AnyFunSuite {
     val sigs = DedupPipeline.signatures(images, cfg)
     val cand = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg)
     val ver = DedupPipeline.verify(cand, sigs, images, cfg)
-    val cc = RestoreOps.contentClusters(images, ver).cache()
+    val cc = RestoreOps.contentClusters(images, RestoreOps.pixelEvidence(ver, cfg), cfg).cache()
     val store = RestoreOps.contentStore(images, cc)
     val n = images.count()
     val stored = store.count()
@@ -177,7 +177,7 @@ class RestoreSpec extends AnyFunSuite {
     val sigs = DedupPipeline.signatures(images, cfg)
     val cand = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg)
     val ver = DedupPipeline.verify(cand, sigs, images, cfg)
-    val cc = RestoreOps.contentClusters(images, ver)
+    val cc = RestoreOps.contentClusters(images, RestoreOps.pixelEvidence(ver, cfg), cfg)
     // corrupt: point every CAPTION-dup pair's rows at one content too
     // (i.e. cluster by ALL verified pairs, not just pixel evidence) —
     // caption dups have different pixels, so PSNR must flag them

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.DedupConfig
+import graft.ops.PairGen
 import graft.streaming.StreamingOps
 import graft.text.TextOps
 import org.apache.spark.sql.SparkSession
@@ -31,7 +32,7 @@ class StreamingPairsSpec extends AnyFunSuite {
     import spark.implicits._
     val cfg = DedupConfig.default.copy(indexValueLength = 1 << 28)
     val staticDf = corpus.toDF("doc_id", "text")
-    val want = TextOps.bucketPairs(TextOps.minhashBands(staticDf, cfg), Int.MaxValue)
+    val want = PairGen.bucketPairsLong(TextOps.minhashBands(staticDf, cfg), Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext

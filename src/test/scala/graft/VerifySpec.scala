@@ -81,7 +81,7 @@ class VerifySpec extends AnyFunSuite {
     images.unpersist()
   }
 
-  test("verify over cached candidates and signatures runs at most 8 jobs") {
+  test("verify over cached candidates and signatures runs at most 7 jobs") {
     val images = CorpusGen.generate(spark, 40).cache()
     val sigs = DedupPipeline.signatures(images, cfg).cache()
     val cand = DedupPipeline.candidates(DedupPipeline.buckets(sigs, cfg), cfg).cache()
@@ -98,7 +98,7 @@ class VerifySpec extends AnyFunSuite {
       try DedupPipeline.verify(cand, sigs, images, cfg).count()
       finally { org.apache.spark.ListenerBusDrain(sc); sc.removeSparkListener(listener) }
     assert(n > 0)
-    assert(jobs.get() <= 8, s"verify ran ${jobs.get()} jobs")
+    assert(jobs.get() <= 7, s"verify ran ${jobs.get()} jobs")
     cand.unpersist(); sigs.unpersist(); images.unpersist()
   }
 }
